@@ -194,7 +194,7 @@ SELECT conv_id, COUNT(*) AS n_edits,
        COUNT(DISTINCT turn_idx) AS turns_edited,
        CAST(SUM(lev) AS BIGINT) AS total_lev,
        CAST(MAX(lev) AS BIGINT) AS max_lev,
-       SUM(len_delta) AS total_len_delta
+       CAST(SUM(len_delta) AS BIGINT) AS total_len_delta
 FROM ed GROUP BY conv_id
 """
 

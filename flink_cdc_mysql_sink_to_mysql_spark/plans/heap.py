@@ -3,11 +3,13 @@
 In-code ``spark.driver.memory`` cannot resize a JVM that is already
 up, so a job launched without ``--driver-memory`` on a large input
 OOMs minutes into its funnel with an opaque executor stack. Every
-memory-sensitive entrypoint (jobs/curation_job.py, plus the
-``--check`` recompute paths of jobs/dedup_index_job.py and
-jobs/ivm_view_job.py) instead compares the LIVE JVM max heap (what
--Xmx actually granted) against the input size up front and refuses
-with the exact remedy before any work starts.
+memory-sensitive entrypoint (jobs/curation_job.py,
+jobs/dynamic_cohort_job.py, the ``--bootstrap`` one-commit snapshot
+MERGE of jobs/changelog_apply_job.py, and the ``--check`` recompute
+paths of jobs/dedup_index_job.py and jobs/ivm_view_job.py) instead
+compares the LIVE JVM max heap (what -Xmx actually granted) against
+the input size up front and refuses with the exact remedy before any
+work starts.
 
 The reference has no analog (its jobs are parallelism-1 JVMs with
 fixed Flink task-manager memory); this is operational hardening the

@@ -36,15 +36,13 @@ window table is bucketed on conv_id exactly like the state table.
 
 from __future__ import annotations
 
-import json
-import os
 import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .sink import LINEAGE, MergeParquetSink
+from .sink import MergeParquetSink
 
 
 @dataclass
@@ -77,24 +75,18 @@ class GroupedReplaceParquetSink(MergeParquetSink):
     ) -> dict:
         spark = rows.sparkSession
         t0 = time.time()
-        manifest = self._load_manifest()
-        if epoch_id in manifest["epochs"]:
+        manifest = self._open(spark, epoch_id)
+        if manifest is None:
             return {"epoch": epoch_id, "skipped": True}
-        stored = manifest.get("n_buckets")
-        if stored is not None and stored != self.n_buckets:
-            self.n_buckets = stored
-        manifest["n_buckets"] = self.n_buckets
 
-        bucket_of = F.pmod(F.xxhash64("conv_id"), F.lit(self.n_buckets)).cast(
-            "int"
-        )
         keys = keys.select("conv_id").distinct().cache()
         # touched buckets come from the KEYS (a key whose recompute is
-        # empty still purges its old rows)
-        touched = [
-            r["b"] for r in keys.select(bucket_of.alias("b")).distinct().collect()
-        ]
-        delta = rows.withColumn("bucket", bucket_of)
+        # empty still purges its old rows, and a bucket left empty drops
+        # out of the manifest)
+        touched = sorted(
+            r["b"] for r in keys.select(self._bucket().alias("b")).distinct().collect()
+        )
+        delta = rows.withColumn("bucket", self._bucket())
 
         current = self._read_buckets(spark, touched)
         if current is None:
@@ -103,37 +95,10 @@ class GroupedReplaceParquetSink(MergeParquetSink):
             out = current.join(
                 F.broadcast(keys), "conv_id", "left_anti"
             ).unionByName(delta)
-
-        new_version = manifest["version"] + 1
-        verdir = f"v{new_version}-{epoch_id}"
-        out.withColumn("pb", F.col("bucket")).repartition("pb").write.partitionBy(
-            "pb"
-        ).mode("overwrite").parquet(os.path.join(self.root, verdir))
-        # a bucket can end up empty (all its keys' windows deleted):
-        # it must leave the manifest, not point at a missing pb= dir
-        written = {
-            name.split("=", 1)[1]
-            for name in os.listdir(os.path.join(self.root, verdir))
-            if name.startswith("pb=")
-        }
-        for b in touched:
-            if str(b) in written:
-                manifest["buckets"][str(b)] = f"{verdir}/pb={b}"
-            else:
-                manifest["buckets"].pop(str(b), None)
+        record = {"epoch": int(epoch_id), "buckets": touched}
+        record = self._commit(manifest, out, touched, record, t0, epoch_id)
         keys.unpersist()
-
-        manifest["version"] = new_version
-        manifest["epochs"] = sorted(set(manifest["epochs"]) | {epoch_id})[-1000:]
-        self._commit_manifest(manifest)
-        lineage = {
-            "epoch": int(epoch_id),
-            "buckets": [int(b) for b in sorted(touched)],
-            "wall_s": round(time.time() - t0, 3),
-        }
-        with open(os.path.join(self.root, LINEAGE), "a") as f:
-            f.write(json.dumps(lineage) + "\n")
-        return lineage
+        return record
 
     def read_view(self, spark: SparkSession) -> DataFrame:
         """Current window rows (no tombstones exist in this table)."""
@@ -165,14 +130,6 @@ def _window_rows(live: DataFrame, window: str, slide: str | None = None) -> Data
     )
 
 
-def _tumbling_rows(live: DataFrame, window: str) -> DataFrame:
-    return _window_rows(live, window)
-
-
-def _sliding_rows(live: DataFrame, window: str, slide: str) -> DataFrame:
-    return _window_rows(live, window, slide)
-
-
 def sliding_state_batch(
     envelopes: DataFrame,
     window: str = "10 minutes",
@@ -181,7 +138,7 @@ def sliding_state_batch(
     """Batch twin / oracle for :func:`sliding_state_stream`."""
     from ..operators.cdc import apply_changelog
 
-    return _sliding_rows(apply_changelog(envelopes), window, slide)
+    return _window_rows(apply_changelog(envelopes), window, slide)
 
 
 def _session_rows(live: DataFrame, gap: str) -> DataFrame:
@@ -249,13 +206,7 @@ def maintained_view_stream(
             ).cache()
             buckets = [
                 r["b"]
-                for r in keys.select(
-                    F.pmod(
-                        F.xxhash64("conv_id"), F.lit(state_sink.n_buckets)
-                    )
-                    .cast("int")
-                    .alias("b")
-                )
+                for r in keys.select(state_sink._bucket().alias("b"))
                 .distinct()
                 .collect()
             ]
@@ -297,7 +248,7 @@ def windowed_state_stream(
         state_sink,
         window_sink,
         checkpoint_dir,
-        recompute=lambda live: _tumbling_rows(live, window),
+        recompute=lambda live: _window_rows(live, window),
         max_files_per_trigger=max_files_per_trigger,
     )
 
@@ -323,7 +274,7 @@ def sliding_state_stream(
         state_sink,
         window_sink,
         checkpoint_dir,
-        recompute=lambda live: _sliding_rows(live, window, slide),
+        recompute=lambda live: _window_rows(live, window, slide),
         max_files_per_trigger=max_files_per_trigger,
     )
 

@@ -12,7 +12,10 @@ parquet (the sandbox has no Iceberg jars — SURVEY.md §7 "hard parts").
 Layout:
 
     root/
-      _manifest.json          # {"buckets": {"17": "v3-5/pb=17"}, ...}
+      _manifest.json          # {"version": 3, "epochs": [..., 5],
+                              #  "buckets": {"17": "v3-5/pb=17"},
+                              #  "log": [..., {"epoch": 5, "version": 3,
+                              #           "buckets": [17], ...}], ...}
       v3-5/pb=17/part-*.parquet   # one versioned dir per commit
 
 - rows are hash-bucketed on conv_id (pmod(xxhash64(conv_id), n_buckets));
@@ -21,7 +24,9 @@ Layout:
   id is STORED as a data column (and mirrored into the `pb=` partition
   dir), so reads never recompute it.
 - the manifest swap is a single atomic os.replace: readers see either
-  the old or the new snapshot, never a torn one.
+  the old or the new snapshot, never a torn one. Each commit's record
+  (epoch, buckets, rows, wall time) is in the manifest it swaps in, so
+  a snapshot and its record land in one atomic write.
 - MERGE itself is last-writer-wins on ord = seq*4 + op_rank: replaying
   any suffix of the changelog (foreachBatch re-runs after failure) is a
   provable no-op, which is what turns at-least-once delivery into an
@@ -73,11 +78,12 @@ from pyspark.sql import functions as F
 from ..sources.transcripts import _TURN_T
 
 MANIFEST = "_manifest.json"
-LINEAGE = "_lineage.jsonl"
+#: stream epoch ids (≥ 0) the manifest remembers for the epoch skip
+EPOCH_WINDOW = 1000
 
 # every commit writes one version directory: v{version}-{tag} where tag
 # is the merge epoch id or "compact"; vacuum only ever touches names
-# matching this (the manifest/lineage files never do)
+# matching this (the manifest and its temp files never do)
 _VERDIR_RE = re.compile(r"^v\d+-")
 
 
@@ -349,10 +355,7 @@ class MergeParquetSink:
         """Refuse to resume a legacy (pre-n_buckets) manifest unless the
         constructor base is provably consistent with the stored data."""
         table = self._read_paths(spark, list(manifest["buckets"].values()))
-        bad = table.where(
-            F.col("bucket")
-            != F.pmod(F.xxhash64("conv_id"), F.lit(self.n_buckets)).cast("int")
-        ).count()
+        bad = table.where(F.col("bucket") != self._bucket()).count()
         if bad:
             raise ValueError(
                 f"manifest at {self.root} predates n_buckets tracking and "
@@ -362,27 +365,19 @@ class MergeParquetSink:
                 "n_buckets the table was created with."
             )
 
-    # -- merge -------------------------------------------------------------
-    def merge_changelog(self, batch: DataFrame, epoch_id: int) -> dict:
-        """MERGE a micro-batch of envelope rows into the table.
+    # -- copy-on-write commit ----------------------------------------------
+    def _bucket(self):
+        """The bucket of a row: pmod(xxhash64(conv_id), n_buckets)."""
+        return F.pmod(F.xxhash64("conv_id"), F.lit(self.n_buckets)).cast("int")
 
-        WHEN MATCHED AND newer → UPDATE (tombstone for op='d');
-        WHEN NOT MATCHED → INSERT — expressed as a keyed LWW
-        hash-aggregation over (current ∪ delta), restricted to the
-        buckets the delta touches.
-
-        Idempotent: re-running any epoch (or any overlap of epochs)
-        converges to the same snapshot because winners are chosen by
-        ord = (seq, op_rank), never by arrival time. Returns per-epoch
-        lineage {epoch, buckets, delta_rows, merged_rows, wall_s}.
-        """
-        spark = batch.sparkSession
-        t0 = time.time()
+    def _open(self, spark: SparkSession, epoch_id: int | None) -> dict | None:
+        """First half of every copy-on-write commit (MERGE, group
+        replace, compact): load the manifest and pin the table-owned
+        n_buckets and evolved schema. Returns None when ``epoch_id`` is
+        already committed (exact epoch replay — foreachBatch restart)."""
         manifest = self._load_manifest()
         if epoch_id in manifest["epochs"]:
-            # exact epoch replay (foreachBatch restart) — already committed
-            return {"epoch": epoch_id, "skipped": True}
-
+            return None
         # The TABLE owns n_buckets: the constructor value applies only at
         # creation; on resume the stored value wins. Otherwise a restart
         # with a different n_buckets hashes deltas mod the wrong base and
@@ -401,54 +396,124 @@ class MergeParquetSink:
             # the manifest records n_buckets afterwards.
             self._verify_base_against_data(spark, manifest)
             stored = self.n_buckets
-        if stored is not None and stored != self.n_buckets:
+        if stored is not None:
             self.n_buckets = stored
         manifest["n_buckets"] = self.n_buckets
         if self.extra_fields:
             # commit the (possibly widened) table-owned schema
             manifest["extra_fields"] = list(self.extra_fields.items())
+        return manifest
 
-        delta = envelope_rows(batch, self.extra_fields).withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("conv_id"), F.lit(self.n_buckets)).cast("int"),
-        )
-        delta = delta.cache()
-        delta_rows = delta.count()
-        touched = [r["bucket"] for r in delta.select("bucket").distinct().collect()]
+    def _commit(
+        self,
+        manifest: dict,
+        rows: DataFrame,
+        touched: list[int],
+        record: dict,
+        t0: float,
+        epoch_id: int | None = None,
+    ) -> dict:
+        """Second half of every copy-on-write commit: write ``rows`` into
+        one new version dir, point each touched bucket at its ``pb=`` dir
+        there (or drop it when none was written: all its rows deleted or
+        pruned), bump the version, add ``epoch_id`` (None for compact),
+        log ``record`` and swap. The record is inside the manifest it
+        swaps in: a crash before the swap leaves neither, after it both.
+
+        The epoch window keeps every reserved id (< 0: bootstrap, expiry,
+        DLQ replay) and the newest ``EPOCH_WINDOW`` stream ids. Replaying
+        a stream epoch older than the window re-applies it, which is
+        still safe for both tables: the LWW ord makes re-merging rows the
+        state sink already holds a no-op, and the view is recomputed from
+        committed state, so a re-replace rewrites the keys' current rows.
+        """
+        version = manifest["version"] + 1
+        verdir = f"v{version}-{'compact' if epoch_id is None else epoch_id}"
+        path = os.path.join(self.root, verdir)
+        # ONE distributed write for all touched buckets (commit cost ∝
+        # touched × table/n_buckets, see module docstring); repartition
+        # on the stored bucket column → one file per pb= dir
+        rows.withColumn("pb", F.col("bucket")).repartition("pb").write.partitionBy(
+            "pb"
+        ).mode("overwrite").parquet(path)
+        written = {n.split("=", 1)[1] for n in os.listdir(path) if n.startswith("pb=")}
+        for b in map(str, touched):
+            if b in written:
+                manifest["buckets"][b] = f"{verdir}/pb={b}"
+            else:
+                manifest["buckets"].pop(b, None)
+        manifest["version"] = version
+        if epoch_id is not None:
+            epochs = sorted(set(manifest["epochs"]) | {epoch_id})
+            stream = [e for e in epochs if e >= 0]
+            manifest["epochs"] = [e for e in epochs if e < 0] + stream[-EPOCH_WINDOW:]
+        record = {
+            **record,
+            "version": version,
+            "buckets_rewritten": len(written),
+            "wall_s": round(time.time() - t0, 3),
+        }
+        self._log(manifest, record)
+        self._commit_manifest(manifest)
+        return record
+
+    @staticmethod
+    def _log(manifest: dict, record: dict) -> None:
+        """Append ``record`` to the manifest's ``log``. A record stays
+        while its epoch is in the epoch window or it is among the last
+        ``EPOCH_WINDOW`` versions (compact and vacuum carry no epoch)."""
+        keep, floor = set(manifest["epochs"]), manifest["version"] - EPOCH_WINDOW
+        manifest["log"] = [
+            r
+            for r in manifest.get("log", [])
+            if r.get("epoch") in keep or r["version"] > floor
+        ] + [record]
+
+    # -- merge -------------------------------------------------------------
+    def merge_changelog(self, batch: DataFrame, epoch_id: int) -> dict:
+        """MERGE a micro-batch of envelope rows into the table.
+
+        WHEN MATCHED AND newer → UPDATE (tombstone for op='d');
+        WHEN NOT MATCHED → INSERT — expressed as a keyed LWW
+        hash-aggregation over (current ∪ delta), restricted to the
+        buckets the delta touches.
+
+        Idempotent: re-running any epoch (or any overlap of epochs)
+        converges to the same snapshot because winners are chosen by
+        ord = (seq, op_rank), never by arrival time. Returns the epoch's
+        record {epoch, buckets, delta_rows, version, buckets_rewritten,
+        wall_s}, the same dict the commit stores in the manifest log.
+        """
+        spark = batch.sparkSession
+        t0 = time.time()
+        manifest = self._open(spark, epoch_id)
+        if manifest is None:
+            # exact epoch replay (foreachBatch restart) — already committed
+            return {"epoch": epoch_id, "skipped": True}
+
+        delta = envelope_rows(batch, self.extra_fields)
+        delta = delta.withColumn("bucket", self._bucket()).cache()
+        # one job materializes the cached delta and yields both its row
+        # count and the touched buckets
+        counts = {
+            r["bucket"]: r["count"] for r in delta.groupBy("bucket").count().collect()
+        }
+        touched = sorted(counts)
 
         # bucket is a stored column — touched buckets load without
         # recomputing the hash
         current = self._read_buckets(spark, touched)
         merged_src = delta if current is None else current.unionByName(delta)
-
-        out = lww_winners(merged_src)
-
-        # ONE distributed write for all touched buckets (partition-pruned
-        # rewrite — commit cost ∝ touched_buckets × table/n_buckets; see
-        # module docstring for the n_buckets sizing that keeps this ∝
-        # batch footprint).
-        new_version = manifest["version"] + 1
-        verdir = f"v{new_version}-{epoch_id}"
-        out.withColumn("pb", F.col("bucket")).repartition("pb").write.partitionBy(
-            "pb"
-        ).mode("overwrite").parquet(os.path.join(self.root, verdir))
-        for b in touched:
-            manifest["buckets"][str(b)] = f"{verdir}/pb={b}"
-        delta.unpersist()
-
-        manifest["version"] = new_version
-        manifest["epochs"] = sorted(set(manifest["epochs"]) | {epoch_id})[-1000:]
-        self._commit_manifest(manifest)
-        lineage = {
+        record = {
             "epoch": int(epoch_id),
-            "buckets": [int(b) for b in sorted(touched)],
-            "delta_rows": int(delta_rows),
-            "buckets_rewritten": len(touched),
-            "wall_s": round(time.time() - t0, 3),
+            "buckets": touched,
+            "delta_rows": int(sum(counts.values())),
         }
-        with open(os.path.join(self.root, LINEAGE), "a") as f:
-            f.write(json.dumps(lineage) + "\n")
-        return lineage
+        record = self._commit(
+            manifest, lww_winners(merged_src), touched, record, t0, epoch_id
+        )
+        delta.unpersist()
+        return record
 
     # -- maintenance ---------------------------------------------------------
     def vacuum(self, dry_run: bool = False) -> dict:
@@ -495,8 +560,9 @@ class MergeParquetSink:
             "dry_run": bool(dry_run),
         }
         if not dry_run and removed:
-            with open(os.path.join(self.root, LINEAGE), "a") as f:
-                f.write(json.dumps({"vacuum": out}) + "\n")
+            # logged without a version bump: vacuum changes no snapshot
+            self._log(manifest, {"version": manifest["version"], **out})
+            self._commit_manifest(manifest)
         return out
 
     def compact(
@@ -534,7 +600,7 @@ class MergeParquetSink:
         is untouched: replays of already-committed epochs stay no-ops.
         """
         t0 = time.time()
-        manifest = self._load_manifest()
+        manifest = self._open(spark, None)
         if not manifest["buckets"]:
             return {"compacted": False, "reason": "empty table"}
         table = self._read_paths(spark, list(manifest["buckets"].values()))
@@ -546,51 +612,16 @@ class MergeParquetSink:
         if new_n_buckets is not None:
             self.n_buckets = int(new_n_buckets)
             manifest["n_buckets"] = self.n_buckets
-            table = table.withColumn(
-                "bucket",
-                F.pmod(F.xxhash64("conv_id"), F.lit(self.n_buckets)).cast(
-                    "int"
-                ),
-            )
-        if self.extra_fields:
-            # a compact is also a commit point for a pending widening —
-            # the rewrite materializes the evolved columns physically
-            manifest["extra_fields"] = list(self.extra_fields.items())
-        new_version = manifest["version"] + 1
-        verdir = f"v{new_version}-compact"
-        # repartition on the stored bucket column → all rows of a bucket
-        # land in one task → exactly one file per pb= dir
-        (
-            table.withColumn("pb", F.col("bucket"))
-            .repartition("pb")
-            .write.partitionBy("pb")
-            .mode("overwrite")
-            .parquet(os.path.join(self.root, verdir))
-        )
-        written = {
-            name.split("=", 1)[1]
-            for name in os.listdir(os.path.join(self.root, verdir))
-            if name.startswith("pb=")
-        }
-        # a bucket whose rows were ALL pruned tombstones writes no dir —
-        # it leaves the manifest entirely (reads skip it; a future delta
-        # for it is a plain insert)
-        manifest["buckets"] = {
-            b: f"{verdir}/pb={b}" for b in sorted(written, key=int)
-        }
-        manifest["version"] = new_version
-        self._commit_manifest(manifest)
-        out = {
+            table = table.withColumn("bucket", self._bucket())
+        record = {
             "compacted": True,
-            "version": new_version,
-            "buckets": len(written),
             "n_buckets": self.n_buckets,
             "pruned_below_seq": prune_tombstones_below_seq,
-            "wall_s": round(time.time() - t0, 3),
         }
-        with open(os.path.join(self.root, LINEAGE), "a") as f:
-            f.write(json.dumps({"compact": out}) + "\n")
-        return out
+        # every stored bucket and every bucket of the (new) base: those
+        # that write no dir (all rows pruned tombstones) leave the manifest
+        touched = {int(b) for b in manifest["buckets"]} | set(range(self.n_buckets))
+        return self._commit(manifest, table, sorted(touched), record, t0)
 
     def expire_conversations(
         self, spark: SparkSession, older_than_seq: int, epoch_id: int | None = None

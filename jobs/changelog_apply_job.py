@@ -160,6 +160,17 @@ def main() -> None:
     spark = SparkSession.builder.appName("changelog-apply").getOrCreate()
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.sparkContext.setLogLevel("ERROR")
+    if args.bootstrap:
+        # the bootstrap merges the whole snapshot image in ONE commit —
+        # fail fast with the exact remedy instead of OOMing mid-MERGE
+        from flink_cdc_mysql_sink_to_mysql_spark.plans import heap
+
+        heap.check_driver_heap(
+            spark,
+            args.sf_dir,
+            job="changelog_apply_job",
+            needs="the --bootstrap one-commit MERGE of the full snapshot",
+        )
 
     extra_fields = dict(args.extra_field) if args.extra_field else None
 

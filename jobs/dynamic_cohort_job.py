@@ -33,6 +33,7 @@ sys.path.insert(
 from pyspark.sql import SparkSession  # noqa: E402
 
 from flink_cdc_mysql_sink_to_mysql_spark.operators import cohort  # noqa: E402
+from flink_cdc_mysql_sink_to_mysql_spark.plans import heap  # noqa: E402
 from flink_cdc_mysql_sink_to_mysql_spark.sources.transcripts import (  # noqa: E402
     mysql_changelog,
 )
@@ -106,6 +107,12 @@ def main() -> None:
     spark = SparkSession.builder.appName("dynamic-cohort").getOrCreate()
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.sparkContext.setLogLevel("ERROR")
+    heap.check_driver_heap(
+        spark,
+        args.sf_dir,
+        job="dynamic_cohort_job",
+        needs="the streaming cube and the per-batch membership snapshots",
+    )
 
     spool = os.path.join(args.workdir, "spool")
     if not os.path.isdir(spool):

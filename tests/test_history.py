@@ -142,6 +142,23 @@ def test_edit_churn_measures_the_generator_suffix(spark):
     assert bad.count() == 0
 
 
+def test_edit_churn_oracle_sums_to_int64():
+    """DuckDB sums BIGINT into HUGEINT (float64 in pandas), while Spark
+    sums to int64; the oracle casts, so the two hash alike."""
+    import duckdb
+
+    from flink_cdc_mysql_sink_to_mysql_spark.sources.transcripts import (
+        MYSQL_CHANGELOG_SQL,
+    )
+    from tests.conftest import SF_SMOKE, register_views
+
+    con = duckdb.connect()
+    register_views(con, SF_SMOKE)
+    oracle = con.execute(history.edit_churn_sql(MYSQL_CHANGELOG_SQL)).df()
+    assert len(oracle) > 0
+    assert str(oracle["total_len_delta"].dtype) == "int64"
+
+
 def test_asof_time_travel_shows_superseded_text(hist, spark):
     """Snapshotting just before an edit's valid_from returns the
     pre-edit version of that key."""

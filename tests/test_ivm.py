@@ -419,3 +419,40 @@ def test_view_sink_compact_vacuum_and_keeps_serving(spark, tmp_path):
     assert (
         view.read_view(spark).where(F.col("conv_id") == "c0").count() == 0
     )
+
+
+def test_view_crash_after_swap_keeps_the_epoch_record(spark, tmp_path):
+    """A crash right after the view's manifest swap keeps the epoch's
+    commit record (it is inside the swapped manifest), and the replay
+    epoch-skips without writing a second one."""
+    import json
+    import os
+
+    import pytest
+
+    view = GroupedReplaceParquetSink(str(tmp_path / "view"), n_buckets=4)
+    keys = spark.createDataFrame([("a",), ("b",)], "conv_id string")
+    rows = spark.createDataFrame(
+        [("a", T, T + dt.timedelta(minutes=10), 2)],
+        "conv_id string, win_start timestamp, win_end timestamp, n_turns long",
+    )
+    real_commit = view._commit_manifest
+
+    def swap_then_crash(manifest):
+        real_commit(manifest)
+        raise RuntimeError("crash after the manifest swap")
+
+    view._commit_manifest = swap_then_crash
+    with pytest.raises(RuntimeError, match="after the manifest swap"):
+        view.replace_groups(keys, rows, epoch_id=1)
+    view._commit_manifest = real_commit
+
+    def log():
+        with open(os.path.join(view.root, "_manifest.json")) as f:
+            return json.load(f)["log"]
+
+    (rec,) = log()
+    assert rec["epoch"] == 1 and rec["buckets"]
+    assert view.replace_groups(keys, rows, epoch_id=1).get("skipped")
+    assert log() == [rec]
+    assert view.read_view(spark).count() == 1

@@ -167,7 +167,7 @@ def test_search_plan_broadcasts_queries(state):
 
 def test_search_front_door_routes_and_agrees(state, caplog):
     """semsearch.search() — the discoverable front door (round-4 review
-    finding: the 36x maintained-view serve path must be reachable
+    finding: the 26x maintained-view serve path must be reachable
     without reading BENCH) — routes to each kernel and returns results
     equal to calling that kernel directly; the one-shot fallback says
     what it costs."""

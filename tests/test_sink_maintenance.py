@@ -14,6 +14,7 @@ import datetime as dt
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from flink_cdc_mysql_sink_to_mysql_spark.streaming.sink import (
@@ -90,6 +91,9 @@ def test_vacuum_reclaims_superseded_versions(spark, tmp_path):
     manifest = json.load(open(os.path.join(root, "_manifest.json")))
     live = {rel.split("/", 1)[0] for rel in manifest["buckets"].values()}
     assert set(verdirs(root)) == live
+    # the run is logged in the manifest, without a version bump
+    assert manifest["log"][-1]["removed_dirs"] == out["removed_dirs"]
+    assert manifest["log"][-1]["version"] == manifest["version"] == 5
     assert snap_rows(spark, sink) == before
     # idempotent: second vacuum finds nothing
     assert sink.vacuum()["removed_dirs"] == []
@@ -139,7 +143,7 @@ def test_compact_folds_files_and_preserves_table(spark, tmp_path):
     assert sink.file_stats()["referenced_files"] == 2  # 1 file/bucket
 
     out = sink.compact(spark)
-    assert out["compacted"] and out["buckets"] == 2
+    assert out["compacted"] and out["buckets_rewritten"] == 2
     after = sink.file_stats()
     assert after["referenced_files"] == after["buckets"] == 2
     # all pointers now in the single compaction dir
@@ -367,3 +371,54 @@ def test_expired_key_resurrects_on_newer_write_and_reclaims(spark, tmp_path):
     sink.compact(spark, prune_tombstones_below_seq=501)
     assert sink.read(spark).where("op = 'd' AND seq < 501").count() == 0
     assert snap_rows(spark, sink) == [("old", 0, "a2")]
+
+
+def _log_of(root):
+    with open(os.path.join(root, "_manifest.json")) as f:
+        return json.load(f)["log"]
+
+
+def test_crash_after_swap_keeps_the_epoch_record(spark, tmp_path):
+    """A crash right after the manifest swap must not lose the epoch's
+    commit record: the record is inside the swapped manifest, and the
+    replay epoch-skips without writing a second one."""
+    root = str(tmp_path / "tbl")
+    sink = MergeParquetSink(root, n_buckets=4)
+    batch = env_batch(spark, [("c", f"c{i}", 0, "x", 1) for i in range(8)])
+    real_commit = sink._commit_manifest
+
+    def swap_then_crash(manifest):
+        real_commit(manifest)
+        raise RuntimeError("crash after the manifest swap")
+
+    sink._commit_manifest = swap_then_crash
+    with pytest.raises(RuntimeError, match="after the manifest swap"):
+        sink.merge_changelog(batch, epoch_id=1)
+    sink._commit_manifest = real_commit
+
+    (rec,) = _log_of(root)
+    assert rec["epoch"] == 1 and rec["delta_rows"] == 8
+    assert sink.merge_changelog(batch, epoch_id=1).get("skipped")
+    assert _log_of(root) == [rec]
+
+
+def test_epoch_trim_keeps_reserved_epochs(spark, tmp_path):
+    """The epoch window trims stream epochs (ids >= 0) only: after 1000
+    stream epochs, a bootstrap replay (reserved epoch -1) still skips
+    instead of re-merging the whole snapshot image."""
+    root = str(tmp_path / "tbl")
+    sink = MergeParquetSink(root, n_buckets=4)
+    snapshot = env_batch(spark, [("r", f"c{i}", 0, "snap", 1) for i in range(8)])
+    assert not sink.merge_changelog(snapshot, -1).get("skipped")
+    mpath = os.path.join(root, "_manifest.json")
+    with open(mpath) as f:
+        manifest = json.load(f)
+    manifest["epochs"] = [-1, *range(1000)]
+    with open(mpath, "w") as f:
+        json.dump(manifest, f)
+
+    sink.merge_changelog(env_batch(spark, [("u", "c0", 0, "tail", 2)]), 1000)
+    with open(mpath) as f:
+        epochs = json.load(f)["epochs"]
+    assert epochs == [-1, *range(1, 1001)]
+    assert sink.merge_changelog(snapshot, -1).get("skipped")

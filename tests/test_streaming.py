@@ -57,11 +57,10 @@ def test_stream_matches_batch_golden(spark, tmp_path, golden):
     # observed metrics, or the row-accounting property un-tests itself
     assert obs
     assert all(r["observed"]["rows"] == r["numInputRows"] for r in obs)
-    sink_lineage = [
-        json.loads(l) for l in open(os.path.join(sink.root, "_lineage.jsonl"))
-    ]
-    assert len(sink_lineage) == 4  # 4 chunks → 4 merge epochs
-    assert sum(r["delta_rows"] for r in sink_lineage) == env.count()
+    with open(os.path.join(sink.root, "_manifest.json")) as f:
+        sink_log = json.load(f)["log"]
+    assert len(sink_log) == 4  # 4 chunks → 4 merge epochs
+    assert sum(r["delta_rows"] for r in sink_log) == env.count()
 
 
 def test_hot_conv_tracking_records_planted_head(spark, tmp_path, golden):
@@ -351,6 +350,7 @@ def test_torn_commit_recovers(spark, tmp_path, golden):
     assert rows_of(reader.snapshot(spark)) == snap_before
     manifest = json.load(open(tmp_path / "table" / "_manifest.json"))
     assert 1 not in manifest["epochs"]
+    assert not [r for r in manifest["log"] if r["epoch"] == 1]
 
     # restart replays epoch 1 (source is replayable): converges exactly
     sink._commit_manifest = real_commit
@@ -361,3 +361,5 @@ def test_torn_commit_recovers(spark, tmp_path, golden):
     manifest = json.load(open(tmp_path / "table" / "_manifest.json"))
     for rel in manifest["buckets"].values():
         assert os.path.isdir(tmp_path / "table" / rel)
+    # the replayed epoch has exactly one commit record
+    assert [r["epoch"] for r in manifest["log"]] == [0, 1]
