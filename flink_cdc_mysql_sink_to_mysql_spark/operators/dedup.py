@@ -294,30 +294,18 @@ def _minhash_consts(k: int) -> tuple[int, int]:
     return a, b
 
 
-def minhash_signatures(docs: DataFrame, n: int = 3) -> DataFrame:
-    """(doc_id, mh0..mh{K-1}) — K minhashes per doc.
+def _minhash_from_shingle_rows(ex: DataFrame) -> DataFrame:
+    """(doc_id, mh0..mh{K-1}): K minhashes per doc, aggregated over an
+    exploded (doc_id, s) shingle relation (minhash_lsh_pairs feeds its
+    tokenize-once frame).
 
     ONE md5 per shingle → 28-bit fingerprint x; hash_k = (a_k·x + b_k)
     mod 2^31-1 with per-k universal-hash constants (a_k·x < 2^59: no
-    int64 overflow). A proper pairwise-independent family matters:
+    int64 overflow). A pairwise-independent family matters:
     Kirsch–Mitzenmacher-style h1+k·h2 correlates the argmin across k
-    (one unshared shingle with small halves dominates every minhash) —
-    it measurably missed planted near-dups here; the universal family
-    recovers banding-curve recall (0 misses on the test corpus at both
-    gate SFs).
-
-    Scalable shape: explode shingles → hash once → groupBy(doc_id) with
-    K min() aggregates. The mins partial-aggregate map-side, so the
-    shuffle carries K ints per doc, not the shingle set; md5 runs once
-    per (doc, shingle) instead of K times.
-    """
-    return _minhash_from_shingle_rows(shingle_rows(docs, n))
-
-
-def _minhash_from_shingle_rows(ex: DataFrame) -> DataFrame:
-    """K-minhash aggregation over an exploded (doc_id, s) shingle
-    relation — split out so minhash_lsh_pairs can feed a materialized
-    tokenize-once frame instead of re-deriving shingles per consumer."""
+    and measurably missed planted near-dups here. The K min() aggregates
+    partial-aggregate map-side, so the shuffle carries K ints per doc,
+    not the shingle set."""
     x = F.conv(F.substring(F.md5(F.col("s")), 1, 7), 16, 10).cast("long")
     ex = ex.select("doc_id", x.alias("x"))
     return ex.groupBy("doc_id").agg(

@@ -176,36 +176,3 @@ def asof_prev_user_sql(rel: str) -> str:
     FROM a ASOF LEFT JOIN u
       ON a.conv_id = u.conv_id AND a.ts >= u.ts
     """
-
-
-def streaming_user_responses(
-    user_stream: DataFrame,
-    responder_stream: DataFrame,
-    watermark: str = "1 hour",
-    max_delay: str = "INTERVAL 30 MINUTES",
-) -> DataFrame:
-    """Watermarked stream-stream inner join (state evicted once both
-    watermarks pass the time bound)."""
-    u = user_stream.withWatermark("ts", watermark).select(
-        F.col("conv_id").alias("u_conv"),
-        F.col("turn_idx").alias("u_idx"),
-        F.col("ts").alias("u_ts"),
-    )
-    a = responder_stream.withWatermark("ts", watermark).select(
-        F.col("conv_id").alias("a_conv"),
-        F.col("turn_idx").alias("a_idx"),
-        F.col("role").alias("a_role"),
-        F.col("ts").alias("a_ts"),
-    )
-    cond = (
-        (u["u_conv"] == a["a_conv"])
-        & (a["a_ts"] > u["u_ts"])
-        & (a["a_ts"] <= u["u_ts"] + F.expr(max_delay))
-    )
-    return u.join(a, cond, "inner").select(
-        F.col("u_conv").alias("conv_id"),
-        "u_idx",
-        "a_idx",
-        "a_role",
-        (F.unix_millis("a_ts") - F.unix_millis("u_ts")).alias("latency_ms"),
-    )

@@ -13,9 +13,11 @@ Design (the exactly-once shape that needs NO retraction arithmetic):
 
 1. the micro-batch merges into the LWW state sink as usual;
 2. the batch's touched conversations are recomputed FROM the
-   post-merge state (bucket-pruned read — work ∝ batch footprint, not
-   table size), producing each touched conv's complete, correct window
-   rows;
+   post-merge state, producing each touched conv's complete, correct
+   window rows. The read is pruned to the state buckets the merge's
+   commit record names (work ∝ batch footprint, not table size), so
+   the view collects no bucket list of its own; a replayed epoch gets
+   its logged record back from the state sink;
 3. a grouped-replace commit swaps those convs' rows in the window
    table (delete-all-rows-of-key ∪ insert-recomputed), epoch-skipped
    like the state sink.
@@ -32,6 +34,10 @@ Scale: per micro-batch work is (touched buckets read) + (hash agg over
 touched convs' turns) + (touched buckets of the window table written).
 A hot conversation bounds the recompute by its own turn count; the
 window table is bucketed on conv_id exactly like the state table.
+Nothing is cached: the merge and the view commit each re-read the
+micro-batch's spool files (milliseconds), and the state bucket list
+comes from the merge's commit record, so an epoch materializes no
+intermediate and collects the state's touched buckets once.
 """
 
 from __future__ import annotations
@@ -77,9 +83,9 @@ class GroupedReplaceParquetSink(MergeParquetSink):
         t0 = time.time()
         manifest = self._open(spark, epoch_id)
         if manifest is None:
-            return {"epoch": epoch_id, "skipped": True}
+            return self._replayed(epoch_id)
 
-        keys = keys.select("conv_id").distinct().cache()
+        keys = keys.select("conv_id").distinct()
         # touched buckets come from the KEYS (a key whose recompute is
         # empty still purges its old rows, and a bucket left empty drops
         # out of the manifest)
@@ -96,9 +102,7 @@ class GroupedReplaceParquetSink(MergeParquetSink):
                 F.broadcast(keys), "conv_id", "left_anti"
             ).unionByName(delta)
         record = {"epoch": int(epoch_id), "buckets": touched}
-        record = self._commit(manifest, out, touched, record, t0, epoch_id)
-        keys.unpersist()
-        return record
+        return self._commit(manifest, out, touched, record, t0, epoch_id)
 
     def read_view(self, spark: SparkSession) -> DataFrame:
         """Current window rows (no tombstones exist in this table)."""
@@ -180,7 +184,8 @@ def maintained_view_stream(
 
     Per micro-batch: MERGE the envelopes into ``state_sink``, then
     recompute the touched conversations' view rows from the post-merge
-    state (bucket-pruned + broadcast-semi-joined to the touched keys)
+    state (pruned to the buckets in the merge's record + broadcast-
+    joined to the touched keys)
     via ``recompute(live_turns) -> rows`` and grouped-replace them in
     ``view_sink``. Both commits are epoch-skipped, and the recompute
     reads only committed state, so any crash/replay interleaving
@@ -192,35 +197,25 @@ def maintained_view_stream(
     env = envelope_stream(spark, spool_dir, max_files_per_trigger)
 
     def _batch(df: DataFrame, epoch_id: int) -> None:
-        df = df.persist()
-        try:
-            state_sink.merge_changelog(df, epoch_id)
-            keys = (
-                df.select(
-                    F.coalesce(
-                        F.col("after.conv_id"), F.col("before.conv_id")
-                    ).alias("conv_id")
+        # nothing is persisted: each pass re-reads the batch's spool files
+        rec = state_sink.merge_changelog(df, epoch_id)
+        keys = (
+            df.select(
+                F.coalesce(F.col("after.conv_id"), F.col("before.conv_id")).alias(
+                    "conv_id"
                 )
-                .where(F.col("conv_id").isNotNull())
-                .distinct()
-            ).cache()
-            buckets = [
-                r["b"]
-                for r in keys.select(state_sink._bucket().alias("b"))
-                .distinct()
-                .collect()
-            ]
-            state = state_sink._read_buckets(spark, buckets)
-            live = (
-                state.where(F.col("op") != "d")
-                if state is not None
-                else spark.createDataFrame([], state_sink._SCHEMA)
             )
-            rows = recompute(live.join(F.broadcast(keys), "conv_id"))
-            view_sink.replace_groups(keys, rows, epoch_id)
-            keys.unpersist()
-        finally:
-            df.unpersist()
+            .where(F.col("conv_id").isNotNull())
+            .distinct()
+        )
+        state = state_sink._read_buckets(spark, rec["buckets"])
+        live = (
+            state.where(F.col("op") != "d")
+            if state is not None
+            else spark.createDataFrame([], state_sink._SCHEMA)
+        )
+        rows = recompute(live.join(F.broadcast(keys), "conv_id"))
+        view_sink.replace_groups(keys, rows, epoch_id)
 
     q = (
         env.writeStream.foreachBatch(_batch)

@@ -335,10 +335,16 @@ def bootstrap_then_tail(
     is resume-safe because re-running the bootstrap is an epoch-replay
     no-op (the manifest already holds BOOTSTRAP_EPOCH).
 
-    Returns the bootstrap commit's lineage dict (``skipped=True`` on a
+    Returns the bootstrap commit's record (``skipped=True`` on a
     resume).
     """
-    info = sink.merge_changelog(snapshot_envelopes, BOOTSTRAP_EPOCH)
+    # the merge evaluates its batch twice; the snapshot is derived, so
+    # persist it for the merge
+    snapshot_envelopes = snapshot_envelopes.persist()
+    try:
+        info = sink.merge_changelog(snapshot_envelopes, BOOTSTRAP_EPOCH)
+    finally:
+        snapshot_envelopes.unpersist()
     materialize_stream(spark, spool_dir, sink, checkpoint_dir, **stream_kwargs)
     return info
 

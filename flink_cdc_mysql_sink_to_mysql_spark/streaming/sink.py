@@ -437,6 +437,14 @@ class MergeParquetSink:
             "pb"
         ).mode("overwrite").parquet(path)
         written = {n.split("=", 1)[1] for n in os.listdir(path) if n.startswith("pb=")}
+        stray = written - set(map(str, touched))
+        if stray:
+            # the manifest would never point at these rows; refuse before
+            # the swap (vacuum reclaims the unreferenced version dir)
+            raise RuntimeError(
+                f"commit of {verdir} wrote buckets {sorted(map(int, stray))} "
+                f"outside the touched set {touched}"
+            )
         for b in map(str, touched):
             if b in written:
                 manifest["buckets"][b] = f"{verdir}/pb={b}"
@@ -482,19 +490,24 @@ class MergeParquetSink:
         converges to the same snapshot because winners are chosen by
         ord = (seq, op_rank), never by arrival time. Returns the epoch's
         record {epoch, buckets, delta_rows, version, buckets_rewritten,
-        wall_s}, the same dict the commit stores in the manifest log.
+        wall_s}, the same dict the commit stores in the manifest log. A
+        replay of a committed epoch returns that logged record with
+        ``skipped: True``; when the manifest holds no record for it,
+        ``buckets`` lists every stored bucket (a superset of the epoch's).
+
+        Nothing is cached: ``batch`` is evaluated twice, once by the
+        touched-bucket collect and once by the write. A caller whose
+        batch is costly to recompute persists it around this call.
         """
         spark = batch.sparkSession
         t0 = time.time()
         manifest = self._open(spark, epoch_id)
         if manifest is None:
-            # exact epoch replay (foreachBatch restart) — already committed
-            return {"epoch": epoch_id, "skipped": True}
+            return self._replayed(epoch_id)
 
         delta = envelope_rows(batch, self.extra_fields)
-        delta = delta.withColumn("bucket", self._bucket()).cache()
-        # one job materializes the cached delta and yields both its row
-        # count and the touched buckets
+        delta = delta.withColumn("bucket", self._bucket())
+        # one job yields both the delta's row count and its touched buckets
         counts = {
             r["bucket"]: r["count"] for r in delta.groupBy("bucket").count().collect()
         }
@@ -509,11 +522,18 @@ class MergeParquetSink:
             "buckets": touched,
             "delta_rows": int(sum(counts.values())),
         }
-        record = self._commit(
+        return self._commit(
             manifest, lww_winners(merged_src), touched, record, t0, epoch_id
         )
-        delta.unpersist()
-        return record
+
+    def _replayed(self, epoch_id: int) -> dict:
+        """The record of an already-committed epoch, marked skipped."""
+        manifest = self._load_manifest()
+        for r in reversed(manifest.get("log", [])):
+            if r.get("epoch") == epoch_id:
+                return {**r, "skipped": True}
+        buckets = sorted(map(int, manifest["buckets"]))
+        return {"epoch": epoch_id, "buckets": buckets, "skipped": True}
 
     # -- maintenance ---------------------------------------------------------
     def vacuum(self, dry_run: bool = False) -> dict:
@@ -654,8 +674,9 @@ class MergeParquetSink:
         horizon. Callers overriding it own uniqueness vs the stream's
         epochs (use the negative range).
 
-        Scale: one table scan (conv-grain partial-agg + semi join);
-        everything after is ∝ expired keys. No driver-side key list.
+        Scale: one table scan (conv-grain partial-agg + semi join),
+        persisted for the merge's two passes; everything after is ∝
+        expired keys. No driver-side key list.
         """
         if epoch_id is None:
             epoch_id = -(int(older_than_seq) + 2)
@@ -684,7 +705,11 @@ class MergeParquetSink:
                 F.lit(older_than_seq - 1).cast("long").alias("seq"),
             )
         )
-        result = self.merge_changelog(batch, epoch_id)
+        batch = batch.persist()
+        try:
+            result = self.merge_changelog(batch, epoch_id)
+        finally:
+            batch.unpersist()
         result["expired_below_seq"] = int(older_than_seq)
         return result
 

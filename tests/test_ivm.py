@@ -391,6 +391,36 @@ def test_replay_and_partial_commit_converge(spark, tmp_path):
     assert_same(_view_ms(view.read_view(spark)), expected, "full replay")
 
 
+def test_commit_path_builds_no_cache(spark, tmp_path, monkeypatch):
+    """Neither sink caches: draining a 2-file IVM stream and a plain
+    MERGE stream calls persist/cache on no DataFrame. foreachBatch runs
+    in this Python process, so the patched methods (on the concrete
+    DataFrame class, which overrides the abstract one's) see its calls."""
+    env = mysql_changelog(spark, SF_SMOKE).unionByName(_crafted(spark))
+    expected = _view_ms(windowed_state_batch(env)).toPandas()
+    spool = str(tmp_path / "spool")
+    pl.spool_changelog(env, spool, n_chunks=2)
+
+    calls = []
+    cls = type(env)
+    for name in ("persist", "cache"):
+
+        def counted(self, *args, _name=name, _real=getattr(cls, name), **kw):
+            calls.append(_name)
+            return _real(self, *args, **kw)
+
+        monkeypatch.setattr(cls, name, counted)
+
+    state = MergeParquetSink(str(tmp_path / "state"), n_buckets=8)
+    view = GroupedReplaceParquetSink(str(tmp_path / "view"), n_buckets=8)
+    windowed_state_stream(spark, spool, state, view, str(tmp_path / "ckpt"))
+    plain = MergeParquetSink(str(tmp_path / "plain"), n_buckets=8)
+    pl.materialize_stream(spark, spool, plain, str(tmp_path / "ckpt2"))
+    assert calls == []
+    assert_same(_view_ms(view.read_view(spark)), expected, "uncached view")
+    assert_same(plain.snapshot(spark), state.snapshot(spark).toPandas(), "plain")
+
+
 def test_view_sink_compact_vacuum_and_keeps_serving(spark, tmp_path):
     """The view sink inherits the MERGE sink's maintenance: after a
     trickled stream fragments it across version dirs, compact + vacuum

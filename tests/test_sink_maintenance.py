@@ -422,3 +422,56 @@ def test_epoch_trim_keeps_reserved_epochs(spark, tmp_path):
         epochs = json.load(f)["epochs"]
     assert epochs == [-1, *range(1, 1001)]
     assert sink.merge_changelog(snapshot, -1).get("skipped")
+
+
+def test_replay_returns_the_logged_record(spark, tmp_path):
+    """A replayed epoch returns its logged record, marked skipped; with
+    no record in the manifest (written before records moved into it)
+    the replay names every stored bucket, a superset of the epoch's."""
+    root = str(tmp_path / "tbl")
+    sink = MergeParquetSink(root, n_buckets=4)
+    one = env_batch(spark, [("c", "c0", 0, "x", 1)])
+    first = sink.merge_changelog(one, 3)
+    again = sink.merge_changelog(one, 3)
+    assert not first.get("skipped") and again["skipped"] is True
+    assert again["buckets"] == first["buckets"]
+    assert {k: v for k, v in again.items() if k != "skipped"} == first
+
+    sink.merge_changelog(
+        env_batch(spark, [("c", f"c{i}", 0, "y", 2) for i in range(1, 16)]), 4
+    )
+    mpath = os.path.join(root, "_manifest.json")
+    with open(mpath) as f:
+        manifest = json.load(f)
+    del manifest["log"]
+    with open(mpath, "w") as f:
+        json.dump(manifest, f)
+    stored = sorted(int(b) for b in manifest["buckets"])
+    assert len(stored) > len(first["buckets"])
+    replay = sink.merge_changelog(one, 3)
+    assert replay == {"epoch": 3, "buckets": stored, "skipped": True}
+
+
+def test_commit_refuses_rows_outside_touched_buckets(spark, tmp_path):
+    """The touched list and the written rows come from two evaluations
+    of the batch; a write that lands in a bucket outside the touched
+    list fails before the swap instead of losing those rows, and vacuum
+    reclaims the orphan version dir."""
+    import time
+
+    root = str(tmp_path / "tbl")
+    sink = MergeParquetSink(root, n_buckets=8)
+    sink.merge_changelog(env_batch(spark, [("c", "a", 0, "x", 1)]), 0)
+    mpath = os.path.join(root, "_manifest.json")
+    with open(mpath, "rb") as f:
+        before = f.read()
+
+    rows = sink.read(spark).withColumn("bucket", F.lit(5))
+    manifest = sink._open(spark, 1)
+    with pytest.raises(RuntimeError, match="outside the touched set"):
+        sink._commit(manifest, rows, [1], {"epoch": 1}, time.time(), 1)
+    with open(mpath, "rb") as f:
+        assert f.read() == before
+    assert verdirs(root) == ["v1-0", "v2-1"]
+    assert sink.vacuum()["removed_dirs"] == ["v2-1"]
+    assert snap_rows(spark, sink) == [("a", 0, "x")]
