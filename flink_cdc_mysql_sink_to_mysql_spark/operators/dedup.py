@@ -1495,14 +1495,11 @@ def minhash_index_stream(
     Construct the view sink as ``GroupedReplaceParquetSink(root,
     schema_ddl=MINHASH_INDEX_VIEW_DDL)``.
     """
-    from ..streaming.ivm import maintained_view_stream
+    from ..streaming.pipeline import materialize_stream
 
-    return maintained_view_stream(
-        spark,
-        spool_dir,
-        state_sink,
-        index_sink,
-        checkpoint_dir,
-        recompute=lambda live: minhash_index_rows(live, n),
+    materialize_stream(
+        spark, spool_dir, state_sink, checkpoint_dir,
         max_files_per_trigger=max_files_per_trigger,
+        view=(index_sink, lambda live: minhash_index_rows(live, n)),
     )
+    return index_sink

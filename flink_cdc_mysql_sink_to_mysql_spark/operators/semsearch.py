@@ -143,22 +143,19 @@ def embedding_index_stream(
     codebook and :func:`search_index_pruned` serves nprobe-pruned
     top-k from the view.
     """
-    from ..streaming.ivm import maintained_view_stream
+    from ..streaming.pipeline import materialize_stream
 
     recompute = (
         embedding_rows
         if codebook is None
         else (lambda live: assign_cells(embedding_rows(live), codebook))
     )
-    return maintained_view_stream(
-        spark,
-        spool_dir,
-        state_sink,
-        index_sink,
-        checkpoint_dir,
-        recompute=recompute,
+    materialize_stream(
+        spark, spool_dir, state_sink, checkpoint_dir,
         max_files_per_trigger=max_files_per_trigger,
+        view=(index_sink, recompute),
     )
+    return index_sink
 
 
 def search(

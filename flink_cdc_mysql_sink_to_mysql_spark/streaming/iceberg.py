@@ -13,7 +13,9 @@ configured::
 
 Swap `MergeParquetSink` for `IcebergMergeSink` in
 pipeline.materialize_stream / jobs/changelog_apply_job.py and nothing
-else changes: exactly-once still rests on (a) replayable source,
+else changes (except that a maintained ``view=`` needs the parquet
+state sink: its recompute reads the merge's touched buckets, which
+this sink neither records nor exposes): exactly-once still rests on (a) replayable source,
 (b) deterministic LWW reduction of each micro-batch, (c) an idempotent
 MERGE keyed on (conv_id, turn_idx) — re-running an epoch re-applies the
 same winners and converges. Iceberg's snapshot isolation additionally

@@ -11,7 +11,11 @@ table updated per micro-batch.
 
 Design (the exactly-once shape that needs NO retraction arithmetic):
 
-1. the micro-batch merges into the LWW state sink as usual;
+1. the micro-batch merges into the LWW state sink as usual — the view
+   rides the one CDC runner, ``pipeline.materialize_stream(...,
+   view=(view_sink, recompute))``, so it takes any of its feeds (typed
+   spool, Mongo union, JSON wire with DLQ) and the table's evolved
+   columns;
 2. the batch's touched conversations are recomputed FROM the
    post-merge state, producing each touched conv's complete, correct
    window rows. The read is pruned to the state buckets the merge's
@@ -34,10 +38,11 @@ Scale: per micro-batch work is (touched buckets read) + (hash agg over
 touched convs' turns) + (touched buckets of the window table written).
 A hot conversation bounds the recompute by its own turn count; the
 window table is bucketed on conv_id exactly like the state table.
-Nothing is cached: the merge and the view commit each re-read the
-micro-batch's spool files (milliseconds), and the state bucket list
-comes from the merge's commit record, so an epoch materializes no
-intermediate and collects the state's touched buckets once.
+Nothing is cached on the typed spool: the merge and the view commit
+each re-read the micro-batch's spool files (milliseconds), and the
+state bucket list comes from the merge's commit record, so an epoch
+materializes no intermediate and collects the state's touched buckets
+once. (A JSON batch is persisted once for its parse.)
 """
 
 from __future__ import annotations
@@ -48,6 +53,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import pipeline as pl
 from .sink import MergeParquetSink
 
 
@@ -170,63 +176,6 @@ SESSION_VIEW_DDL = (
 )
 
 
-def maintained_view_stream(
-    spark: SparkSession,
-    spool_dir: str,
-    state_sink: MergeParquetSink,
-    view_sink: GroupedReplaceParquetSink,
-    checkpoint_dir: str,
-    recompute,
-    max_files_per_trigger: int | None = 1,
-):
-    """Maintain state table + a per-conversation derived view together,
-    exactly-once.
-
-    Per micro-batch: MERGE the envelopes into ``state_sink``, then
-    recompute the touched conversations' view rows from the post-merge
-    state (pruned to the buckets in the merge's record + broadcast-
-    joined to the touched keys)
-    via ``recompute(live_turns) -> rows`` and grouped-replace them in
-    ``view_sink``. Both commits are epoch-skipped, and the recompute
-    reads only committed state, so any crash/replay interleaving
-    converges (module doc). ``recompute`` may be ANY per-conv-complete
-    aggregation — tumbling windows and turn-gap sessions ship below.
-    """
-    from .pipeline import envelope_stream
-
-    env = envelope_stream(spark, spool_dir, max_files_per_trigger)
-
-    def _batch(df: DataFrame, epoch_id: int) -> None:
-        # nothing is persisted: each pass re-reads the batch's spool files
-        rec = state_sink.merge_changelog(df, epoch_id)
-        keys = (
-            df.select(
-                F.coalesce(F.col("after.conv_id"), F.col("before.conv_id")).alias(
-                    "conv_id"
-                )
-            )
-            .where(F.col("conv_id").isNotNull())
-            .distinct()
-        )
-        state = state_sink._read_buckets(spark, rec["buckets"])
-        live = (
-            state.where(F.col("op") != "d")
-            if state is not None
-            else spark.createDataFrame([], state_sink._SCHEMA)
-        )
-        rows = recompute(live.join(F.broadcast(keys), "conv_id"))
-        view_sink.replace_groups(keys, rows, epoch_id)
-
-    q = (
-        env.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return view_sink
-
-
 def windowed_state_stream(
     spark: SparkSession,
     spool_dir: str,
@@ -237,15 +186,12 @@ def windowed_state_stream(
     max_files_per_trigger: int | None = 1,
 ):
     """Tumbling-window view maintained under upserts/deletes."""
-    return maintained_view_stream(
-        spark,
-        spool_dir,
-        state_sink,
-        window_sink,
-        checkpoint_dir,
-        recompute=lambda live: _window_rows(live, window),
+    pl.materialize_stream(
+        spark, spool_dir, state_sink, checkpoint_dir,
         max_files_per_trigger=max_files_per_trigger,
+        view=(window_sink, lambda live: _window_rows(live, window)),
     )
+    return window_sink
 
 
 def sliding_state_stream(
@@ -263,15 +209,12 @@ def sliding_state_stream(
     window it now covers — W/S memberships per turn, all handled by the
     same recompute-from-state commit (no per-membership retraction
     bookkeeping)."""
-    return maintained_view_stream(
-        spark,
-        spool_dir,
-        state_sink,
-        window_sink,
-        checkpoint_dir,
-        recompute=lambda live: _window_rows(live, window, slide),
+    pl.materialize_stream(
+        spark, spool_dir, state_sink, checkpoint_dir,
         max_files_per_trigger=max_files_per_trigger,
+        view=(window_sink, lambda live: _window_rows(live, window, slide)),
     )
+    return window_sink
 
 
 def session_state_stream(
@@ -293,15 +236,12 @@ def session_state_stream(
 
         GroupedReplaceParquetSink(root, schema_ddl=SESSION_VIEW_DDL)
     """
-    return maintained_view_stream(
-        spark,
-        spool_dir,
-        state_sink,
-        session_sink,
-        checkpoint_dir,
-        recompute=lambda live: _session_rows(live, gap),
+    pl.materialize_stream(
+        spark, spool_dir, state_sink, checkpoint_dir,
         max_files_per_trigger=max_files_per_trigger,
+        view=(session_sink, lambda live: _session_rows(live, gap)),
     )
+    return session_sink
 
 
 def sessions_state_batch(envelopes: DataFrame, gap: str = "30 minutes") -> DataFrame:

@@ -1,13 +1,21 @@
 """Structured-Streaming wrapper: envelope feeds → derive → sinks.
 
 Mirrors the reference job topology (UserBehaviorClickHouseSinkJob.java:
-59-97: two CDC sources → union → batched sink, 3 s checkpoints) in
-Structured Streaming:
+59-97: two CDC sources → union → batched sink, 3 s checkpoints). Every
+CDC path — typed, Mongo, JSON/DLQ and maintained views — is one query
+run by :func:`materialize_stream`:
 
-    readStream(envelopes) ──┐
-    readStream(mongo feed) ─┴→ unionByName → withWatermark
-        → foreachBatch MERGE (exactly-once upsert, streaming/sink.py)
-        → and/or windowed aggregations (operators/windows.py)
+    readStream(JSON wire) → parse ────────────┐  iff dlq_dir
+    readStream(spool) ─┬→ unionByName ────────┤  otherwise
+    readStream(mongo) ─┘  (mongo_spool_dir)   │
+      → observe(rows[, quarantined]) → foreachBatch, per epoch:
+          [split quarantine → dlq_dir/epoch=<id>]      JSON only
+          [top-N hot convs → <lineage>.hot/]           track_hot_convs
+          → MERGE into the state sink (exactly-once upsert, sink.py)
+          → [recompute touched convs → replace_groups]  view
+
+The append-mode aggregates below (windowed counts, stream-stream join,
+session windows) are separate queries over the typed spool.
 
 Checkpointing: `checkpointLocation` persists source offsets + commit
 log — the analog of Flink's enableCheckpointing(3000) (`:61`); restart
@@ -186,23 +194,34 @@ def materialize_stream(
     spool_dir: str,
     sink,
     checkpoint_dir: str,
-    watermark_delay: str = "1 hour",
+    *,
     max_files_per_trigger: int | None = 1,
     lineage_path: str | None = None,
     mongo_spool_dir: str | None = None,
     track_hot_convs: int | None = None,
-    extra_image_fields: dict[str, str] | None = None,
+    dlq_dir: str | None = None,
+    view: tuple | None = None,
 ):
-    """Run the changelog→table materialization as a stream, available-now.
+    """Run the changelog→table materialization as a stream, available-now
+    — the one CDC runner (module docstring topology).
 
     Returns after the spool is drained (Trigger.AvailableNow analog of a
     bounded replay); re-invoking with the same checkpoint resumes at the
     committed offset — the kill/resume path tests/test_streaming.py pins.
 
-    With ``mongo_spool_dir`` the second dialect feed streams in and the
-    two are unioned (U1 — the reference's connect+CoMap,
-    UserBehaviorClickHouseSinkJob.java:66,103-113) before the sink;
-    Structured Streaming unions streaming DataFrames natively.
+    The source is the JSON wire iff ``dlq_dir`` is given. Per epoch the
+    quarantined lines overwrite ``dlq_dir/epoch=<id>/`` (keyed by epoch,
+    so a foreachBatch replay after a crash rewrites — never duplicates —
+    the epoch's rejects: DLQ appends stay exactly-once alongside the
+    MERGE's epoch-skip) and only the good envelopes go on. The observed
+    metrics count the rejects per micro-batch, so lineage records how
+    much of the feed was quarantined — the reference swallows these
+    without a trace (UserBehaviorDebeziumDeserializer.java:72-74).
+
+    Otherwise the source is the typed spool; with ``mongo_spool_dir``
+    the second dialect feed streams in and the two are unioned (U1 —
+    the reference's connect+CoMap, UserBehaviorClickHouseSinkJob.java:
+    66,103-113) before the sink.
 
     ``track_hot_convs=N`` (opt-in) records each micro-batch's top-N
     conversations by envelope count to ``lineage_path + '.hot/'``
@@ -211,79 +230,95 @@ def materialize_stream(
     feed to decide which keys need selective salting, and an SRE
     watches it to see a hot conversation forming before it shows up as
     a straggler task. Cost: one bounded (top-N collect) agg per
-    micro-batch over the already-persisted batch. Exactly-once by
-    idempotent per-epoch overwrite (atomic tmp+rename, content
-    deterministic from the batch), written BEFORE the sink commit so a
-    crash between the two can only re-write an identical file on
-    replay — never leave a committed epoch without its record.
+    micro-batch over the persisted batch. Exactly-once by idempotent
+    per-epoch overwrite (atomic tmp+rename, content deterministic from
+    the batch), written BEFORE the sink commit so a crash between the
+    two can only re-write an identical file on replay — never leave a
+    committed epoch without its record.
+
+    ``view=(view_sink, recompute)`` maintains a per-conversation view
+    with the state (streaming/ivm.py): after the MERGE, the touched
+    conversations' rows are recomputed from the post-merge state via
+    ``recompute(live_turns) -> rows`` (the read pruned to the buckets
+    in the merge's record and broadcast-joined to the touched keys) and
+    grouped-replaced in ``view_sink``. Both commits are epoch-skipped
+    and the recompute reads only committed state, so any crash/replay
+    interleaving converges. Needs the parquet state sink (it reads the
+    touched buckets).
+
+    Only a JSON or hot-tracked batch is persisted; a typed batch is
+    re-read from its spool files by each pass over it.
     """
     from ..operators import cdc
+    from ..sources.json_envelopes import split_quarantine
 
-    # NOTE: the MERGE path needs no watermark (upserts are key-complete);
-    # watermark_delay is honored by the windowed query path below.
-    env = envelope_stream(
-        spark, spool_dir, max_files_per_trigger, extra_image_fields
-    )
-    if mongo_spool_dir is not None:
-        env = cdc.union_feeds(
-            env,
-            mongo_envelope_stream(
-                spark,
-                mongo_spool_dir,
-                max_files_per_trigger,
-                extra_image_fields,
-            ),
-            extra_image_fields,
-        )
-    env = env.observe(
-        "engine",
-        F.count(F.lit(1)).alias("rows"),
-        # DISTINCT aggs are disallowed in observed metrics → HLL sketch
-        F.approx_count_distinct(
-            F.coalesce(F.col("after.conv_id"), F.col("before.conv_id"))
-        ).alias("convs"),
-    )
+    # The STREAM schema must track the TABLE's evolved set: a stream
+    # parsed with a narrower schema than the table would NULL-fill the
+    # evolved columns in every delta and LWW those NULLs over stored
+    # values (silent data loss). The Iceberg sink has no evolved columns.
+    extras = getattr(sink, "evolved_fields", lambda: None)()
+    metrics = [F.count(F.lit(1)).alias("rows")]
+    if dlq_dir is not None:
+        if mongo_spool_dir is not None:
+            raise ValueError("the Mongo feed streams from the typed spool only")
+        env = json_envelope_stream(spark, spool_dir, max_files_per_trigger, extras)
+        metrics.append(F.count(F.col("_quarantine_reason")).alias("quarantined"))
+    else:
+        env = envelope_stream(spark, spool_dir, max_files_per_trigger, extras)
+        if mongo_spool_dir is not None:
+            mongo = mongo_envelope_stream(
+                spark, mongo_spool_dir, max_files_per_trigger, extras
+            )
+            env = cdc.union_feeds(env, mongo, extras)
+    env = env.observe("engine", *metrics)
 
+    conv_id = F.coalesce(F.col("after.conv_id"), F.col("before.conv_id"))
     hot_dir = (lineage_path or checkpoint_dir) + ".hot"
+    persist = dlq_dir is not None or bool(track_hot_convs)
 
-    def _batch(df, eid):
-        if not track_hot_convs:
-            return sink.merge_changelog(df, eid)
-        df = df.persist()
+    def _epoch(batch: DataFrame, eid: int) -> None:
+        if persist:
+            batch = batch.persist()
         try:
-            # hot record FIRST, idempotently (epoch-keyed atomic
-            # overwrite, content deterministic from the batch): a crash
-            # between this write and the sink commit re-writes an
-            # identical file on replay, never leaves a committed epoch
-            # without its record
-            rec = os.path.join(hot_dir, f"epoch-{eid:06d}.json")
-            if not os.path.exists(rec):
-                key = F.coalesce(
-                    F.col("after.conv_id"), F.col("before.conv_id")
+            df = batch
+            if dlq_dir is not None:
+                df, bad = split_quarantine(batch)
+                bad.write.mode("overwrite").parquet(
+                    os.path.join(dlq_dir, f"epoch={eid}")
                 )
+            rec = os.path.join(hot_dir, f"epoch-{eid:06d}.json")
+            if track_hot_convs and not os.path.exists(rec):
                 top = (
-                    df.groupBy(key.alias("conv_id"))
+                    df.groupBy(conv_id.alias("conv_id"))
                     .agg(F.count(F.lit(1)).alias("n"))
                     .orderBy(F.desc("n"), F.asc("conv_id"))
                     .limit(track_hot_convs)
                     .collect()  # bounded: ≤ track_hot_convs rows
                 )
                 os.makedirs(hot_dir, exist_ok=True)
-                tmp = rec + ".tmp"
-                with open(tmp, "w") as f:
-                    f.write(
-                        json.dumps(
-                            {
-                                "epoch": eid,
-                                "hot": [[r["conv_id"], r["n"]] for r in top],
-                            }
-                        )
-                        + "\n"
-                    )
-                os.replace(tmp, rec)
-            return sink.merge_changelog(df, eid)
+                hot = {"epoch": eid, "hot": [[r["conv_id"], r["n"]] for r in top]}
+                with open(rec + ".tmp", "w") as f:
+                    f.write(json.dumps(hot) + "\n")
+                os.replace(rec + ".tmp", rec)
+            info = sink.merge_changelog(df, eid)
+            if view is not None:
+                view_sink, recompute = view
+                keys = (
+                    df.select(conv_id.alias("conv_id"))
+                    .where(F.col("conv_id").isNotNull())
+                    .distinct()
+                )
+                state = sink._read_buckets(spark, info["buckets"])
+                live = (
+                    state.where(F.col("op") != "d")
+                    if state is not None
+                    else spark.createDataFrame([], sink._SCHEMA)
+                )
+                rows = recompute(live.join(F.broadcast(keys), "conv_id"))
+                view_sink.replace_groups(keys, rows, eid)
         finally:
-            df.unpersist()
+            if persist:
+                batch.unpersist()
 
     listener = None
     if lineage_path:
@@ -291,7 +326,7 @@ def materialize_stream(
         spark.streams.addListener(listener)
     try:
         q = (
-            env.writeStream.foreachBatch(_batch)
+            env.writeStream.foreachBatch(_epoch)
             .option("checkpointLocation", checkpoint_dir)
             .trigger(availableNow=True)
             .start()
@@ -373,65 +408,9 @@ def json_envelope_stream(
     )
 
 
-def materialize_stream_from_json(
-    spark: SparkSession,
-    spool_dir: str,
-    sink,
-    checkpoint_dir: str,
-    dlq_dir: str,
-    max_files_per_trigger: int | None = 1,
-    lineage_path: str | None = None,
-    extra_image_fields: dict[str, str] | None = None,
-):
-    """materialize_stream, but fed from the wire format with a DLQ.
-
-    Per micro-batch: parse → split → (a) rejects land in
-    ``dlq_dir/epoch=<id>/`` (mode=overwrite keyed by epoch, so a
-    foreachBatch replay after a crash rewrites — never duplicates — the
-    epoch's rejects: DLQ appends stay exactly-once alongside the MERGE's
-    epoch-skip), (b) good rows MERGE into the sink. The observed metrics
-    count rejects per micro-batch, so lineage records how much of the
-    feed was quarantined — the reference swallows these without a trace
-    (UserBehaviorDebeziumDeserializer.java:72-74).
-    """
-    parsed = json_envelope_stream(
-        spark, spool_dir, max_files_per_trigger, extra_image_fields
-    )
-    parsed = parsed.observe(
-        "engine",
-        F.count(F.lit(1)).alias("rows"),
-        F.count(F.col("_quarantine_reason")).alias("quarantined"),
-    )
-
-    def _merge_with_dlq(df: DataFrame, epoch_id: int) -> None:
-        from ..sources.json_envelopes import split_quarantine
-
-        df = df.persist()
-        try:
-            good, bad = split_quarantine(df)
-            bad.write.mode("overwrite").parquet(
-                os.path.join(dlq_dir, f"epoch={epoch_id}")
-            )
-            sink.merge_changelog(good, epoch_id)
-        finally:
-            df.unpersist()
-
-    listener = None
-    if lineage_path:
-        listener = LineageListener(lineage_path)
-        spark.streams.addListener(listener)
-    try:
-        q = (
-            parsed.writeStream.foreachBatch(_merge_with_dlq)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if listener is not None:
-            spark.streams.removeListener(listener)
-    return sink
+#: the JSON-wire entry point under its historical name (``dlq_dir``
+#: selects the wire source)
+materialize_stream_from_json = materialize_stream
 
 
 def read_dlq(spark: SparkSession, dlq_dir: str) -> DataFrame:

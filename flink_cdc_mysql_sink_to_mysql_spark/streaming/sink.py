@@ -82,8 +82,9 @@ MANIFEST = "_manifest.json"
 EPOCH_WINDOW = 1000
 
 # every commit writes one version directory: v{version}-{tag} where tag
-# is the merge epoch id or "compact"; vacuum only ever touches names
-# matching this (the manifest and its temp files never do)
+# is the merge epoch id or "compact"; vacuum removes unreferenced names
+# matching this, plus manifest temp files (tmp*.manifest) a crash left
+# between mkstemp and the swap — never the manifest itself
 _VERDIR_RE = re.compile(r"^v\d+-")
 
 
@@ -545,6 +546,8 @@ class MergeParquetSink:
         Unreferenced covers both superseded commits AND torn commits
         (crash between the parquet write and the manifest swap — the
         manifest never pointed at them, cf. test_torn_commit_recovers).
+        A ``tmp*.manifest`` left by a crash before the manifest swap is
+        removed too; its bytes count in ``reclaimed_bytes``.
 
         Single-writer contract: call between micro-batches (foreachBatch
         is serial per query) or offline — never concurrently with an
@@ -562,6 +565,13 @@ class MergeParquetSink:
             names = []
         for name in names:
             path = os.path.join(self.root, name)
+            if name.startswith("tmp") and name.endswith(".manifest"):
+                # an orphaned manifest temp: no swap is in flight
+                # under the single-writer contract
+                reclaimed += os.path.getsize(path)
+                if not dry_run:
+                    os.remove(path)
+                continue
             if not _VERDIR_RE.match(name) or name in live:
                 continue
             if not os.path.isdir(path):

@@ -172,22 +172,13 @@ def main() -> None:
             needs="the --bootstrap one-commit MERGE of the full snapshot",
         )
 
-    extra_fields = dict(args.extra_field) if args.extra_field else None
-
     spool = os.path.join(args.workdir, "spool")
     ckpt = os.path.join(args.workdir, "checkpoint")
     sink = MergeParquetSink(
         root=os.path.join(args.workdir, "sink"),
         n_buckets=args.n_buckets,
-        extra_fields=extra_fields,
+        extra_fields=dict(args.extra_field) if args.extra_field else None,
     )
-    # The STREAM schema must track the TABLE's evolved set, not just the
-    # CLI flag: resuming an evolved table without --extra-field would
-    # otherwise parse the spool with the base schema, NULL-fill the
-    # evolved columns in every delta, and LWW those NULLs over stored
-    # values (silent data loss — review finding).
-    extra_fields = sink.evolved_fields()
-
     # The checkpoint commits a fixed source topology: resuming the same
     # workdir with a different --with-mongo would make Spark abort with
     # an obscure "number of streaming sources changed" — fail fast with
@@ -289,7 +280,6 @@ def main() -> None:
             lineage_path=lineage,
             mongo_spool_dir=mongo_spool,
             track_hot_convs=args.track_hot_convs,
-            extra_image_fields=extra_fields,
         )
 
     maintenance = {}

@@ -391,6 +391,79 @@ def test_replay_and_partial_commit_converge(spark, tmp_path):
     assert_same(_view_ms(view.read_view(spark)), expected, "full replay")
 
 
+def test_json_fed_view_with_dlq_and_evolved_column(spark, tmp_path):
+    """One runner feeds a view from the JSON wire: malformed lines of all
+    four quarantine reasons land in the DLQ, the view equals the batch
+    twin over the good envelopes, the evolved ``rating`` column survives
+    in the state, and a replay through a fresh checkpoint changes
+    nothing and does not duplicate the DLQ."""
+    from flink_cdc_mysql_sink_to_mysql_spark.operators import cdc
+    from flink_cdc_mysql_sink_to_mysql_spark.sources.json_envelopes import (
+        render_envelope_json,
+    )
+    from flink_cdc_mysql_sink_to_mysql_spark.streaming.ivm import _window_rows
+
+    extra = {"rating": "int"}
+    rating = (F.col("seq") % 7).cast("int")
+    env = (
+        mysql_changelog(spark, SF_SMOKE)
+        .unionByName(_crafted(spark))
+        .withColumn("after", F.col("after").withField("rating", rating))
+        .withColumn("before", F.col("before").withField("rating", rating))
+    )
+    lines = [r["value"] for r in render_envelope_json(env).collect()]
+    malformed = [
+        ("not json {", "unparseable"),
+        ('{"op":"upsert","after":{"conv_id":"x","turn_idx":1}}', "bad_op"),
+        ('{"op":"c","seq":7}', "no_image"),
+        ("   ", "empty_input"),
+    ]
+    spool = tmp_path / "spool"
+    spool.mkdir()
+    n_chunks = 3
+    step = (len(lines) + n_chunks - 1) // n_chunks
+    for i in range(n_chunks):
+        part = lines[i * step : (i + 1) * step]
+        # rejects mid-file: a file never ends in a blank line
+        part = part[:1] + [raw for raw, _ in malformed] + part[1:]
+        (spool / f"chunk-{i:03d}.json").write_text("\n".join(part) + "\n")
+
+    state = MergeParquetSink(str(tmp_path / "state"), n_buckets=8, extra_fields=extra)
+    view = GroupedReplaceParquetSink(str(tmp_path / "view"), n_buckets=8)
+    dlq = str(tmp_path / "dlq")
+
+    def drain(ckpt):
+        pl.materialize_stream(
+            spark, str(spool), state, str(tmp_path / ckpt), dlq_dir=dlq,
+            view=(view, lambda live: _window_rows(live, "10 minutes")),
+        )
+
+    def dlq_rows():
+        return sorted(map(tuple, pl.read_dlq(spark, dlq).select("_raw", "reason").collect()))
+
+    expected_view = _view_ms(windowed_state_batch(env)).toPandas()
+    expected_state = (
+        cdc.apply_changelog(env, extra_image_fields=extra)
+        .select("conv_id", "turn_idx", "rating")
+        .toPandas()
+    )
+    drain("ckpt")
+    assert_same(_view_ms(view.read_view(spark)), expected_view, "json view")
+    assert dlq_rows() == sorted(malformed * n_chunks)
+    got_state = state.snapshot(spark).select("conv_id", "turn_idx", "rating")
+    assert_same(got_state, expected_state, "rated state")
+    assert got_state.where(F.col("rating").isNotNull()).count() > 0
+
+    drain("ckpt2")
+    assert_same(_view_ms(view.read_view(spark)), expected_view, "replayed view")
+    assert dlq_rows() == sorted(malformed * n_chunks)
+    assert_same(
+        state.snapshot(spark).select("conv_id", "turn_idx", "rating"),
+        expected_state,
+        "replayed state",
+    )
+
+
 def test_commit_path_builds_no_cache(spark, tmp_path, monkeypatch):
     """Neither sink caches: draining a 2-file IVM stream and a plain
     MERGE stream calls persist/cache on no DataFrame. foreachBatch runs

@@ -9,6 +9,7 @@ auto-adopts the table-owned schema), and type changes refused.
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 
 import pytest
@@ -186,7 +187,6 @@ def test_streaming_materialize_with_evolved_column(spark, tmp_path):
         str(spool),
         sink,
         str(tmp_path / "ckpt"),
-        extra_image_fields=EXTRA,
     )
     got = {
         (r["conv_id"], r["turn_idx"]): (r["text"], r["rating"])
@@ -197,6 +197,72 @@ def test_streaming_materialize_with_evolved_column(spark, tmp_path):
         ("s1", 0): ("q", None),
         ("s1", 1): ("a2", 5),
     }
+
+
+def _rated(conv, idx, minute, rating):
+    ts = dt.datetime(2024, 6, 1, 10, minute)
+    return (conv, idx, "user", f"{conv}.{idx}", None, ts, rating)
+
+
+def _ratings(sink, spark):
+    return {
+        (r["conv_id"], r["turn_idx"]): r["rating"]
+        for r in sink.snapshot(spark).collect()
+    }
+
+
+def test_view_stream_keeps_evolved_column(spark, tmp_path):
+    """A maintained view over an evolved state table: the stream reads
+    its spool with the table's schema, so the state keeps the ratings
+    instead of merging NULLs."""
+    from flink_cdc_mysql_sink_to_mysql_spark.streaming.ivm import (
+        GroupedReplaceParquetSink,
+        windowed_state_stream,
+    )
+
+    spool = str(tmp_path / "spool")
+    _env_df(
+        spark,
+        [
+            ("c", None, _rated("v1", 0, 0, 7), 100),
+            ("c", None, _rated("v1", 1, 1, 9), 200),
+        ],
+    ).coalesce(1).write.parquet(spool)
+    state = MergeParquetSink(
+        root=str(tmp_path / "state"), n_buckets=4, extra_fields=dict(EXTRA)
+    )
+    view = GroupedReplaceParquetSink(str(tmp_path / "view"), n_buckets=4)
+    windowed_state_stream(spark, spool, state, view, str(tmp_path / "ckpt"))
+    assert _ratings(state, spark) == {("v1", 0): 7, ("v1", 1): 9}
+    assert [r["n_turns"] for r in view.read_view(spark).collect()] == [2]
+
+
+def test_bootstrap_then_tail_keeps_evolved_column(spark, tmp_path):
+    """Called the way the apply job's --bootstrap calls it (no schema
+    argument), the tail must not write NULL over the ratings the
+    bootstrap just committed."""
+    from flink_cdc_mysql_sink_to_mysql_spark.streaming import pipeline as pl
+
+    snapshot = _env_df(
+        spark,
+        [
+            ("r", None, _rated("b1", 0, 0, 7), 100),
+            ("r", None, _rated("b1", 1, 1, 3), 110),
+        ],
+    )
+    spool = str(tmp_path / "spool")
+    _env_df(
+        spark,
+        [
+            ("u", _rated("b1", 0, 0, 7), _rated("b1", 0, 0, 8), 200),
+            ("c", None, _rated("b1", 2, 2, 9), 210),
+        ],
+    ).coalesce(1).write.parquet(spool)
+    sink = MergeParquetSink(
+        root=str(tmp_path / "table"), n_buckets=4, extra_fields=dict(EXTRA)
+    )
+    pl.bootstrap_then_tail(spark, snapshot, spool, sink, str(tmp_path / "ckpt"))
+    assert _ratings(sink, spark) == {("b1", 0): 8, ("b1", 1): 3, ("b1", 2): 9}
 
 
 def test_union_with_mongo_nullfills_evolved_column(spark, tmp_path):
@@ -247,7 +313,6 @@ def test_union_with_mongo_nullfills_evolved_column(spark, tmp_path):
         sink,
         str(tmp_path / "ck"),
         mongo_spool_dir=mo_spool,
-        extra_image_fields=EXTRA,
     )
     snap = {
         r["conv_id"]: r["rating"] for r in sink.snapshot(spark).collect()
@@ -326,7 +391,6 @@ def test_json_front_door_streams_evolved_column(spark, tmp_path):
         sink,
         str(tmp_path / "ck"),
         dlq_dir=str(tmp_path / "dlq"),
-        extra_image_fields=EXTRA,
     )
     got = {
         r["turn_idx"]: r["rating"] for r in sink.snapshot(spark).collect()

@@ -122,6 +122,31 @@ def test_vacuum_removes_torn_commit_dir(spark, tmp_path):
     assert snap_rows(spark, sink) == before
 
 
+def test_vacuum_removes_orphaned_manifest_temp(spark, tmp_path):
+    """A crash between the temp write and the swap of a manifest commit
+    leaves a ``tmp*.manifest``. Under vacuum's single-writer contract no
+    swap is in flight, so the file is an orphan: vacuum removes it and
+    counts its bytes, and the live manifest is untouched."""
+    root = str(tmp_path / "tbl")
+    sink = MergeParquetSink(root, n_buckets=4)
+    sink.merge_changelog(
+        env_batch(spark, [("c", f"c{i}", 0, "x", 1) for i in range(8)]), 0
+    )
+    before = snap_rows(spark, sink)
+    orphan = os.path.join(root, "tmpabc.manifest")
+    with open(orphan, "w") as f:
+        f.write('{"version": 99, "buckets": {}}')
+    size = os.path.getsize(orphan)
+
+    dry = sink.vacuum(dry_run=True)
+    assert dry["reclaimed_bytes"] == size and os.path.exists(orphan)
+    out = sink.vacuum()
+    assert out["reclaimed_bytes"] == size
+    assert not os.path.exists(orphan)
+    assert os.path.exists(os.path.join(root, "_manifest.json"))
+    assert snap_rows(spark, sink) == before
+
+
 def test_compact_folds_files_and_preserves_table(spark, tmp_path):
     root = str(tmp_path / "tbl")
     sink = MergeParquetSink(root, n_buckets=2)

@@ -65,8 +65,9 @@ def test_stream_matches_batch_golden(spark, tmp_path, golden):
 
 def test_hot_conv_tracking_records_planted_head(spark, tmp_path, golden):
     """track_hot_convs: each micro-batch's top-N conversations land in
-    the .hot.jsonl feed exactly-once, hottest first — the online half
-    of adaptive skew handling (plans/skew.py defense #4)."""
+    the ``.hot/`` feed (one file per epoch) exactly-once, hottest first
+    — the online half of adaptive skew handling (plans/skew.py defense
+    #4)."""
     env = mysql_changelog(spark, SF)
     spool = str(tmp_path / "spool")
     pl.spool_changelog(env, spool, n_chunks=2)
