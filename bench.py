@@ -15,6 +15,9 @@ Set ``SPARK_GRAFT_BENCH_SCALING=1`` to also report the changelog-apply
 throughput at two parallelism levels (N and 4N cores) and the scaling
 efficiency — the BASELINE.json north-rule criterion (no real cluster in
 this sandbox; two local parallelism levels stand in for two cluster sizes).
+
+A mode switch from ``MODES`` runs another sweep instead; any other
+argument exits non-zero, listing the modes, before Spark starts.
 """
 
 from __future__ import annotations
@@ -30,6 +33,18 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from flink_cdc_mysql_sink_to_mysql_spark import entry_queries  # noqa: E402
 from flink_cdc_mysql_sink_to_mysql_spark.operators import dedup  # noqa: E402
 from flink_cdc_mysql_sink_to_mysql_spark.session import get_spark  # noqa: E402
+
+# Every mode switch main() accepts; no switch runs the headline sweep.
+MODES = (
+    "--names",
+    "--r3",
+    "--extended",
+    "--json-ingest",
+    "--spooled",
+    "--bootstrap-compare",
+    "--skew-compare",
+    "--serve-maintained",
+)
 
 # Headline set: the flagship CDC pipeline + one representative per operator
 # family (events, windows, joins, cohorts, dedup, similarity, text).
@@ -171,153 +186,6 @@ def run_scaling(sf_dir: str) -> dict:
     )
 
     return measure_scaling(sf_dir)
-
-
-def run_merge_amplification(cpus: int) -> dict:
-    """Commit cost vs touched-bucket fraction for the MERGE shim.
-
-    Preloads the sink with a wide table (many conv_ids), then merges a
-    SMALL batch touching few conv_ids, at n_buckets 32 vs 256. With 256
-    buckets the touched fraction — and therefore the rewrite cost —
-    drops ∝ n_buckets, demonstrating commit cost ∝ batch footprint
-    (streaming/sink.py module doc sizing rule).
-    """
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from flink_cdc_mysql_sink_to_mysql_spark.plans.scaling import synth_envelopes
-    from flink_cdc_mysql_sink_to_mysql_spark.session import get_spark
-    from flink_cdc_mysql_sink_to_mysql_spark.streaming.sink import MergeParquetSink
-
-    spark = get_spark(app_name="bench-merge", cpus=cpus)
-    spark.sparkContext.setLogLevel("ERROR")
-    base = synth_envelopes(spark, 2_000_000).cache()
-    base.count()
-    # a narrow micro-batch: the trickle case — 8 active conversations
-    # (commit cost should track THIS footprint, not table size)
-    active = [f"c{i}" for i in range(8)]
-    key = F.coalesce(F.col("after.conv_id"), F.col("before.conv_id"))
-    small = base.where(key.isin(active)).cache()
-    small.count()
-
-    out: dict = {}
-    for n_buckets in (32, 256):
-        root = tempfile.mkdtemp(prefix=f"merge-amp-{n_buckets}-")
-        sink = MergeParquetSink(root, n_buckets=n_buckets)
-        load = sink.merge_changelog(base, epoch_id=0)
-        commit = sink.merge_changelog(small, epoch_id=1)
-        out[f"n_buckets_{n_buckets}"] = {
-            "preload_wall_s": load["wall_s"],
-            "small_batch_wall_s": commit["wall_s"],
-            "small_batch_rows": commit["delta_rows"],
-            "buckets_rewritten": commit["buckets_rewritten"],
-            "touched_fraction": round(
-                commit["buckets_rewritten"] / n_buckets, 3
-            ),
-        }
-        shutil.rmtree(root, ignore_errors=True)
-    base.unpersist()
-    small.unpersist()
-    return out
-
-
-def _replay_protocol(
-    metric: str,
-    app_name: str,
-    make_and_stream,
-    cpus: int,
-    n_turns: int,
-    n_chunks: int,
-    files_per_trigger: int,
-) -> dict:
-    """Shared replay protocol for --streaming-replay / --ivm-replay:
-    synth changelog (same op mix as the scaling job) → seq-ordered
-    parquet spool (the in-sandbox binlog) → TIMED stream-only section →
-    post-timing row counts → teardown. Single-sourced so the pair of
-    numbers stays comparable (their delta is the measurement quoted in
-    BENCH/BASELINE.md).
-
-    ``make_and_stream(spark, root, spool, files_per_trigger)`` builds
-    its sinks and returns ``(stream_fn, count_fn)``; the harness times
-    ONLY ``stream_fn()`` and merges ``count_fn()``'s result fields
-    afterwards, so row counting never lands inside the timed window.
-    """
-    import shutil
-    import tempfile
-
-    from flink_cdc_mysql_sink_to_mysql_spark.plans.scaling import synth_envelopes
-    from flink_cdc_mysql_sink_to_mysql_spark.streaming import pipeline as pl
-
-    spark = get_spark(app_name=app_name, cpus=cpus)
-    spark.sparkContext.setLogLevel("ERROR")
-    root = tempfile.mkdtemp(prefix=app_name + "-")
-    try:
-        env = synth_envelopes(spark, n_turns)
-        n_env = env.count()
-        spool = os.path.join(root, "spool")
-        pl.spool_changelog(env, spool, n_chunks=n_chunks)
-        stream_fn, count_fn = make_and_stream(
-            spark, root, spool, files_per_trigger
-        )
-        t0 = time.perf_counter()
-        stream_fn()
-        wall = time.perf_counter() - t0
-        return {
-            "metric": metric,
-            "value": round(n_env / wall),
-            "unit": "envelopes/sec",
-            "envelopes": n_env,
-            "wall_s": round(wall, 2),
-            **count_fn(),
-            "microbatches": n_chunks // files_per_trigger,
-            "cpus": cpus,
-        }
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def run_streaming_replay(
-    cpus: int = 8,
-    n_turns: int = 2_240_000,
-    n_chunks: int = 8,
-    files_per_trigger: int = 2,
-) -> dict:
-    """End-to-end exactly-once streaming replay throughput.
-
-    File stream at ``files_per_trigger`` → foreachBatch MERGE sink with
-    checkpoint (protocol: :func:`_replay_protocol`). Timed section is
-    the STREAM only (spooling excluded); reported envelopes/s is the
-    realistic-batch-size number BENCH/BASELINE.md quotes
-    (per-microbatch MERGE commit cost amortizes with batch size — the
-    reference's 1000-row/200ms JDBC flush analog).
-    """
-    from flink_cdc_mysql_sink_to_mysql_spark.streaming import pipeline as pl
-    from flink_cdc_mysql_sink_to_mysql_spark.streaming.sink import MergeParquetSink
-
-    def make_and_stream(spark, root, spool, fpt):
-        sink = MergeParquetSink(os.path.join(root, "table"))
-        return (
-            lambda: pl.materialize_stream(
-                spark,
-                spool,
-                sink,
-                os.path.join(root, "ckpt"),
-                max_files_per_trigger=fpt,
-            ),
-            lambda: {"final_rows": sink.snapshot(spark).count()},
-        )
-
-    return _replay_protocol(
-        "streaming_replay_envelopes_per_sec",
-        "bench-replay",
-        make_and_stream,
-        cpus,
-        n_turns,
-        n_chunks,
-        files_per_trigger,
-    )
 
 
 def run_skew_compare(cpus: int = 8, n_turns: int = 10_000_000) -> dict:
@@ -676,126 +544,6 @@ def run_spooled(sf_dir: str, cpus: int) -> dict:
         shutil.rmtree(root, ignore_errors=True)
 
 
-def run_ivm_replay(
-    cpus: int = 8,
-    n_turns: int = 2_240_000,
-    n_chunks: int = 8,
-    files_per_trigger: int = 2,
-) -> dict:
-    """Streaming replay that ALSO maintains the upsert-aware tumbling
-    window view per micro-batch (streaming/ivm.py). Same protocol as
-    --streaming-replay (:func:`_replay_protocol`), so the delta is the
-    cost of keeping a windowed aggregate transactionally consistent
-    with the state table (touched-conv recompute + grouped-replace
-    commit per batch)."""
-    from flink_cdc_mysql_sink_to_mysql_spark.streaming import ivm
-    from flink_cdc_mysql_sink_to_mysql_spark.streaming.sink import MergeParquetSink
-
-    def make_and_stream(spark, root, spool, fpt):
-        state = MergeParquetSink(os.path.join(root, "state"))
-        view = ivm.GroupedReplaceParquetSink(os.path.join(root, "view"))
-        return (
-            lambda: ivm.windowed_state_stream(
-                spark,
-                spool,
-                state,
-                view,
-                os.path.join(root, "ckpt"),
-                max_files_per_trigger=fpt,
-            ),
-            lambda: {
-                "state_rows": state.snapshot(spark).count(),
-                "view_rows": view.read_view(spark).count(),
-            },
-        )
-
-    return _replay_protocol(
-        "ivm_replay_envelopes_per_sec",
-        "bench-ivm",
-        make_and_stream,
-        cpus,
-        n_turns,
-        n_chunks,
-        files_per_trigger,
-    )
-
-
-def run_json_replay(
-    cpus: int = 8,
-    n_turns: int = 2_240_000,
-    n_chunks: int = 8,
-    files_per_trigger: int = 2,
-) -> dict:
-    """End-to-end exactly-once streaming replay FROM THE WIRE FORMAT:
-    JSON-line spool → parse front door (quarantine split + DLQ write)
-    → foreachBatch MERGE. Same shape/size as --streaming-replay, so
-    the delta between the two numbers is the full cost of arriving as
-    bytes (parse + reason ladder + DLQ bookkeeping) at streaming
-    batch sizes."""
-    import shutil
-    import tempfile
-
-    from flink_cdc_mysql_sink_to_mysql_spark.plans.scaling import synth_envelopes
-    from flink_cdc_mysql_sink_to_mysql_spark.sources.json_envelopes import (
-        render_envelope_json,
-    )
-    from flink_cdc_mysql_sink_to_mysql_spark.streaming import pipeline as pl
-    from flink_cdc_mysql_sink_to_mysql_spark.streaming.sink import MergeParquetSink
-
-    spark = get_spark(app_name="bench-json-replay", cpus=cpus)
-    spark.sparkContext.setLogLevel("ERROR")
-    root = tempfile.mkdtemp(prefix="json-replay-")
-    try:
-        env = synth_envelopes(spark, n_turns)
-        n_env = env.count()
-        spool = os.path.join(root, "spool")
-        # seq-ordered text chunks (the JSON twin of spool_changelog)
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
-        df = env.withColumn(
-            "_chunk", F.ntile(n_chunks).over(Window.orderBy("seq"))
-        )
-        for i in range(1, n_chunks + 1):
-            render_envelope_json(
-                df.where(F.col("_chunk") == i).drop("_chunk")
-            ).coalesce(1).write.mode("overwrite").text(
-                os.path.join(spool, f"c{i:03d}")
-            )
-        # flatten: the text stream source reads files, not dirs
-        import glob
-
-        for i in range(1, n_chunks + 1):
-            part = glob.glob(os.path.join(spool, f"c{i:03d}", "part-*.txt"))[0]
-            os.replace(part, os.path.join(spool, f"chunk-{i:03d}.json"))
-            shutil.rmtree(os.path.join(spool, f"c{i:03d}"))
-
-        sink = MergeParquetSink(os.path.join(root, "table"))
-        t0 = time.perf_counter()
-        pl.materialize_stream_from_json(
-            spark,
-            spool,
-            sink,
-            os.path.join(root, "ckpt"),
-            dlq_dir=os.path.join(root, "dlq"),
-            max_files_per_trigger=files_per_trigger,
-        )
-        wall = time.perf_counter() - t0
-        rows = sink.snapshot(spark).count()
-        return {
-            "metric": "json_streaming_replay_envelopes_per_sec",
-            "value": round(n_env / wall),
-            "unit": "envelopes/sec",
-            "envelopes": n_env,
-            "wall_s": round(wall, 2),
-            "final_rows": rows,
-            "microbatches": n_chunks // files_per_trigger,
-            "cpus": cpus,
-        }
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
 def run_json_ingest(sf_dir: str, cpus: int) -> dict:
     """Wire-format (JSON-lines) ingest cost — the production Kafka shape.
 
@@ -927,27 +675,27 @@ def run_bootstrap_compare(
         shutil.rmtree(root, ignore_errors=True)
 
 
+def _check_argv(argv: list[str]) -> None:
+    """Refuse any argument that is not a mode switch, before Spark
+    starts: an unknown or removed mode must not fall through to the
+    headline sweep."""
+    args = iter(argv)
+    for a in args:
+        if a == "--names" and next(args, None) is None:
+            sys.exit("bench.py: --names needs a comma-separated list")
+        if a not in MODES:
+            sys.exit(
+                f"bench.py: unknown argument {a!r}; valid modes: "
+                f"{' '.join(MODES)} (none: the headline sweep)"
+            )
+
+
 def main() -> None:
+    _check_argv(sys.argv[1:])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     m = re.search(r"sf([0-9.]+)/*$", sf_dir)
     sf = float(m.group(1)) if m else -1.0
-
-    if "--merge-amplification" in sys.argv:
-        print(json.dumps(run_merge_amplification(cpus)))
-        return
-
-    if "--streaming-replay" in sys.argv:
-        print(json.dumps(run_streaming_replay(cpus=min(cpus, 8))))
-        return
-
-    if "--ivm-replay" in sys.argv:
-        print(json.dumps(run_ivm_replay(cpus=min(cpus, 8))))
-        return
-
-    if "--json-replay" in sys.argv:
-        print(json.dumps(run_json_replay(cpus=min(cpus, 8))))
-        return
 
     if "--json-ingest" in sys.argv:
         out = run_json_ingest(sf_dir, cpus)
@@ -993,60 +741,17 @@ def main() -> None:
 
     if "--names" in sys.argv:
         # ad-hoc subset (e.g. the sf100 spot run): --names a,b,c
+        label = "subset"
         names = sys.argv[sys.argv.index("--names") + 1].split(",")
-        times = run(sf_dir, cpus, names_list=names)
-        print(
-            json.dumps(
-                {
-                    "metric": "subset_query_wall_seconds",
-                    "value": round(sum(times.values()), 3),
-                    "unit": "sec",
-                    "queries": times,
-                    "sf": sf,
-                    "cpus": cpus,
-                    "reps": int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")),
-                }
-            )
-        )
-        return
-
-    if "--r3" in sys.argv:
-        times = run(sf_dir, cpus, names_list=ROUND3)
-        print(
-            json.dumps(
-                {
-                    "metric": "round3_query_wall_seconds",
-                    "value": round(sum(times.values()), 3),
-                    "unit": "sec",
-                    "queries": times,
-                    "sf": sf,
-                    "cpus": cpus,
-                    "reps": int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")),
-                }
-            )
-        )
-        return
-
-    if "--extended" in sys.argv:
-        times = run(sf_dir, cpus, names_list=EXTENDED)
-        print(
-            json.dumps(
-                {
-                    "metric": "extended_query_wall_seconds",
-                    "value": round(sum(times.values()), 3),
-                    "unit": "sec",
-                    "queries": times,
-                    "sf": sf,
-                    "cpus": cpus,
-                    "reps": int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")),
-                }
-            )
-        )
-        return
-
-    times = run(sf_dir, cpus)
+    elif "--r3" in sys.argv:
+        label, names = "round3", ROUND3
+    elif "--extended" in sys.argv:
+        label, names = "extended", EXTENDED
+    else:
+        label, names = "headline", None
+    times = run(sf_dir, cpus, names_list=names)
     out = {
-        "metric": "headline_query_wall_seconds",
+        "metric": f"{label}_query_wall_seconds",
         "value": round(sum(times.values()), 3),
         "unit": "sec",
         "queries": times,
@@ -1054,10 +759,8 @@ def main() -> None:
         "cpus": cpus,
         "reps": int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")),
     }
-    if os.environ.get("SPARK_GRAFT_BENCH_SCALING"):
+    if label == "headline" and os.environ.get("SPARK_GRAFT_BENCH_SCALING"):
         out["scaling"] = run_scaling(sf_dir)
-    if os.environ.get("SPARK_GRAFT_BENCH_MERGE"):
-        out["merge_amplification"] = run_merge_amplification(cpus)
     print(json.dumps(out))
 
 

@@ -1051,23 +1051,29 @@ def q_ann_ivf_topk_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Product-quantization ANN — compressed-domain top-k via explicit
-# reconstruction (bit-exact DuckDB twin); the per-subvector k-means
-# trainer is objective-pinned in tests/test_pq.py. ROTATED INTO the
-# driver window in round 5 (first independent driver row).
+# reconstruction (bit-exact DuckDB twin). ROTATED INTO the driver
+# window in round 5 (first independent driver row).
 @register("ann_pq_topk", oracle=similarity.pq_topk_sql("embeddings"))
 def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.pq_topk(_emb(spark, sf_dir))
 
 
-# ADC table-lookup kernel — no SQL twin by nature (numpy gather);
-# rank-pinned against q_ann_pq_topk in tests/test_pq.py. ROTATED INTO
-# the driver window in round 5 WITHOUT an oracle entry: the driver
-# records its documented weaker rows-only check (the non-SQL-
-# expressible-op contract) — its exactness guarantee remains the local
-# rank-equality pin.
-@register("ann_pq_topk_adc")
+# ADC table-lookup kernel (numpy gather) — `cos` differs from the
+# reconstruction form by float summation order (~1e-15), but the RANKING
+# is identical, so the registered projection drops cos and oracle-checks
+# (q_id, vec_id, rank) against the rank-only projection of the
+# reconstruction twin — the ann_cosine_topk_numpy precedent. ROTATED
+# INTO the driver window in round 5.
+@register(
+    "ann_pq_topk_adc",
+    oracle=f"""
+    SELECT q_id, vec_id, rank FROM ({similarity.pq_topk_sql("embeddings")})
+    """,
+)
 def q_ann_pq_topk_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return similarity.pq_topk_adc(_emb(spark, sf_dir))
+    return similarity.pq_topk_adc(_emb(spark, sf_dir)).select(
+        "q_id", "vec_id", "rank"
+    )
 
 
 # numpy/BLAS matmul kernel — `cos` differs from the fold at ~1e-16

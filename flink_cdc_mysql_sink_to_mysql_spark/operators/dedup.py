@@ -1,8 +1,8 @@
 """Deduplication operators for training-data pipelines.
 
 Exact (hash-groupBy), MinHash+LSH near-dup (shingle → minhash → band →
-bucket-join → exact-Jaccard verify), SimHash near-dup (banded Hamming
-join), and embedding-cosine near-dup. The reference engine has no dedup
+bucket-join → exact-Jaccard verify), SimHash near-dup (half-enumeration
+Hamming join), and embedding-cosine near-dup. The reference engine has no dedup
 at all (its dedup is delegated to the ClickHouse table engine,
 `UserBehaviorClickHouseSinkJob.java:67-95`); these are the rebuild's
 first-class training-data extensions.
@@ -15,10 +15,11 @@ Scale design (the part that matters at 100 TB):
   come from an equi-join on (band_idx, band_key) — shuffle keys are
   16-byte hashes, AQE skew-join splits hot buckets. The exact-Jaccard
   verify re-joins shingle sets only for candidate pairs.
-- **SimHash** uses 4-byte banding over a 32-bit signature: pigeonhole
-  guarantees 100% recall for Hamming distance ≤ 3 (3 flipped bits cannot
-  touch all 4 bands), so the banded join is *exactly* equivalent to the
-  O(n²) scan the oracle runs — same results, linear-ish cost.
+- **SimHash** splits a 32-bit signature into two 16-bit halves:
+  pigeonhole guarantees 100% recall for Hamming distance ≤ 3 (one half
+  differs in at most one bit), so the half-enumeration join is *exactly*
+  equivalent to the O(n²) scan the oracle runs — same results,
+  linear-ish cost.
 - **Embedding near-dup** is the brute-force baseline (block-nested-loop);
   the LSH-bucketed scale path lives in operators/similarity.py.
 
@@ -601,12 +602,11 @@ def substring_containment_sql(rel: str, k: int = SUBSTR_MIN_WORDS) -> str:
 
 
 # ---------------------------------------------------------------------------
-# SimHash (32-bit) + banded Hamming join
+# SimHash (32-bit) + half-enumeration Hamming join
 # ---------------------------------------------------------------------------
 
 SIMHASH_BITS = 32
 HAMMING_MAX = 3
-_BAND_BYTES = 4  # 4 bands × 8 bits; pigeonhole-exact for HAMMING_MAX ≤ 3
 
 
 def _word_hash(x: Column) -> Column:
@@ -685,8 +685,8 @@ def simhash_pairs(docs: DataFrame) -> DataFrame:
     equi-join on (half, value) finds EVERY qualifying pair — same rows
     as the O(n²) oracle scan, verified by the same exact Hamming filter.
 
-    Why this beats the previous 8-bit byte-banded self-join (kept below
-    as :func:`simhash_pairs_banded` for the A/B): blocking-key entropy.
+    Why this beats the previous 8-bit byte-banded self-join (deleted
+    after losing the A/B): blocking-key entropy.
     With n docs, an 8-bit band packs ~n/256 docs per bucket and the
     join ENUMERATES ~4·n²/256 candidate rows (measured: the dominant
     cost at 500k docs — ~3.9G enumerated rows, 35.6 s); 16-bit blocks
@@ -758,58 +758,6 @@ def _pairs_from_signatures(sh: DataFrame) -> DataFrame:
             b,
             (F.col("a.half") == F.col("b.half"))
             & (F.col("a.value") == F.col("b.value"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            ham.cast("int").alias("hamming"),
-        )
-        .where(F.col("hamming") <= HAMMING_MAX)
-        .distinct()
-    )
-
-
-def simhash_pairs_banded(docs: DataFrame) -> DataFrame:
-    """Hamming(simhash) ≤ 3 pairs via the 8-bit byte-banded self-join.
-
-    Pigeonhole: ≤3 differing bits over 4 disjoint bytes ⇒ at least one
-    byte equal ⇒ the banded equi-join finds EVERY qualifying pair — the
-    oracle's O(n²) scan and this plan return identical rows. Kept as
-    the A/B twin of :func:`simhash_pairs` (the half-enumeration plan
-    that replaced it — see there for the measured blocking-entropy
-    argument); equality of the three forms is pinned in
-    tests/test_training_ops.py.
-    """
-    sh = simhash(docs)
-    bands = sh.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftright(F.col("simhash"), 8 * i)
-                        .bitwiseAND(F.lit(255))
-                        .alias("byte"),
-                    )
-                    for i in range(_BAND_BYTES)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "simhash", "bk.band", "bk.byte")
-
-    a = bands.alias("a")
-    b = bands.alias("b")
-    ham = F.bit_count(
-        F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.byte") == F.col("b.byte"))
             & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .select(

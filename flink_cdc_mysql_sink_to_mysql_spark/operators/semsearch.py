@@ -274,8 +274,8 @@ def index_codebook(emb: DataFrame, n_cells: int = INDEX_CELLS) -> DataFrame:
     """Deterministic corpus-sample codebook: the first ``n_cells``
     index rows in (conv_id, turn_idx) order, numbered 1..n. The same
     oracle-expressible sampling trick as similarity.ivf_centroids —
-    production swaps in k-means (`similarity.ivf_centroids_kmeans`
-    pattern) with nothing downstream changing. For the STREAMING
+    another codebook of the same schema drops in with nothing
+    downstream changing. For the STREAMING
     index the codebook must be FROZEN (trained/sampled once at
     bootstrap and passed in): cells are only comparable when every
     vector was assigned against the same centroids."""

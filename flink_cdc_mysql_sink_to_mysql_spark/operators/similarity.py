@@ -331,44 +331,6 @@ def ivf_centroids(emb: DataFrame, n_centroids: int = N_CENTROIDS) -> DataFrame:
     )
 
 
-def ivf_centroids_kmeans(
-    emb: DataFrame,
-    n_centroids: int = N_CENTROIDS,
-    seed: int = 42,
-    max_iter: int = 20,
-) -> DataFrame:
-    """Real k-means codebook (the production replacement for the
-    deterministic-sample :func:`ivf_centroids`): Spark ML KMeans with
-    the cosine distance measure — k-means|| init, mergeable partial
-    aggregation per iteration, O(iter · n · k) total, nothing
-    corpus-proportional on the driver except the k centers themselves.
-    Seeded → run-to-run deterministic on the same input/partitioning.
-    No cross-engine oracle (iterative); contract-tested instead: same
-    schema as ivf_centroids, fixed k, and recall measured vs brute
-    force in tests. Drop-in: pass the result as ``centroids=`` to
-    ivf_assign / ivf_topk."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feats = emb.select(
-        array_to_vector(F.col("embedding").cast("array<double>")).alias(
-            "features"
-        )
-    )
-    model = KMeans(
-        k=n_centroids,
-        seed=seed,
-        maxIter=max_iter,
-        distanceMeasure="cosine",
-    ).fit(feats)
-    centers = [
-        (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-    ]
-    return emb.sparkSession.createDataFrame(
-        centers, "cid long, cemb array<double>"
-    )
-
-
 def ivf_assign(
     emb: DataFrame,
     n_centroids: int = N_CENTROIDS,
@@ -436,8 +398,8 @@ def ivf_topk(
     touches nprobe cells' partitions instead of the whole corpus;
     raising nprobe trades cost for recall. Approximate by definition —
     the oracle runs the identical cell-restricted semantics. Pass
-    ``centroids=`` (e.g. :func:`ivf_centroids_kmeans` output) to use a
-    trained codebook instead of the deterministic sample."""
+    ``centroids=`` (same ``cid, cemb`` schema) to use another codebook
+    instead of the deterministic sample."""
     # build the codebook ONCE and hand it to ivf_assign too — otherwise
     # the centroids-derivation subtree is scanned and broadcast twice
     base_cents = (
@@ -704,8 +666,7 @@ def semantic_dedup(
     Skew note: one cell = one task — the deterministic-sample codebook
     keeps cells near-uniform (max/mean ≈ 1.2 measured at sf10); a
     pathological cell concentrates in one task, the same keyed bound
-    as session windows. A k-means codebook via
-    :func:`ivf_centroids_kmeans` drops in unchanged through
+    as session windows. Another codebook drops in unchanged through
     ``centroids=``. Clustering makes it approximate by construction
     (cross-cluster near-dups are unseen); the exact baseline it
     replaces is dedup.embedding_near_dup, and the DuckDB oracle
@@ -1137,9 +1098,8 @@ def pq_topk_adc(
     Scores differ from :func:`pq_topk` only by float summation order
     (~1e-15); rank equality is pinned in tests, mirroring the
     numpy-vs-fold precedent of cosine_topk_numpy. ``codebooks=`` takes
-    trained books (:func:`pq_codebooks_kmeans`) and is used for BOTH
-    the encode and the lookup table — the production combination of
-    trained books + codes-only scan."""
+    other books of the same ``(j, cid, csub)`` schema and is used for
+    BOTH the encode and the lookup table."""
     import numpy as np
     import pandas as pd
 
@@ -1218,38 +1178,3 @@ def pq_topk_adc(
         _score, schema="q_id long, vec_id long, cos double"
     )
     return _topk(scored, topk)
-
-
-def pq_codebooks_kmeans(
-    emb: DataFrame,
-    m: int = PQ_M,
-    k: int = PQ_K,
-    seed: int = 42,
-    max_iter: int = 20,
-) -> DataFrame:
-    """Trained PQ sub-codebooks (the production replacement for the
-    deterministic corpus-sample books): one euclidean Spark ML KMeans
-    per subvector — the textbook PQ training recipe (Jégou et al. 2011,
-    §III). m models of k centers each; O(m · iter · n · k) total,
-    driver holds only the m·k centers. Seeded → deterministic on the
-    same input/partitioning. No cross-engine oracle (iterative);
-    contract: same (j, cid, csub) schema as the sample books, drop-in
-    via ``codebooks=`` — recall improvement is measured in tests."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    rows = []
-    for j in range(m):
-        feats = emb.select(
-            array_to_vector(
-                _subvec(str(j), m).cast("array<double>")
-            ).alias("features")
-        )
-        model = KMeans(k=k, seed=seed + j, maxIter=max_iter).fit(feats)
-        rows.extend(
-            (j, cid, [float(x) for x in c])
-            for cid, c in enumerate(model.clusterCenters())
-        )
-    return emb.sparkSession.createDataFrame(
-        rows, "j int, cid long, csub array<double>"
-    )

@@ -56,16 +56,6 @@ STATE_SCHEMA = StructType(
 GAP_MS = 30 * 60 * 1000
 
 
-def tws_available() -> bool:
-    """True iff the transformWithStateInPandas runtime deps exist."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 def _progress_fn(
     key: Tuple[Any, ...],
     pdfs: Iterator[pd.DataFrame],
@@ -117,101 +107,6 @@ def conversation_progress_stream(
         stateStructType=STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    q = (
-        prog.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return out_dir
-
-
-def conversation_progress_stream_tws(
-    spark,
-    spool_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-):
-    """Same operator on the Spark 4 `transformWithStateInPandas` API
-    (StatefulProcessor + typed ValueState) — the successor to
-    applyInPandasWithState with composable state variables and timers.
-    Kept alongside the GroupState form so both stateful APIs are
-    exercised; the equivalence test runs wherever the runtime supports
-    it (it needs the RocksDB state store provider AND the
-    `google.protobuf` package for the state-server protocol — the
-    latter is absent in this sandbox, so the test auto-skips; see
-    :func:`tws_available`).
-    """
-    if not tws_available():
-        raise NotImplementedError(
-            "transformWithStateInPandas needs google.protobuf, which is "
-            "not installed in this environment"
-        )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    from .pipeline import envelope_stream
-
-    class ProgressProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("progress", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            (conv_id,) = key
-            if self._state.exists():
-                n, last_ts, sid = self._state.get()
-            else:
-                n, last_ts, sid = 0, None, 0
-            pdf = pd.concat(list(rows), ignore_index=True).sort_values(
-                ["ts_ms", "turn_idx"]
-            )
-            out_n, out_sid = [], []
-            for ts in pdf["ts_ms"]:
-                if last_ts is not None and ts - last_ts > GAP_MS:
-                    sid += 1
-                n += 1
-                last_ts = int(ts)
-                out_n.append(n)
-                out_sid.append(sid)
-            self._state.update((n, last_ts, sid))
-            yield pd.DataFrame(
-                {
-                    "conv_id": conv_id,
-                    "turn_idx": pdf["turn_idx"].astype("int32"),
-                    "ts_ms": pdf["ts_ms"].astype("int64"),
-                    "turns_so_far": pd.Series(
-                        out_n, index=pdf.index, dtype="int32"
-                    ),
-                    "session_id": pd.Series(
-                        out_sid, index=pdf.index, dtype="int32"
-                    ),
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    env = envelope_stream(spark, spool_dir)
-    turns = env.where(F.col("after").isNotNull()).select(
-        F.col("after.conv_id").alias("conv_id"),
-        F.col("after.turn_idx").cast("int").alias("turn_idx"),
-        F.unix_millis(F.col("after.ts")).alias("ts_ms"),
-    )
-    prog = turns.groupBy("conv_id").transformWithStateInPandas(
-        statefulProcessor=ProgressProcessor(),
-        outputStructType=PROGRESS_SCHEMA,
-        outputMode="Append",
-        timeMode="None",
     )
     q = (
         prog.writeStream.format("parquet")

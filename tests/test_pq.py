@@ -2,10 +2,9 @@
 
 Oracle parity for the reconstruction-form top-k runs in
 tests/test_unregistered_oracles.py; here: the ADC table-lookup kernel's
-rank equality, codebook-member exactness, the disjoint-coordinate norm
-identity the ADC path relies on, trained-codebook contracts (k-means
-must beat the sample books on its own objective), and the recall floor
-vs exact brute force.
+rank equality (default and injected ``codebooks=``), codebook-member
+exactness, the disjoint-coordinate norm identity the ADC path relies
+on, and the recall floor vs exact brute force.
 """
 
 from __future__ import annotations
@@ -92,45 +91,18 @@ def test_disjoint_norm_identity(emb):
     assert bad == 0
 
 
-def test_trained_codebooks_contract_and_objective(emb):
-    """pq_codebooks_kmeans: drop-in schema, deterministic under the
-    same seed, and — k-means' own objective — strictly lower mean
-    quantization error than the corpus-sample books (measured 0.72 vs
-    1.06 on this data)."""
-    cb1 = sim.pq_codebooks_kmeans(emb, seed=7)
-    cb2 = sim.pq_codebooks_kmeans(emb, seed=7)
-    assert cb1.schema.simpleString() == cb2.schema.simpleString()
-    assert cb1.count() == sim.PQ_M * sim.PQ_K
-    assert cb1.exceptAll(cb2).count() == 0
-
-    def mse(cb):
-        rec = sim.pq_reconstruct(
-            sim.pq_encode(emb, codebooks=cb), emb, codebooks=cb
-        )
-        return (
-            rec.join(emb, "vec_id")
-            .select(
-                F.aggregate(
-                    F.zip_with(
-                        "emb_hat", "embedding", lambda a, b: (a - b) ** 2
-                    ),
-                    F.lit(0.0),
-                    lambda a, v: a + v,
-                ).alias("e")
-            )
-            .agg(F.avg("e"))
-            .first()[0]
-        )
-
-    assert mse(sim.pq_codebooks_kmeans(emb)) < mse(None)
-
-
 def test_adc_kernel_accepts_trained_codebooks(emb):
-    """The production combination — trained books + codes-only ADC
-    scan — must rank identically to the reconstruction form under the
-    SAME books (the codebooks= contract advertised by
-    pq_codebooks_kmeans)."""
-    cb = sim.pq_codebooks_kmeans(emb, seed=7).persist()
+    """Books injected through ``codebooks=`` (here the sample books of
+    a shifted corpus slice, vec_ids 100..115, so not the defaults) must
+    drive both the encode and the ADC lookup table: the codes-only scan
+    ranks identically to the reconstruction form under the SAME books."""
+    shifted = emb.where(F.col("vec_id") >= 100).select(
+        (F.col("vec_id") - 100).alias("vec_id"), "embedding"
+    )
+    cb = sim._codebook_rows(shifted, sim.PQ_M, sim.PQ_K).persist()
+    default = sim._codebook_rows(emb, sim.PQ_M, sim.PQ_K)
+    assert cb.count() == sim.PQ_M * sim.PQ_K
+    assert cb.exceptAll(default).count() > 0
     try:
         ref = sim.pq_topk(emb, codebooks=cb).select("q_id", "vec_id", "rank")
         adc = sim.pq_topk_adc(emb, codebooks=cb).select(

@@ -166,25 +166,6 @@ def test_union_stream_matches_batch_apply(spark, tmp_path):
     assert got == want and len(got) > 900
 
 
-@pytest.mark.skipif(
-    not stateful.tws_available(),
-    reason="transformWithStateInPandas needs google.protobuf (absent here)",
-)
-def test_stateful_progress_tws_matches_batch(spark, tmp_path, spool):
-    """Same equivalence for the transformWithStateInPandas form."""
-    out = stateful.conversation_progress_stream_tws(
-        spark, spool, str(tmp_path / "out_tws"), str(tmp_path / "ck_tws")
-    )
-    got = sorted(map(tuple, spark.read.parquet(out).collect()))
-    turns = _turns_batch(spark).select(
-        "conv_id", "turn_idx", F.unix_millis("ts").alias("ts_ms")
-    )
-    want = sorted(
-        map(tuple, stateful.conversation_progress_batch(turns).collect())
-    )
-    assert got == want and len(got) > 0
-
-
 def test_late_update_cannot_reopen_closed_session(spark, tmp_path):
     """SURVEY §7 hard part: an update to an old turn arriving after the
     watermark passed the session's close is DROPPED by the session state

@@ -44,10 +44,10 @@ def test_minhash_lsh_finds_planted_near_dups(spark):
     assert lsh == brute
 
 
-def test_simhash_banded_equals_bruteforce(spark):
-    """Pigeonhole property, both blocking plans: the half-enumeration
-    join (simhash_pairs) AND the byte-banded self-join A/B twin return
-    exactly the pairs a full O(n²) Hamming scan returns (Hamming ≤ 3)."""
+def test_simhash_halfenum_equals_bruteforce(spark):
+    """Pigeonhole property: the half-enumeration join (simhash_pairs)
+    returns exactly the pairs a full O(n²) Hamming scan returns
+    (Hamming ≤ 3)."""
     sh = dedup.simhash(_docs(spark, SF_SMOKE))
     a, b = sh.alias("a"), sh.alias("b")
     ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
@@ -66,12 +66,7 @@ def test_simhash_banded_equals_bruteforce(spark):
         (r.doc_a, r.doc_b)
         for r in dedup.simhash_pairs(_docs(spark, SF_SMOKE)).collect()
     }
-    banded = {
-        (r.doc_a, r.doc_b)
-        for r in dedup.simhash_pairs_banded(_docs(spark, SF_SMOKE)).collect()
-    }
     assert halfenum == brute
-    assert banded == brute
 
 
 def test_simhash_halfenum_adversarial_bit_spreads(spark):
@@ -306,22 +301,15 @@ def test_quantize_int8_semantics(spark):
     assert list(rows[3].q) == [-127]
 
 
-def test_ivf_kmeans_codebook_and_recall(spark):
-    """Trained k-means codebook: fixed size, seed-deterministic, and a
-    drop-in for the sampled codebook in ivf_topk; recall clears a floor
-    and grows with nprobe. (A km-vs-sampled recall comparison is NOT
-    asserted: at 500 vectors the 5-NN recall ceiling is set by cell
-    boundaries, not codebook quality.)"""
+def test_ivf_codebook_recall(spark):
+    """A 10-cell codebook passed through ``centroids=``: fixed size, and
+    ivf_topk's recall vs brute force clears a floor and grows with
+    nprobe (measured 0.36 → 0.76 at nprobe 1 → 4 on this corpus)."""
     from flink_cdc_mysql_sink_to_mysql_spark.operators import similarity
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    cents = similarity.ivf_centroids_kmeans(emb, n_centroids=10, seed=42)
+    cents = similarity.ivf_centroids(emb, 10)
     assert cents.count() == 10
-    # deterministic re-fit
-    again = similarity.ivf_centroids_kmeans(emb, n_centroids=10, seed=42)
-    assert sorted(map(tuple, cents.collect())) == sorted(
-        map(tuple, again.collect())
-    )
 
     brute = similarity.cosine_topk(emb, k=5).select("q_id", "vec_id")
     bn = brute.count()

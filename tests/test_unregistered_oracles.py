@@ -8,8 +8,8 @@ weakens a correctness guarantee.
 
 Round-5 rotation (VERDICT r4 ask #3 — the last never-driver-checked
 ops get first independent driver rows): rotated IN scd2_asof,
-edit_churn, ann_pq_topk, ann_pq_topk_adc (rows-only: no SQL twin),
-cohort_exist_adaptive, near_dups_live_state, search_index_pruned,
+edit_churn, ann_pq_topk, ann_pq_topk_adc (oracle: the rank-only
+projection of the reconstruction twin), cohort_exist_adaptive, near_dups_live_state, search_index_pruned,
 dedup_substring, vocab_rank_quality; rotated OUT (now pinned here)
 scd2_history, preference_pairs, cohort_exist_cube, search_live_state,
 dedup_span, multimodal_frame_sample, vocab_top_terms, sample_topk,
@@ -43,6 +43,7 @@ from tests.util import assert_same
 @pytest.fixture(scope="module")
 def duck():
     con = duckdb.connect()
+    con.execute("SET TimeZone='Asia/Shanghai'")
     register_views(con, SF_CORRECT)
     return con
 

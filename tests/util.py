@@ -1,5 +1,7 @@
 """Cross-engine result comparison, mimicking the driver's
-order-insensitive sorted-column value compare."""
+order-insensitive sorted-column value compare: the column set and each
+column's pandas dtype must match before the values are compared (the
+driver's value hash tells 36 from 36.0)."""
 
 from __future__ import annotations
 
@@ -40,7 +42,18 @@ def canon(df: pd.DataFrame) -> list[tuple]:
 
 
 def assert_same(spark_df, duck_df: pd.DataFrame, name: str = "") -> None:
-    s = canon(spark_df.toPandas())
+    sp = spark_df.toPandas()
+    cols = sorted(sp.columns)
+    assert cols == sorted(duck_df.columns), (
+        f"{name}: columns {cols} vs oracle {sorted(duck_df.columns)}"
+    )
+    dtypes = {
+        c: (str(sp[c].dtype), str(duck_df[c].dtype))
+        for c in cols
+        if str(sp[c].dtype) != str(duck_df[c].dtype)
+    }
+    assert not dtypes, f"{name}: dtype (spark, oracle) {dtypes}"
+    s = canon(sp)
     d = canon(duck_df)
     assert len(s) == len(d), f"{name}: row count {len(s)} vs oracle {len(d)}"
     mismatches = [(i, a, b) for i, (a, b) in enumerate(zip(s, d)) if a != b]
