@@ -268,7 +268,7 @@ def seeded_hash(doc_id: Column, seed: int) -> Column:
     ).cast("long")
 
 
-def _seeded_hash_sql(doc_id: str, seed: int) -> str:
+def seeded_hash_sql(doc_id: str, seed: int) -> str:
     md5 = f"md5('{seed}:' || CAST({doc_id} AS VARCHAR))"
     terms = " + ".join(
         f"(strpos('0123456789abcdef', substr({md5}, {i}, 1)) - 1)"
@@ -302,7 +302,7 @@ def shuffle_shards(
 def shuffle_shards_sql(
     rel: str, n_shards: int = SHUFFLE_SHARDS, seed: int = SHUFFLE_SEED
 ) -> str:
-    h = _seeded_hash_sql("doc_id", seed)
+    h = seeded_hash_sql("doc_id", seed)
     return f"""
     SELECT doc_id,
            CAST({h} % {n_shards} AS INTEGER) AS shard,
@@ -390,6 +390,3 @@ def mixture_sample_sql(
     WHERE {_id_hash_sql('doc_id')} % 1000 < rate_permille
     """
 
-
-# backward-compat alias (pre-round-2 name)
-_seeded_hash = seeded_hash

@@ -3,7 +3,7 @@
 In-code ``spark.driver.memory`` cannot resize a JVM that is already
 up, so a job launched without ``--driver-memory`` on a large input
 OOMs minutes into its funnel with an opaque executor stack. Every
-memory-sensitive entrypoint (jobs/curation_job.py,
+memory-sensitive entrypoint (jobs/curation_job.py, jobs/cohort_job.py,
 jobs/dynamic_cohort_job.py, the ``--bootstrap`` one-commit snapshot
 MERGE of jobs/changelog_apply_job.py, and the ``--check`` recompute
 paths of jobs/dedup_index_job.py and jobs/ivm_view_job.py) instead

@@ -1,112 +1,62 @@
 """Continuously-maintained cohorts (streaming form of reference job 3).
 
 The reference evaluates cohort rules as one-shot pull queries against
-the sink table (`UserGroupClickHouseJob.java:83-96`). Here the rule's
-aggregates (SUM/COUNT/MAX of the turn metric per conv_id) are
-maintained INCREMENTALLY by a Structured Streaming update-mode
-aggregation over the derived event stream: each micro-batch emits only
-the conversations whose stats changed; foreachBatch appends them with
-the epoch id, forming a stats changelog whose last-writer-wins
-materialization is the current cohort-stats table. Membership is then a
-filter (the HAVING conjuncts) over current stats — re-evaluated at any
-time without rescanning history.
+the sink table (`UserGroupClickHouseJob.java:83-96`). Here the stream
+maintains the rule-INDEPENDENT (conv_id, event_kind, day) cube of
+:func:`cohort.events_cube` and evaluates any rule set over it per
+micro-batch — the Flink broadcast-state pattern, with the rules in a
+file reloaded every batch instead of a broadcast control stream.
 
-Scale: streaming state = one row of 3 numbers per conv_id (bounded by
-|conversations|, not turns); the changelog materialization reuses the
-same LWW shape as the CDC apply. At 10^12 turns this is THE way to keep
-cohorts fresh — the reference's pull query would rescan the sink table.
+The cube lives once: in a :class:`GroupedReplaceParquetSink` table
+under ``<workdir>/cube``, bucketed on conv_id. Each micro-batch
+aggregates its own events statelessly, adds the stored cells of the
+conversations it touched (sum+sum, cnt+cnt, max of max), and commits
+those conversations' rows through ``replace_groups``. There is no
+Structured Streaming state store (the checkpoint holds only source
+offsets) and no delta history to fold; the table's ``compact`` and
+``vacuum`` are its maintenance.
+
+Exactly-once: the commit is additive, so it relies on the manifest's
+epoch skip — a replayed epoch finds its id committed and adds nothing.
+Spark re-runs only the last uncommitted batch, which is always inside
+the manifest's epoch window, so the checkpoint and the cube table are
+a pair: move or delete them together. The membership snapshot of epoch
+N is read from the committed cube inside the same ``foreachBatch``, so
+a crash between the cube commit and the snapshot replays the epoch,
+skips the commit and rewrites the snapshot.
+
+Scale: per micro-batch work is the batch's cube aggregation, a read of
+the cube for the touched conversations' cells and the snapshot's rule
+evaluation, which touches the compact cube (|convs| × |kinds| × |active
+days| rows), never the event history.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import cdc, cohort
+from .ivm import GroupedReplaceParquetSink
 from .pipeline import envelope_stream
 
-
-def cohort_stats_stream(
-    spark: SparkSession,
-    spool_dir: str,
-    rule: cohort.CohortRule,
-    now: str,
-    workdir: str,
-) -> str:
-    """Run the incremental stats aggregation over the envelope spool.
-
-    Returns the stats-changelog directory (parquet, one file set per
-    epoch with an ``_epoch`` column).
-    """
-    delta_dir = os.path.join(workdir, "stats_delta")
-    ckpt = os.path.join(workdir, "ck")
-
-    env = envelope_stream(spark, spool_dir)
-    events = cdc.derive_turn_events(env)
-    df = events
-    kind = cohort.TARGET_TO_KIND.get(rule.target)
-    if kind is not None:  # unmapped-target quirk: no filter
-        df = df.where(F.col("event_kind") == kind)
-    df = df.where(F.col("ts") >= cohort.cutoff_expr(now, rule.value_days))
-
-    stats = df.groupBy("conv_id").agg(
-        F.sum("metric").alias("sum_metric"),
-        F.count(F.lit(1)).alias("cnt"),
-        F.max("metric").alias("max_metric"),
-    )
-
-    def _append(batch: DataFrame, epoch_id: int) -> None:
-        batch.withColumn("_epoch", F.lit(int(epoch_id))).write.mode(
-            "append"
-        ).parquet(delta_dir)
-
-    q = (
-        stats.writeStream.outputMode("update")
-        .foreachBatch(_append)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return delta_dir
-
-
-def current_stats(spark: SparkSession, delta_dir: str) -> DataFrame:
-    """LWW-materialize the stats changelog: last emission per conv_id."""
-    delta = spark.read.parquet(delta_dir)
-    return (
-        delta.groupBy("conv_id")
-        .agg(
-            F.max_by(
-                F.struct("sum_metric", "cnt", "max_metric"), F.col("_epoch")
-            ).alias("w")
-        )
-        .select("conv_id", "w.*")
-    )
-
-
-def cohort_members(
-    spark: SparkSession, delta_dir: str, rule: cohort.CohortRule
-) -> DataFrame:
-    """HAVING-filter the current stats → cohort conv_ids."""
-    stats = current_stats(spark, delta_dir)
-    if not rule.sub_params:
-        return stats.select("conv_id")
-    # the maintained stats columns ARE the cube partials — derive the
-    # dimension → column map from the one registry (cohort.DIMENSIONS)
-    col_for_dim = {
-        d: F.col(partial) for d, (_, _, partial) in cohort.DIMENSIONS.items()
-    }
-    cond = None
-    for sp in rule.sub_params:
-        c = cohort._OPS[sp.operator](col_for_dim[sp.dimension], F.lit(sp.value))
-        cond = c if cond is None else (cond & c)
-    return stats.where(cond).select("conv_id")
-
-
-# --- dynamic rules over a rule-independent cube (broadcast-state analog)
+#: the cube table's row type: events_cube's columns plus the stored bucket
+CUBE_DDL = (
+    "conv_id string, event_kind int, day timestamp,"
+    " sum_metric decimal(28,2), cnt bigint, max_metric decimal(18,2),"
+    " bucket int"
+)
+#: buckets of a NEW cube table (the table owns the value afterwards;
+#: ``compact(new_n_buckets=)`` re-buckets a grown one). The snapshot
+#: reads the whole cube every batch anyway, and at the sf0.001 cube
+#: (904 cells, ~30 KB) each extra bucket file is fixed cost: the
+#: dynamic-cohort tests ran 133 s at 2 against 150-200 s at 1 and
+#: 147-154 s at 8 (4 vCPUs).
+CUBE_BUCKETS = 2
+_CELL = ("conv_id", "event_kind", "day")
 
 
 def load_rules(path: str) -> dict[int, cohort.CohortRule]:
@@ -122,9 +72,7 @@ def load_rules(path: str) -> dict[int, cohort.CohortRule]:
     ids, deleting rule 0 renumbers every survivor and the transition
     history reads as a mass exit/enter that never happened (review
     finding). Write the file with an atomic rename (tmp + mv) — it is
-    re-read per micro-batch."""
-    import json
-
+    re-read per micro-batch; :func:`write_rules` does."""
     with open(path) as f:
         specs = json.load(f)
     out: dict[int, cohort.CohortRule] = {}
@@ -143,28 +91,52 @@ def load_rules(path: str) -> dict[int, cohort.CohortRule]:
     return out
 
 
-def cube_delta_dir(workdir: str) -> str:
-    return os.path.join(workdir, "cube_delta")
+def write_rules(path: str, rules: dict[int, cohort.CohortRule]) -> None:
+    """``{stable_id: CohortRule}`` → the wire shape :func:`load_rules`
+    parses, written atomically (tmp + os.replace)."""
+    specs = [
+        {
+            "id": rid,
+            "target": r.target,
+            "is_exist": r.is_exist,
+            "value_days": r.value_days,
+            "sub_params": [
+                [sp.dimension, sp.operator, sp.value] for sp in r.sub_params
+            ],
+        }
+        for rid, r in rules.items()
+    ]
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(specs, f)
+    os.replace(tmp, path)
 
 
 def members_dir(workdir: str) -> str:
     return os.path.join(workdir, "members")
 
 
-def current_cube(spark: SparkSession, delta_dir: str) -> DataFrame:
-    """LWW-materialize the cube changelog: the latest emission per
-    (conv_id, event_kind, day) cell — same max_by shape as the CDC
-    apply, keyed on the cube cell."""
-    delta = spark.read.parquet(delta_dir)
-    return (
-        delta.groupBy("conv_id", "event_kind", "day")
-        .agg(
-            F.max_by(
-                F.struct("sum_metric", "cnt", "max_metric"), F.col("_epoch")
-            ).alias("w")
-        )
-        .select("conv_id", "event_kind", "day", "w.*")
+def _cube_sink(workdir: str) -> GroupedReplaceParquetSink:
+    return GroupedReplaceParquetSink(
+        os.path.join(workdir, "cube"), n_buckets=CUBE_BUCKETS, schema_ddl=CUBE_DDL
     )
+
+
+def read_cube(spark: SparkSession, workdir: str) -> DataFrame:
+    """The committed cube: one row per (conv_id, event_kind, day) cell."""
+    return _cube_sink(workdir).read_view(spark)
+
+
+def _add_cells(stored: DataFrame, delta: DataFrame) -> DataFrame:
+    """``stored`` ⊕ ``delta`` per cube cell: each DIMENSIONS partial
+    re-aggregates algebraically (sum+sum, cnt+cnt, max of max), cast
+    back to the stored type (a decimal sum widens its precision)."""
+    types = dict(stored.dtypes)
+    parts = [
+        cohort._dim_cube_col(d).cast(types[partial]).alias(partial)
+        for d, (_, _, partial) in cohort.DIMENSIONS.items()
+    ]
+    return stored.unionByName(delta).groupBy(*_CELL).agg(*parts)
 
 
 def run_dynamic_cohorts(
@@ -173,27 +145,13 @@ def run_dynamic_cohorts(
     rules_path: str,
     workdir: str,
     now: str,
-    snapshot_every: int = 1,
 ) -> dict:
-    """The broadcast-state pattern, Structured-Streaming-first: maintain
-    the rule-independent cube (`cohort.events_cube` keys, update-mode)
-    and, per micro-batch, RELOAD the rule file and emit an epoch-keyed
-    membership snapshot evaluated on the cube so far. A rule change
-    lands on the next micro-batch — exactly the visibility Flink's
-    broadcast control stream gives — but the heavy state (the cube) is
-    rule-independent, so changing rules costs nothing: no state
-    restart, no re-aggregation, no checkpoint migration.
-
-    Exactly-once: the cube delta AND the membership snapshot for epoch
-    N are idempotent epoch-keyed directory overwrites (a replayed epoch
-    rewrites identical content); the checkpoint owns progress.
-
-    ``snapshot_every=N`` evaluates memberships only every Nth batch of
-    this run (the final drained state is ALWAYS snapshotted after the
-    stream ends): each evaluation re-reads the delta history, so
-    per-batch snapshots on a long spool cost O(batches²) I/O — thin
-    them out and run :func:`fold_cube_deltas` periodically to keep the
-    delta read bounded.
+    """Drain the envelope spool into the cube table and, per micro-batch,
+    RELOAD the rule file and write an epoch-keyed membership snapshot
+    evaluated on the committed cube. A rule change lands on the next
+    micro-batch — the visibility Flink's broadcast control stream
+    gives — and costs nothing: the cube is rule-independent, so there
+    is no state restart, re-aggregation or checkpoint migration.
 
     A torn/unparseable rule file (an operator saving non-atomically
     mid-batch) falls back to the last good rule set instead of killing
@@ -201,48 +159,25 @@ def run_dynamic_cohorts(
 
     Returns {"epochs": [...], "last_members": int, "rule_load_errors": n}.
     """
-    ckpt = os.path.join(workdir, "ck_dyn")
-    delta_dir = cube_delta_dir(workdir)
+    ckpt = os.path.join(workdir, "checkpoint")
+    cube = _cube_sink(workdir)
     mdir = members_dir(workdir)
     lastgood = os.path.join(workdir, "rules_lastgood.json")
     seen: list[int] = []
-    state = {"rules": {}, "loaded_once": False, "errors": 0, "batches": 0}
-
-    def _persist_lastgood() -> None:
-        # serialize the PARSED rule set, not a copy of the raw file: a
-        # non-atomic writer can tear rules_path between our parse and a
-        # copy (TOCTOU — review finding), which would persist a torn
-        # file as "last good". Re-emitting state["rules"] in the wire
-        # shape load_rules parses makes last-good by construction the
-        # set that actually loaded.
-        import json as _json
-
-        specs = [
-            {
-                "id": rid,
-                "target": r.target,
-                "is_exist": r.is_exist,
-                "value_days": r.value_days,
-                "sub_params": [
-                    [sp.dimension, sp.operator, sp.value]
-                    for sp in r.sub_params
-                ],
-            }
-            for rid, r in state["rules"].items()
-        ]
-        tmp = lastgood + ".tmp"
-        try:
-            with open(tmp, "w") as f:
-                _json.dump(specs, f)
-            os.replace(tmp, lastgood)
-        except OSError:
-            pass  # best-effort: the in-run fallback still works
+    state = {"rules": {}, "loaded_once": False, "errors": 0}
 
     def _rules() -> dict:
         try:
             state["rules"] = load_rules(rules_path)
             state["loaded_once"] = True
-            _persist_lastgood()
+            # persist the PARSED set, not a copy of the raw file: a
+            # non-atomic writer can tear rules_path between our parse
+            # and a copy (TOCTOU), so last-good is by
+            # construction the set that actually loaded
+            try:
+                write_rules(lastgood, state["rules"])
+            except OSError:
+                pass  # best-effort: the in-run fallback still works
         except (OSError, ValueError):
             # torn write or bad edit: keep serving the last good set
             state["errors"] += 1
@@ -265,102 +200,39 @@ def run_dynamic_cohorts(
             # last-good) but prior snapshots exist: keep the previous
             # epoch's snapshot rather than overwrite with zero members
             return
-        cur = current_cube(spark, delta_dir)
+        cur = cube.read_view(spark)
         members = cur.select("conv_id").distinct()
         out = cohort.evaluate_rules_cube(cur, members, rules, now)
         out.write.mode("overwrite").parquet(os.path.join(mdir, f"epoch={eid}"))
 
-    env = envelope_stream(spark, spool_dir)
-    events = cdc.derive_turn_events(env)
-    cube = cohort.events_cube(events)
-
-    def _batch(batch: DataFrame, epoch_id: int) -> None:
+    def _batch(events: DataFrame, epoch_id: int) -> None:
         eid = int(epoch_id)
-        batch.withColumn("_epoch", F.lit(eid)).write.mode("overwrite").parquet(
-            os.path.join(delta_dir, f"epoch={eid}")
+        delta = cohort.events_cube(events)
+        keys = delta.select("conv_id").distinct()
+        stored = cube.read_view(spark).join(
+            F.broadcast(keys), "conv_id", "left_semi"
         )
-        state["batches"] += 1
-        if state["batches"] % max(1, snapshot_every) == 0:
-            _snapshot(eid)
+        # a replayed epoch is skipped by the manifest: adds nothing twice
+        cube.replace_groups(keys, _add_cells(stored, delta), eid)
+        _snapshot(eid)
         seen.append(eid)
 
+    # the derivation is a stateless map, planned once on the stream; the
+    # cube aggregation runs per batch, so the stream keeps no state
     q = (
-        cube.writeStream.outputMode("update")
-        .foreachBatch(_batch)
+        cdc.derive_turn_events(envelope_stream(spark, spool_dir))
+        .writeStream.foreachBatch(_batch)
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-    # the DRAINED state always gets a snapshot (snapshot_every thinning
-    # must not leave the final memberships stale)
-    if seen and not os.path.isdir(
-        os.path.join(mdir, f"epoch={seen[-1]}")
-    ):
-        _snapshot(seen[-1])
-    elif not seen:
-        # a prior run crashed between awaitTermination and its final
-        # _snapshot: this (no-new-data) re-run sees epochs=[] but the
-        # members may lag the cube deltas — catch them up here
-        if os.path.isdir(delta_dir):
-            delta_epochs = [
-                int(n.split("=", 1)[1])
-                for n in os.listdir(delta_dir)
-                if n.startswith("epoch=")
-            ]
-            m_epochs = _member_epochs(workdir)
-            if delta_epochs and (
-                not m_epochs or m_epochs[-1] < max(delta_epochs)
-            ):
-                _snapshot(max(delta_epochs))
     last = read_members(spark, workdir)
     return {
         "epochs": seen,
         "last_members": last.count() if last is not None else 0,
         "rule_load_errors": state["errors"],
     }
-
-
-def fold_cube_deltas(spark: SparkSession, workdir: str) -> dict:
-    """Compact the cube-delta history: fold every epoch dir into ONE
-    base dir holding the current cube (each cell keeping its max
-    ``_epoch``), then delete the folded dirs. Keeps :func:`current_cube`
-    reads O(cube) instead of O(all deltas ever) on a long-running
-    stream — the cube analog of the sink's ``compact()``. Run it
-    between stream invocations (single-writer window).
-
-    Crash-safe without a swap: the fold is written as a NEW epoch-style
-    dir at a negative id (stream epochs are ≥ 0) and the old dirs are
-    deleted afterwards; a crash in between leaves duplicates whose
-    per-cell (value, _epoch) pairs are identical, which the LWW max_by
-    in :func:`current_cube` collapses deterministically."""
-    delta_dir = cube_delta_dir(workdir)
-    if not os.path.isdir(delta_dir):
-        return {"folded": False, "reason": "no deltas"}
-    old = [n for n in os.listdir(delta_dir) if n.startswith("epoch=")]
-    if len(old) <= 1:
-        return {"folded": False, "reason": "already compact"}
-    # next fold id: one below the lowest existing (first fold: -1)
-    fold_id = min(int(n.split("=", 1)[1]) for n in old) - 1
-    folded = (
-        spark.read.parquet(delta_dir)
-        .groupBy("conv_id", "event_kind", "day")
-        .agg(
-            F.max_by(
-                F.struct("sum_metric", "cnt", "max_metric"), F.col("_epoch")
-            ).alias("w"),
-            F.max("_epoch").alias("_epoch"),
-        )
-        .select("conv_id", "event_kind", "day", "w.*", "_epoch")
-    )
-    folded.write.mode("overwrite").parquet(
-        os.path.join(delta_dir, f"epoch={fold_id}")
-    )
-    import shutil
-
-    for n in old:
-        shutil.rmtree(os.path.join(delta_dir, n))
-    return {"folded": True, "into": fold_id, "removed_dirs": len(old)}
 
 
 def _member_epochs(workdir: str) -> list[int]:

@@ -39,10 +39,11 @@ touching K distinct conv_ids touches ≤ min(K, n_buckets) buckets:
 
 - **trickle batches** (K ≪ table keys — the steady-state stream):
   rewrite bytes = K × table/n_buckets, so MORE buckets ⇒ cheaper
-  commits, linearly. Measured (bench.py --merge-amplification, 2M-row
-  table, 428-row batch over 8 convs): 3.5 s at n_buckets=32 → 1.8 s at
-  256. With n_buckets ≲ K every micro-batch rewrites the whole table —
-  cost ∝ table size, the round-1 judge's finding.
+  commits, linearly. Measured on a 2M-row table, 428-row batch over 8
+  convs: 3.5 s at n_buckets=32 → 1.8 s at 256; perfbench's
+  ``tail_trickle`` workload measures this regime (``sink.merge_p50_s``,
+  ``sink.rewrite_amp``). With n_buckets ≲ K every micro-batch rewrites
+  the whole table — cost ∝ table size.
 - **bulk replay** (every batch touches all buckets, e.g. backfill):
   rewrite bytes = table size regardless; extra buckets only add
   per-file overhead. Measured: the sf0.1 full-replay stream runs
@@ -423,10 +424,15 @@ class MergeParquetSink:
 
         The epoch window keeps every reserved id (< 0: bootstrap, expiry,
         DLQ replay) and the newest ``EPOCH_WINDOW`` stream ids. Replaying
-        a stream epoch older than the window re-applies it, which is
-        still safe for both tables: the LWW ord makes re-merging rows the
-        state sink already holds a no-op, and the view is recomputed from
-        committed state, so a re-replace rewrites the keys' current rows.
+        a stream epoch older than the window re-applies it. That is safe
+        for the LWW state sink (re-merging rows it already holds is a
+        no-op) and for a view recomputed from committed state (a
+        re-replace rewrites the keys' current rows), but NOT for an
+        additive table such as the cohort cube, whose re-applied epoch
+        would count its cells twice. The cube is safe because Spark
+        re-runs only the last uncommitted batch of its checkpoint, and
+        that batch is always inside the window: the checkpoint and the
+        table are a pair, moved, reset or deleted together.
         """
         version = manifest["version"] + 1
         verdir = f"v{version}-{'compact' if epoch_id is None else epoch_id}"

@@ -30,6 +30,7 @@ sys.path.insert(
 from pyspark.sql import SparkSession  # noqa: E402
 
 from flink_cdc_mysql_sink_to_mysql_spark.operators import cdc, cohort  # noqa: E402
+from flink_cdc_mysql_sink_to_mysql_spark.plans import heap  # noqa: E402
 from flink_cdc_mysql_sink_to_mysql_spark.sources.transcripts import (  # noqa: E402
     mongo_changelog,
     mysql_changelog,
@@ -55,6 +56,12 @@ def main() -> None:
     spark = SparkSession.builder.appName("cohort").getOrCreate()
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.sparkContext.setLogLevel("ERROR")
+    heap.check_driver_heap(
+        spark,
+        args.sf_dir,
+        job="cohort_job",
+        needs="the cached turn events every rule scans",
+    )
 
     env = cdc.union_feeds(
         mysql_changelog(spark, args.sf_dir), mongo_changelog(spark, args.sf_dir)

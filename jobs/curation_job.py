@@ -48,6 +48,7 @@ from flink_cdc_mysql_sink_to_mysql_spark.operators import (  # noqa: E402
     dedup,
     examples,
 )
+from flink_cdc_mysql_sink_to_mysql_spark.plans import heap  # noqa: E402
 from flink_cdc_mysql_sink_to_mysql_spark.session import (  # noqa: E402
     read_parquet_repaired,
 )
@@ -185,32 +186,6 @@ def run(spark: SparkSession, sf_dir: str, workdir: str) -> dict:
     return stats
 
 
-#: measured floor: the sf10 funnel (500k docs) OOMs the spark-submit
-#: default 1 GiB driver heap mid-pipeline (BENCH/BASELINE.md §2b²) —
-#: fail fast with the exact flag instead of dying 2 minutes in
-_MIN_DRIVER_HEAP_BYTES = 3 * 1024**3
-_LARGE_INPUT_BYTES = 256 * 1024**2
-
-
-def _check_driver_heap(spark: SparkSession, sf_dir: str) -> None:
-    """Undersized-driver fail-fast (shared helper: plans/heap.py —
-    measured here: the sf10 funnel OOMs the 1 GiB spark-submit default,
-    BENCH/BASELINE.md §2b²). Module-level bounds kept for testability."""
-    from flink_cdc_mysql_sink_to_mysql_spark.plans.heap import (
-        check_driver_heap,
-    )
-
-    check_driver_heap(
-        spark,
-        os.path.join(sf_dir, "documents.parquet"),
-        job="curation_job",
-        needs="the clustering/packing funnel (measured: the sf10 run "
-        "OOMs at the 1 GiB default, BENCH/BASELINE.md §2b²)",
-        min_heap_bytes=_MIN_DRIVER_HEAP_BYTES,
-        large_input_bytes=_LARGE_INPUT_BYTES,
-    )
-
-
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.001")
@@ -220,7 +195,14 @@ def main() -> None:
     spark = SparkSession.builder.appName("curation").getOrCreate()
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.sparkContext.setLogLevel("ERROR")
-    _check_driver_heap(spark, args.sf_dir)
+    # measured floor: the sf10 funnel (500k docs) OOMs the spark-submit
+    # default 1 GiB driver heap mid-pipeline (BENCH/BASELINE.md §2b²)
+    heap.check_driver_heap(
+        spark,
+        os.path.join(args.sf_dir, "documents.parquet"),
+        job="curation_job",
+        needs="the clustering/packing funnel",
+    )
     stats = run(spark, args.sf_dir, args.workdir)
     print(json.dumps({**stats, "workdir": args.workdir}))
     spark.stop()

@@ -77,8 +77,7 @@ def main() -> None:
         # the memory-sensitive paths: --check re-signatures the whole
         # drained state and exceptAlls it against the view both ways;
         # --serve-pairs runs the band self-join + verify. Fail fast
-        # with the exact remedy instead of OOMing mid-recompute
-        # (curation_job._check_driver_heap pattern, review finding).
+        # with the exact remedy instead of OOMing mid-recompute.
         heap.check_driver_heap(
             spark,
             os.path.join(args.sf_dir, "events.parquet"),

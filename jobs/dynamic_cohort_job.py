@@ -2,20 +2,22 @@
 """spark-submit entrypoint for DYNAMIC cohort rules over the streaming
 cube (streaming/cohort_stream.run_dynamic_cohorts — the Flink
 broadcast-state analog; rules live in a JSON file reloaded per
-micro-batch, the heavy state is the rule-independent cube).
+micro-batch, the heavy state is the rule-independent cube table under
+<workdir>/cube).
 
     python -m zipfile -c /tmp/engine.zip flink_cdc_mysql_sink_to_mysql_spark
     spark-submit --master local[8] --py-files /tmp/engine.zip \
         jobs/dynamic_cohort_job.py --sf-dir /root/testdata/sf0.001 \
         --workdir /tmp/dyncohort-run --rules /tmp/rules.json
 
-Re-running the same workdir resumes the cube checkpoint: only new spool
-chunks process, and the CURRENT rule file is evaluated on the next
-micro-batch — change rules between runs (or between batches) with no
-state restart. `--init-rules` seeds the rule file from the reference's
-two inline fixtures (UserGroupClickHouseJob.java:65-78) as a starting
-point an operator then edits. Membership snapshots land under
-<workdir>/members/epoch=N; ENTER/EXIT transitions derive at read time.
+Re-running the same workdir resumes from the stream checkpoint: only new
+spool chunks process, each adds its cells to the cube table, and the
+CURRENT rule file is evaluated on the next micro-batch — change rules
+between runs (or between batches) with no state restart. `--init-rules`
+seeds the rule file from the reference's two inline fixtures
+(UserGroupClickHouseJob.java:65-78) as a starting point an operator
+then edits. Membership snapshots land under <workdir>/members/epoch=N
+(one per micro-batch); ENTER/EXIT transitions derive at read time.
 Prints ONE JSON summary line.
 """
 
@@ -62,21 +64,6 @@ def main() -> None:
         help="rule-evaluation 'today' (deterministic runs)",
     )
     ap.add_argument(
-        "--snapshot-every",
-        type=int,
-        default=1,
-        help="evaluate memberships every Nth micro-batch (the drained "
-        "state always snapshots) — thin this out on long spools: each "
-        "evaluation re-reads the delta history",
-    )
-    ap.add_argument(
-        "--fold-cube",
-        action="store_true",
-        help="after the stream drains, fold the cube-delta history "
-        "into one base dir (cohort_stream.fold_cube_deltas) — keeps "
-        "current_cube reads O(cube) on a long-running workdir",
-    )
-    ap.add_argument(
         "--prune-members",
         type=int,
         default=None,
@@ -88,21 +75,7 @@ def main() -> None:
     args = ap.parse_args()
 
     if args.init_rules and not os.path.exists(args.rules):
-        specs = [
-            {
-                "id": i,
-                "target": r.target,
-                "is_exist": r.is_exist,
-                "value_days": r.value_days,
-                "sub_params": [
-                    [sp.dimension, sp.operator, sp.value]
-                    for sp in r.sub_params
-                ],
-            }
-            for i, r in enumerate(cohort.REFERENCE_RULES)
-        ]
-        with open(args.rules, "w") as f:
-            json.dump(specs, f)
+        cs.write_rules(args.rules, dict(enumerate(cohort.REFERENCE_RULES)))
 
     spark = SparkSession.builder.appName("dynamic-cohort").getOrCreate()
     spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -111,7 +84,7 @@ def main() -> None:
         spark,
         args.sf_dir,
         job="dynamic_cohort_job",
-        needs="the streaming cube and the per-batch membership snapshots",
+        needs="the cube table and the per-batch membership snapshots",
     )
 
     spool = os.path.join(args.workdir, "spool")
@@ -120,15 +93,7 @@ def main() -> None:
             mysql_changelog(spark, args.sf_dir), spool, n_chunks=args.chunks
         )
 
-    out = cs.run_dynamic_cohorts(
-        spark,
-        spool,
-        args.rules,
-        args.workdir,
-        args.now,
-        snapshot_every=args.snapshot_every,
-    )
-    fold = cs.fold_cube_deltas(spark, args.workdir) if args.fold_cube else None
+    out = cs.run_dynamic_cohorts(spark, spool, args.rules, args.workdir, args.now)
     members = cs.read_members(spark, args.workdir)
     per_rule = (
         {
@@ -154,7 +119,6 @@ def main() -> None:
                 "rule_load_errors": out["rule_load_errors"],
                 "members_per_rule": per_rule,
                 "transitions": n_transitions,
-                "fold": fold,
                 "pruned_snapshots": pruned,
                 "workdir": args.workdir,
                 "rules": args.rules,

@@ -86,7 +86,6 @@ def main() -> None:
         # --check replays the whole spool through the batch twin and
         # exceptAlls it against the view both ways — fail fast with the
         # exact remedy instead of OOMing mid-recompute
-        # (curation_job._check_driver_heap pattern, review finding)
         from flink_cdc_mysql_sink_to_mysql_spark.plans import heap
 
         heap.check_driver_heap(

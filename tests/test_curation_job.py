@@ -1,5 +1,6 @@
 """End-to-end curation pipeline job (jobs/curation_job.py): quality →
-dedup-clusters → sample → pack (+ SFT from the CDC-materialized state)."""
+dedup-clusters → sample → pack (+ SFT from the CDC-materialized state),
+and the driver-heap fail-fast the spark-submit jobs share."""
 
 from __future__ import annotations
 
@@ -62,32 +63,59 @@ def test_packed_output_is_shuffled_deterministically(spark, tmp_path):
     assert bad.count() == 0
 
 
-def test_driver_heap_failfast_message(spark, tmp_path, monkeypatch):
-    """Undersized driver heap + large input → one clear SystemExit
-    naming --driver-memory BEFORE the funnel starts (review finding:
-    the sf10 run otherwise OOMs 2 minutes in)."""
+def _heap_guard_exits_before_output(monkeypatch, job_main, argv, workdir):
+    """Run a job's ``main`` with ``heap.check_driver_heap`` replaced by
+    a spy that refuses like an undersized heap would; the job must exit
+    before it writes anything. Returns the spy's (input, job) calls."""
     import pytest
 
+    from flink_cdc_mysql_sink_to_mysql_spark.plans import heap
+
+    calls = []
+
+    def refuse(spark, input_path, job, needs, **bounds):
+        calls.append((input_path, job))
+        raise SystemExit(f"{job}: relaunch with --driver-memory 8g")
+
+    monkeypatch.setattr(heap, "check_driver_heap", refuse)
+    monkeypatch.setattr(sys, "argv", ["job", "--sf-dir", SF, *argv])
+    with pytest.raises(SystemExit, match="--driver-memory 8g"):
+        job_main()
+    assert not os.path.exists(workdir)
+    return calls
+
+
+def test_driver_heap_failfast_message(spark, tmp_path, monkeypatch):
+    """The curation funnel checks the driver heap against the documents
+    input BEFORE it starts (the sf10 run otherwise OOMs 2 minutes in);
+    the message and bounds are the shared helper's."""
     import curation_job as cj
 
-    # pretend the input is large and the heap small
-    monkeypatch.setattr(cj, "_LARGE_INPUT_BYTES", 1)
-    monkeypatch.setattr(cj, "_MIN_DRIVER_HEAP_BYTES", 1 << 60)
-    with pytest.raises(SystemExit, match="--driver-memory 8g"):
-        cj._check_driver_heap(spark, "/root/testdata/sf0.001")
-    # adequately sized heap: no-op
-    monkeypatch.setattr(cj, "_MIN_DRIVER_HEAP_BYTES", 1)
-    cj._check_driver_heap(spark, "/root/testdata/sf0.001")
+    wd = str(tmp_path / "wd")
+    calls = _heap_guard_exits_before_output(
+        monkeypatch, cj.main, ["--workdir", wd], wd
+    )
+    assert calls == [(os.path.join(SF, "documents.parquet"), "curation_job")]
+
+
+def test_cohort_job_checks_driver_heap_before_output(spark, tmp_path, monkeypatch):
+    """cohort_job caches the derived events, so it fails fast on an
+    undersized driver heap before any cohort is written."""
+    import cohort_job
+
+    wd = str(tmp_path / "wd")
+    calls = _heap_guard_exits_before_output(
+        monkeypatch, cohort_job.main, ["--workdir", wd], wd
+    )
+    assert calls == [(SF, "cohort_job")]
 
 
 def test_shared_heap_failfast_helper(spark):
     """plans/heap.py check_driver_heap — the single-sourced fail-fast
-    the --check paths of dedup_index_job / ivm_view_job now share
-    (round-4 review: apply the curation_job pattern to every
-    memory-sensitive entrypoint): undersized heap + large input exits
-    with the job name and the exact --driver-memory remedy; an
-    adequately sized heap or small input is a no-op; an unreadable
-    input defers to its own later error."""
+    every memory-sensitive spark-submit job calls: undersized heap +
+    large input exits with the job name and the exact --driver-memory
+    remedy; an adequately sized heap or small input is a no-op; an
+    unreadable input defers to its own later error."""
     import pytest
 
     from flink_cdc_mysql_sink_to_mysql_spark.plans import heap

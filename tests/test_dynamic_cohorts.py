@@ -162,9 +162,10 @@ def test_streamed_cube_equals_batch_cube(spark, tmp_path):
     wd = str(tmp_path / "wd")
     cs.run_dynamic_cohorts(spark, str(spool), str(rules_path), wd, NOW)
 
-    got = cs.current_cube(spark, cs.cube_delta_dir(wd)).select(
-        "conv_id", "event_kind", "day", "sum_metric", "cnt", "max_metric"
-    )
+    _assert_cube_equals_batch(cs.read_cube(spark, wd), env)
+
+
+def _assert_cube_equals_batch(got, env):
     want = cohort.events_cube(cdc.derive_turn_events(env))
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
@@ -174,8 +175,7 @@ def test_rule_file_hazards_and_fold(spark, tmp_path):
     """Operator-facing robustness: an EMPTY rule file yields an empty
     snapshot (not a crash); a TORN rule file falls back to the last
     good set; stable ids survive a rule deletion without remapping;
-    fold_cube_deltas compacts the delta history without changing the
-    served cube."""
+    compacting the cube table does not change the served cube."""
     env = mysql_changelog(spark, SF_SMOKE).orderBy("seq").limit(300)
     spool = tmp_path / "spool"
     env.repartition(3).write.mode("overwrite").parquet(str(spool))
@@ -205,43 +205,19 @@ def test_rule_file_hazards_and_fold(spark, tmp_path):
     # last good set was EMPTY (from step 1's run) → snapshot still empty
     assert cs.read_members(spark, wd).count() == 0
 
-    # 4) fold: the served cube is identical before and after
-    before = sorted(
-        map(tuple, cs.current_cube(spark, cs.cube_delta_dir(wd)).collect())
-    )
-    res = cs.fold_cube_deltas(spark, wd)
-    assert res["folded"] and res["removed_dirs"] >= 2
-    after = sorted(
-        map(tuple, cs.current_cube(spark, cs.cube_delta_dir(wd)).collect())
-    )
-    assert before == after
-    # idempotent second fold: nothing left to do
-    assert cs.fold_cube_deltas(spark, wd)["folded"] is False
+    # 4) fold: compaction + vacuum leave the served cube identical
+    before = sorted(map(tuple, cs.read_cube(spark, wd).collect()))
+    assert _compact_cube(spark, wd)["compacted"]
+    assert sorted(map(tuple, cs.read_cube(spark, wd).collect())) == before
 
 
-def test_snapshot_every_still_snapshots_final_state(spark, tmp_path):
-    env = mysql_changelog(spark, SF_SMOKE).orderBy("seq").limit(300)
-    spool = tmp_path / "spool"
-    env.repartition(3).write.mode("overwrite").parquet(str(spool))
-    rules_path = tmp_path / "rules.json"
-    _write_rules(rules_path, [cohort.CohortRule(4, True, 3650)])
-    wd = str(tmp_path / "wd")
-    out = cs.run_dynamic_cohorts(
-        spark, str(spool), str(rules_path), wd, NOW, snapshot_every=10
-    )
-    assert len(out["epochs"]) == 3
-    # only the final drained state was snapshotted, and it matches batch
-    assert cs._member_epochs(wd) == [out["epochs"][-1]]
-    events = cdc.derive_turn_events(env)
-    want = _ids(
-        cohort.evaluate_rule(
-            events.select("conv_id").distinct(),
-            events,
-            cohort.CohortRule(4, True, 3650),
-            NOW,
-        )
-    )
-    assert _ids(cs.read_members(spark, wd)) == want
+def _compact_cube(spark, wd):
+    """The cube table's own maintenance: one compacted version, older
+    versions vacuumed."""
+    sink = cs._cube_sink(wd)
+    res = sink.compact(spark)
+    sink.vacuum()
+    return res
 
 
 def test_prune_member_snapshots(spark, tmp_path):
@@ -262,9 +238,9 @@ def test_prune_member_snapshots(spark, tmp_path):
 
 
 def test_fold_then_resume_keeps_cube_correct(spark, tmp_path):
-    """fold_cube_deltas between stream invocations must not perturb a
-    later resume: new epochs land beside the folded base dir and the
-    served cube still equals the batch cube of the FULL feed."""
+    """Compacting the cube table between stream invocations must not
+    perturb a later resume: new epochs add to the compacted cells and
+    the served cube still equals the batch cube of the FULL feed."""
     env = mysql_changelog(spark, SF_SMOKE).orderBy("seq").limit(400).persist()
     first, rest = env.limit(250), env.subtract(env.limit(250))
     spool = tmp_path / "spool"
@@ -274,18 +250,12 @@ def test_fold_then_resume_keeps_cube_correct(spark, tmp_path):
     wd = str(tmp_path / "wd")
 
     cs.run_dynamic_cohorts(spark, str(spool), str(rules_path), wd, NOW)
-    assert cs.fold_cube_deltas(spark, wd)["folded"]
+    assert _compact_cube(spark, wd)["compacted"]
 
     rest.coalesce(1).write.mode("append").parquet(str(spool))
     out = cs.run_dynamic_cohorts(spark, str(spool), str(rules_path), wd, NOW)
-    assert out["epochs"]  # resumed past the fold
-
-    got = cs.current_cube(spark, cs.cube_delta_dir(wd)).select(
-        "conv_id", "event_kind", "day", "sum_metric", "cnt", "max_metric"
-    )
-    want = cohort.events_cube(cdc.derive_turn_events(env))
-    assert got.exceptAll(want).count() == 0
-    assert want.exceptAll(got).count() == 0
+    assert out["epochs"]  # resumed past the compaction
+    _assert_cube_equals_batch(cs.read_cube(spark, wd), env)
     env.unpersist()
 
 
@@ -353,25 +323,60 @@ def test_torn_first_load_no_lastgood_keeps_prior_snapshot(spark, tmp_path):
     assert _ids(cs.read_members(spark, wd)) == good
 
 
-def test_drained_rerun_catches_up_lagging_members(spark, tmp_path):
-    """Crash between awaitTermination and the final _snapshot with
-    snapshot_every>1: a later re-run over the drained spool (epochs=[])
-    must still snapshot so read_members catches up to the cube."""
-    import shutil
+def test_crash_between_cube_commit_and_snapshot_replays_once(
+    spark, tmp_path, monkeypatch
+):
+    """A crash after the last epoch's cube commit and before its member
+    snapshot: the re-run replays that epoch, the manifest's epoch skip
+    keeps the additive commit from landing twice (cnt not doubled), and
+    the snapshot is rewritten from the committed cube."""
+    import os
 
-    env = mysql_changelog(spark, SF_SMOKE).orderBy("seq").limit(300)
+    import pytest
+
+    env = mysql_changelog(spark, SF_SMOKE).orderBy("seq").limit(300).persist()
     spool = tmp_path / "spool"
     env.repartition(3).write.mode("overwrite").parquet(str(spool))
+    rules = [
+        cohort.CohortRule(4, True, 3650),
+        cohort.CohortRule(4, True, 3650, (cohort.SubParam(2, 2, 20),)),
+    ]
     rules_path = tmp_path / "rules.json"
-    _write_rules(rules_path, [cohort.CohortRule(4, True, 3650)])
+    _write_rules(rules_path, rules)
     wd = str(tmp_path / "wd")
-    cs.run_dynamic_cohorts(
-        spark, str(spool), str(rules_path), wd, NOW, snapshot_every=10
-    )
-    want = _ids(cs.read_members(spark, wd))
-    # simulate the crash: the final snapshot never landed
-    shutil.rmtree(cs.members_dir(wd))
+
+    real, calls = cohort.evaluate_rules_cube, []
+
+    def crash_on_third(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == 3:
+            raise RuntimeError("injected crash before the snapshot")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(cohort, "evaluate_rules_cube", crash_on_third)
+    with pytest.raises(Exception, match="injected crash"):
+        cs.run_dynamic_cohorts(spark, str(spool), str(rules_path), wd, NOW)
+    manifest_path = os.path.join(wd, "cube", "_manifest.json")
+    with open(manifest_path) as f:
+        assert json.load(f)["epochs"] == [0, 1, 2]  # epoch 2's cube landed
+    assert cs._member_epochs(wd) == [0, 1]  # ... and its snapshot did not
+
     out = cs.run_dynamic_cohorts(spark, str(spool), str(rules_path), wd, NOW)
-    assert out["epochs"] == []  # spool fully drained — no new batches
-    assert out["last_members"] > 0
-    assert _ids(cs.read_members(spark, wd)) == want
+    assert out["epochs"] == [2]  # Spark re-ran the uncommitted batch
+    try:
+        _assert_cube_equals_batch(cs.read_cube(spark, wd), env)
+        events = cdc.derive_turn_events(env)
+        members = events.select("conv_id").distinct()
+        got = cs.read_members(spark, wd)
+        for rid, rule in enumerate(rules):
+            want = _ids(cohort.evaluate_rule(members, events, rule, NOW))
+            assert _ids(got.where(F.col("rule_id") == rid)) == want
+    finally:
+        env.unpersist()
+    with open(manifest_path) as f:
+        assert [r["epoch"] for r in json.load(f)["log"]] == [0, 1, 2]
+    # one copy of the cube: the checkpoint keeps only source offsets
+    assert sorted(os.listdir(wd)) == [
+        "checkpoint", "cube", "members", "rules_lastgood.json"
+    ]
+    assert not os.path.exists(os.path.join(wd, "checkpoint", "state"))

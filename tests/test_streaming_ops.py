@@ -260,11 +260,23 @@ def test_sliding_windows_stream_matches_batch(spark, tmp_path, spool):
     assert got == want and len(got) > 0
 
 
-def test_incremental_cohort_matches_batch(spark, tmp_path, spool):
-    """Continuously-maintained cohort (update-mode stats + changelog
-    materialization) equals the one-shot batch cohort after drain."""
-    from flink_cdc_mysql_sink_to_mysql_spark.operators import cdc, cohort
+def _one_rule_cohort(spark, spool, rule, now, wd):
+    """The dynamic-rule cohort stream with a one-rule file → rule 0's
+    members after the drain, and the run's summary."""
     from flink_cdc_mysql_sink_to_mysql_spark.streaming import cohort_stream
+
+    rules_path = os.path.join(wd, "rules.json")
+    os.makedirs(wd, exist_ok=True)
+    cohort_stream.write_rules(rules_path, {0: rule})
+    out = cohort_stream.run_dynamic_cohorts(spark, spool, rules_path, wd, now)
+    members = cohort_stream.read_members(spark, wd).where("rule_id = 0")
+    return {r.conv_id for r in members.collect()}, out
+
+
+def test_incremental_cohort_matches_batch(spark, tmp_path, spool):
+    """Continuously-maintained cohort (the cube table + a per-batch
+    rule evaluation) equals the one-shot batch cohort after drain."""
+    from flink_cdc_mysql_sink_to_mysql_spark.operators import cdc, cohort
 
     now = "2024-01-30 00:00:00"
     rule = cohort.CohortRule(
@@ -277,13 +289,7 @@ def test_incremental_cohort_matches_batch(spark, tmp_path, spool):
             cohort.SubParam(3, 3, 5000),
         ),
     )
-    delta = cohort_stream.cohort_stats_stream(
-        spark, spool, rule, now, str(tmp_path / "coh")
-    )
-    got = {
-        r.conv_id
-        for r in cohort_stream.cohort_members(spark, delta, rule).collect()
-    }
+    got, _ = _one_rule_cohort(spark, spool, rule, now, str(tmp_path / "coh"))
     env = mysql_changelog(spark, SF)
     want = {
         r.conv_id
@@ -295,26 +301,26 @@ def test_incremental_cohort_matches_batch(spark, tmp_path, spool):
 
 
 def test_incremental_cohort_resumes_from_checkpoint(spark, tmp_path, spool):
-    """Re-running the cohort stats stream with the same checkpoint and
-    no new spool data processes nothing (no duplicate deltas); appending
-    a new chunk updates only affected conversations."""
+    """Re-running the cohort stream with the same checkpoint and no new
+    spool data processes nothing: no epoch, no cube commit, the same
+    members."""
     from flink_cdc_mysql_sink_to_mysql_spark.operators import cohort
     from flink_cdc_mysql_sink_to_mysql_spark.streaming import cohort_stream
 
     now = "2024-01-30 00:00:00"
     rule = cohort.CohortRule(target=1, is_exist=True, value_days=14)
     wd = str(tmp_path / "coh")
-    delta = cohort_stream.cohort_stats_stream(spark, spool, rule, now, wd)
-    n1 = spark.read.parquet(delta).count()
-    # resume with nothing new → zero new delta rows
-    cohort_stream.cohort_stats_stream(spark, spool, rule, now, wd)
-    n2 = spark.read.parquet(delta).count()
-    assert n2 == n1
-    members_before = {
-        r.conv_id
-        for r in cohort_stream.cohort_members(spark, delta, rule).collect()
-    }
-    assert len(members_before) > 0
+    first, out1 = _one_rule_cohort(spark, spool, rule, now, wd)
+    assert out1["epochs"] == [0, 1, 2] and len(first) > 0
+    manifest = os.path.join(wd, "cube", "_manifest.json")
+    before = os.path.getmtime(manifest)
+    cube = sorted(map(tuple, cohort_stream.read_cube(spark, wd).collect()))
+    # resume with nothing new → no epoch and an untouched cube table
+    again, out2 = _one_rule_cohort(spark, spool, rule, now, wd)
+    assert out2["epochs"] == []
+    assert os.path.getmtime(manifest) == before
+    assert sorted(map(tuple, cohort_stream.read_cube(spark, wd).collect())) == cube
+    assert again == first
 
 
 def test_dedup_envelopes_drops_cross_batch_redelivery(spark, tmp_path):
