@@ -388,9 +388,14 @@ def run_serve_maintained(sf_dir: str, cpus: int) -> dict:
             schema_ddl=semsearch.INDEX_CELLS_VIEW_DDL,
         )
         t0 = time.perf_counter()
-        semsearch.embedding_index_stream(
-            spark, spool, st1, emb_ix, os.path.join(wd, "ck_emb"),
-            codebook=codebook,
+        pl.materialize_stream(
+            spark, spool, st1, os.path.join(wd, "ck_emb"),
+            view=(
+                emb_ix,
+                lambda live: semsearch.assign_cells(
+                    semsearch.embedding_rows(live), codebook
+                ),
+            ),
         )
         out["build_embedding_index_s"] = round(time.perf_counter() - t0, 3)
 
@@ -402,8 +407,9 @@ def run_serve_maintained(sf_dir: str, cpus: int) -> dict:
             schema_ddl=dd.MINHASH_INDEX_VIEW_DDL,
         )
         t0 = time.perf_counter()
-        dd.minhash_index_stream(
-            spark, spool, st2, band_ix, os.path.join(wd, "ck_band")
+        pl.materialize_stream(
+            spark, spool, st2, os.path.join(wd, "ck_band"),
+            view=(band_ix, dd.minhash_index_rows),
         )
         out["build_band_index_s"] = round(time.perf_counter() - t0, 3)
 

@@ -1232,6 +1232,12 @@ def minhash_index_rows(live: DataFrame, n: int = INDEX_N) -> DataFrame:
     the index is ~100 bytes/conversation regardless of transcript size,
     so at 10^12 turns it is orders of magnitude smaller than the corpus
     and its bucket self-join is the only wide op near-dup serving needs.
+
+    Maintained under CDC by ``pipeline.materialize_stream(...,
+    view=(sink, minhash_index_rows))`` into a
+    ``GroupedReplaceParquetSink(root, schema_ddl=MINHASH_INDEX_VIEW_DDL)``
+    (``jobs/ivm_view_job.py --view minhash``): an edit re-hashes just
+    that conversation, a delete drops its bands.
     """
     sigs = _minhash_from_shingle_rows(shingle_rows(conv_texts(live), n))
     return _band_rows(sigs).select(
@@ -1297,9 +1303,8 @@ def near_dup_pairs_from_index(
     the documented precision trade for O(candidates) cost.
 
     ``n`` MUST equal the n the index was built with: the index rows
-    record it (shingle_n), and a mismatch — or a legacy index that
-    predates the column — raises instead of silently verifying
-    candidates against a different Jaccard definition.
+    record it (shingle_n), and a mismatch raises instead of silently
+    verifying candidates against a different Jaccard definition.
 
     ``mode_out``: pass a dict to receive the RESOLVED verify mode
     (``mode_out["verify"]`` ∈ {"exact", "estimate"}; under auto also
@@ -1320,12 +1325,6 @@ def near_dup_pairs_from_index(
     if verify not in ("auto", "exact", "estimate"):
         raise ValueError(
             f"verify must be 'auto', 'exact' or 'estimate', got {verify!r}"
-        )
-    if "shingle_n" not in index.columns:
-        raise ValueError(
-            "index does not record its shingle width (shingle_n column "
-            "missing — built by a pre-evolution minhash_index_rows?); "
-            "rebuild the index before serving"
         )
     index = index.localCheckpoint(eager=True)
     built_ns = [r[0] for r in index.select("shingle_n").distinct().collect()]
@@ -1419,35 +1418,3 @@ def near_dup_pairs_from_index(
         F.col("doc_b").alias("conv_b"),
         "jaccard",
     )
-
-
-def minhash_index_stream(
-    spark,
-    spool_dir: str,
-    state_sink,
-    index_sink,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = 1,
-    n: int = INDEX_N,
-):
-    """Streaming-maintained near-dup index: per micro-batch, MERGE the
-    changelog into the state table and re-signature ONLY the touched
-    conversations into a grouped-replace band-index view — an edit
-    re-hashes just that conversation, a delete drops its bands, replays
-    epoch-skip on both sinks (the IVM machinery of streaming/ivm.py).
-    After any drained stream the index equals
-    ``minhash_index_rows(live_state)`` exactly, so
-    :func:`near_dup_pairs_from_index` serves the same pairs the batch
-    pipeline would compute — without re-shingling the corpus.
-
-    Construct the view sink as ``GroupedReplaceParquetSink(root,
-    schema_ddl=MINHASH_INDEX_VIEW_DDL)``.
-    """
-    from ..streaming.pipeline import materialize_stream
-
-    materialize_stream(
-        spark, spool_dir, state_sink, checkpoint_dir,
-        max_files_per_trigger=max_files_per_trigger,
-        view=(index_sink, lambda live: minhash_index_rows(live, n)),
-    )
-    return index_sink

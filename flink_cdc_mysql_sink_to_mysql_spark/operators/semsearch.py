@@ -100,8 +100,16 @@ def _ranked_tail_sql(topk: int) -> str:
 def embedding_rows(state: DataFrame) -> DataFrame:
     """LWW state → the embedding-index row form (conv_id, turn_idx,
     emb, nrm): a narrow per-row projection, shared by the batch search
-    and the streaming-maintained index (:func:`embedding_index_stream`)
-    so both populate identical rows."""
+    and the streaming-maintained index so both populate identical rows.
+
+    The index is maintained under CDC by ``pipeline.materialize_stream(
+    ..., view=(sink, embedding_rows))`` into a
+    ``GroupedReplaceParquetSink(root, schema_ddl=INDEX_VIEW_DDL)``: edits
+    re-embed, deletes drop the vector. With a FROZEN codebook
+    (:func:`index_codebook`, sampled ONCE at bootstrap) the recompute is
+    ``assign_cells(embedding_rows(live), codebook)`` into
+    ``INDEX_CELLS_VIEW_DDL``, and :func:`search_index_pruned` serves
+    nprobe-pruned top-k from the view."""
     return state.select(
         "conv_id",
         "turn_idx",
@@ -115,47 +123,6 @@ INDEX_VIEW_DDL = (
     "conv_id string, turn_idx int, emb array<double>, nrm double,"
     " bucket int"
 )
-
-
-def embedding_index_stream(
-    spark,
-    spool_dir: str,
-    state_sink,
-    index_sink,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = 1,
-    codebook: DataFrame | None = None,
-):
-    """Streaming-maintained embedding index: per micro-batch, MERGE the
-    changelog into the state table and re-embed ONLY the touched
-    conversations into a grouped-replace index view — edits re-embed,
-    deletes drop the vector, replays are epoch-skipped on both sinks
-    (the IVM machinery of streaming/ivm.py, with embedding as the
-    per-conv recompute). :func:`search_index` then serves top-k without
-    re-embedding the corpus; after any drained stream the index equals
-    ``embedding_rows(state)`` exactly (tests/test_semsearch.py).
-
-    Construct the sink with ``GroupedReplaceParquetSink(root,
-    schema_ddl=INDEX_VIEW_DDL)`` — or, with a FROZEN ``codebook``
-    (:func:`index_codebook` / a trained equivalent, sampled ONCE at
-    bootstrap), ``schema_ddl=INDEX_CELLS_VIEW_DDL``: each touched
-    vector is then also cell-assigned against the constant broadcast
-    codebook and :func:`search_index_pruned` serves nprobe-pruned
-    top-k from the view.
-    """
-    from ..streaming.pipeline import materialize_stream
-
-    recompute = (
-        embedding_rows
-        if codebook is None
-        else (lambda live: assign_cells(embedding_rows(live), codebook))
-    )
-    materialize_stream(
-        spark, spool_dir, state_sink, checkpoint_dir,
-        max_files_per_trigger=max_files_per_trigger,
-        view=(index_sink, recompute),
-    )
-    return index_sink
 
 
 def search(
@@ -180,7 +147,7 @@ def search(
     - no ``index`` → one-shot embed + scan of the live state
       (:func:`search_live_state`), with a log line noting what it
       costs relative to maintaining a view
-      (:func:`embedding_index_stream`).
+      (:func:`embedding_rows`).
 
     All three return the identical (q_conv, q_turn, conv_id, turn_idx,
     cos, rank) contract; flat-vs-one-shot equality is pinned in
@@ -201,8 +168,8 @@ def search(
             log.info(
                 "semsearch.search: codebook supplied but the index has no "
                 "'cell' column (flat INDEX_VIEW_DDL build?) — serving the "
-                "full-scan kernel; rebuild the index with codebook= on "
-                "embedding_index_stream to get the IVF-pruned serve"
+                "full-scan kernel; maintain the index with the "
+                "assign_cells recompute to get the IVF-pruned serve"
             )
         return search_index(
             index.select("conv_id", "turn_idx", "emb", "nrm"), topk, q_cap
@@ -210,8 +177,8 @@ def search(
     log.info(
         "semsearch.search: no maintained index supplied — one-shot "
         "embed+scan of the full state (measured 26x the maintained-view "
-        "serve at sf10; maintain one with embedding_index_stream and "
-        "pass its read_view here)"
+        "serve at sf10; maintain one with the embedding_rows view "
+        "recompute and pass its read_view here)"
     )
     return search_live_state(state, topk, q_cap)
 
@@ -233,7 +200,7 @@ def search_index(
     q_cap: int = SEARCH_Q_CAP,
 ) -> DataFrame:
     """Top-k over pre-embedded index rows (conv_id, turn_idx, emb, nrm)
-    — e.g. the view :func:`embedding_index_stream` maintains — skipping
+    — e.g. the maintained view of :func:`embedding_rows` — skipping
     the embed pass entirely."""
     q = F.broadcast(
         emb.where((F.col("turn_idx") == 0) & F.col("conv_id").endswith("0"))

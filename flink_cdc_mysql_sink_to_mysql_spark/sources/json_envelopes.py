@@ -260,75 +260,6 @@ def schema_drift_stats(
     )
 
 
-# ---------------------------------------------------------------------------
-# Mongo-oplog dialect (the second wire format — D7,
-# UserReviewBehaviorDebeziumDeserializer.java:32-42)
-# ---------------------------------------------------------------------------
-
-from ..streaming.pipeline import MONGO_DDL  # noqa: E402
-
-MONGO_JSON_DDL = MONGO_DDL + f", {_CORRUPT} string"
-
-MONGO_COLS = ("operationType", "fullDocument")
-
-
-def parse_mongo_lines(raw: DataFrame, value_col: str = "value") -> DataFrame:
-    """Mongo change-stream JSON lines → typed oplog columns +
-    ``_quarantine_reason``.
-
-    Only two reasons exist for this dialect: ``empty_input`` and
-    ``unparseable``. A null/unknown ``operationType`` or an absent
-    ``fullDocument`` are REPRESENTABLE states the structured feed also
-    carries — normalize_mongo's insert-only filter and the null-ts drop
-    (D7/D9) own those semantics; quarantining them here would fork the
-    two paths. (On a real Mongo feed the extended-JSON scalars are keyed
-    ``$oid``/``$date``; the in-sandbox wire format uses the same
-    ``oid``/``date`` field names as the structured feed — a rename in
-    the DDL is the only change a production deployment makes.)
-    """
-    e = F.from_json(F.col(value_col), MONGO_JSON_DDL, _PARSE_OPTIONS)
-    return raw.select(
-        F.col(value_col).alias("_raw"), e.alias("_e0")
-    ).select(
-        # same parse-once Generate barrier as parse_envelope_lines
-        "_raw", F.explode(F.array("_e0")).alias("_e")
-    ).select(
-        "_raw",
-        F.col("_e.operationType").alias("operationType"),
-        F.col("_e.fullDocument").alias("fullDocument"),
-        F.when(
-            F.col("_raw").isNull() | (F.trim(F.col("_raw")) == ""),
-            F.lit("empty_input"),
-        )
-        .when(F.col(f"_e.{_CORRUPT}").isNotNull(), F.lit("unparseable"))
-        .alias("_quarantine_reason"),
-    )
-
-
-def split_mongo_quarantine(
-    parsed: DataFrame, strict: bool = False
-) -> tuple[DataFrame, DataFrame]:
-    """(good oplog rows, dead-letter rows) — mongo-dialect twin of
-    :func:`split_quarantine`."""
-    reason = F.col("_quarantine_reason")
-    good = parsed.where(reason.isNull()).select(*MONGO_COLS)
-    bad = parsed.where(reason.isNotNull()).select(
-        "_raw", reason.alias("reason")
-    )
-    if strict:
-        bad = bad.limit(0)
-    return good, bad
-
-
-def render_mongo_json(oplog: DataFrame) -> DataFrame:
-    """Typed oplog rows → wire-format JSON lines."""
-    return oplog.select(
-        F.to_json(
-            F.struct(*[F.col(c) for c in MONGO_COLS]), WIRE_OPTIONS
-        ).alias("value")
-    )
-
-
 def render_envelope_json(envelopes: DataFrame) -> DataFrame:
     """Typed envelopes → wire-format JSON lines (``value`` string).
 

@@ -26,6 +26,12 @@ Design (the exactly-once shape that needs NO retraction arithmetic):
    table (delete-all-rows-of-key ∪ insert-recomputed), epoch-skipped
    like the state sink.
 
+The recompute is any ``live turns -> view rows`` function: this
+module's ``window_rows`` (tumbling/sliding) and ``session_rows``,
+``dedup.minhash_index_rows`` (near-dup band index) or
+``semsearch.embedding_rows`` (embedding index). ``jobs/ivm_view_job.py``
+runs the first three as a deployed view.
+
 Recompute-from-state makes every epoch idempotent by construction: a
 replay re-reads the same committed state and re-derives byte-identical
 window rows, so crashes between the two commits converge (pinned by
@@ -57,6 +63,18 @@ from . import pipeline as pl
 from .sink import MergeParquetSink
 
 
+#: view-sink schemas incl. the sink's stored bucket column: the
+#: tumbling/sliding window counts and the turn-gap sessions
+WINDOW_VIEW_DDL = (
+    "conv_id string, win_start timestamp, win_end timestamp,"
+    " n_turns long, bucket int"
+)
+SESSION_VIEW_DDL = (
+    "conv_id string, sess_start timestamp, sess_end timestamp,"
+    " n_turns long, first_turn int, last_turn int, bucket int"
+)
+
+
 @dataclass
 class GroupedReplaceParquetSink(MergeParquetSink):
     """Keyed table with replace-by-group commits (same manifest /
@@ -68,15 +86,12 @@ class GroupedReplaceParquetSink(MergeParquetSink):
     those keys — a key with no rows is a full delete).
 
     ``schema_ddl`` fixes the table's row type (reads of an empty /
-    partial table need it); the default is the tumbling-window view.
+    partial table need it); the default is the window-count view.
     """
 
     #: row schema incl. the stored bucket column (field, not class
-    #: constant: the session view and future per-key views differ)
-    schema_ddl: str = (
-        "conv_id string, win_start timestamp, win_end timestamp,"
-        " n_turns long, bucket int"
-    )
+    #: constant: each per-key view has its own)
+    schema_ddl: str = WINDOW_VIEW_DDL
 
     @property
     def _SCHEMA(self) -> str:  # noqa: N802 (mirrors the parent constant)
@@ -87,7 +102,7 @@ class GroupedReplaceParquetSink(MergeParquetSink):
     ) -> dict:
         spark = rows.sparkSession
         t0 = time.time()
-        manifest = self._open(spark, epoch_id)
+        manifest = self._open(epoch_id)
         if manifest is None:
             return self._replayed(epoch_id)
 
@@ -121,12 +136,16 @@ def windowed_state_batch(envelopes: DataFrame, window: str = "10 minutes") -> Da
     after the stream drains, whatever the update/delete interleaving."""
     from ..operators.cdc import apply_changelog
 
-    return _window_rows(apply_changelog(envelopes), window)
+    return window_rows(apply_changelog(envelopes), window)
 
 
-def _window_rows(live: DataFrame, window: str, slide: str | None = None) -> DataFrame:
-    # with slide, F.window(ts, W, S) multi-assigns each turn to its W/S
-    # covering windows — the recompute stays one hash agg per touched conv
+def window_rows(live: DataFrame, window: str, slide: str | None = None) -> DataFrame:
+    """Per-conv window counts of the live turns: the tumbling view, or
+    with ``slide`` the sliding one. ``F.window(ts, W, S)`` assigns each
+    turn to its W/S covering windows, so a ts move leaves every window
+    the turn covered and enters every window it now covers, with no
+    per-membership retraction bookkeeping: the recompute stays one hash
+    agg per touched conv."""
     win = F.window("ts", window, slide) if slide else F.window("ts", window)
     return (
         live.groupBy("conv_id", win.alias("win"))
@@ -140,18 +159,13 @@ def _window_rows(live: DataFrame, window: str, slide: str | None = None) -> Data
     )
 
 
-def sliding_state_batch(
-    envelopes: DataFrame,
-    window: str = "10 minutes",
-    slide: str = "5 minutes",
-) -> DataFrame:
-    """Batch twin / oracle for :func:`sliding_state_stream`."""
-    from ..operators.cdc import apply_changelog
-
-    return _window_rows(apply_changelog(envelopes), window, slide)
-
-
-def _session_rows(live: DataFrame, gap: str) -> DataFrame:
+def session_rows(live: DataFrame, gap: str) -> DataFrame:
+    """Turn-gap sessions of the live turns — the view append-mode
+    session windows cannot maintain: a DELETED middle turn can SPLIT a
+    session in two, and an update that moves a turn into a gap can
+    MERGE two sessions; recompute-from-state yields the exact
+    post-change sessions either way (tests/test_ivm.py). Its sink
+    takes ``schema_ddl=SESSION_VIEW_DDL``."""
     return (
         live.groupBy("conv_id", F.session_window("ts", gap).alias("sw"))
         .agg(
@@ -170,12 +184,6 @@ def _session_rows(live: DataFrame, gap: str) -> DataFrame:
     )
 
 
-SESSION_VIEW_DDL = (
-    "conv_id string, sess_start timestamp, sess_end timestamp,"
-    " n_turns long, first_turn int, last_turn int, bucket int"
-)
-
-
 def windowed_state_stream(
     spark: SparkSession,
     spool_dir: str,
@@ -189,63 +197,6 @@ def windowed_state_stream(
     pl.materialize_stream(
         spark, spool_dir, state_sink, checkpoint_dir,
         max_files_per_trigger=max_files_per_trigger,
-        view=(window_sink, lambda live: _window_rows(live, window)),
+        view=(window_sink, lambda live: window_rows(live, window)),
     )
     return window_sink
-
-
-def sliding_state_stream(
-    spark: SparkSession,
-    spool_dir: str,
-    state_sink: MergeParquetSink,
-    window_sink: GroupedReplaceParquetSink,
-    checkpoint_dir: str,
-    window: str = "10 minutes",
-    slide: str = "5 minutes",
-    max_files_per_trigger: int | None = 1,
-):
-    """Sliding-window view maintained under upserts/deletes: a ts move
-    retracts the turn from EVERY window it covered and adds it to every
-    window it now covers — W/S memberships per turn, all handled by the
-    same recompute-from-state commit (no per-membership retraction
-    bookkeeping)."""
-    pl.materialize_stream(
-        spark, spool_dir, state_sink, checkpoint_dir,
-        max_files_per_trigger=max_files_per_trigger,
-        view=(window_sink, lambda live: _window_rows(live, window, slide)),
-    )
-    return window_sink
-
-
-def session_state_stream(
-    spark: SparkSession,
-    spool_dir: str,
-    state_sink: MergeParquetSink,
-    session_sink: GroupedReplaceParquetSink,
-    checkpoint_dir: str,
-    gap: str = "30 minutes",
-    max_files_per_trigger: int | None = 1,
-):
-    """Turn-gap sessionization maintained under upserts/deletes — the
-    view append-mode session windows cannot express: a DELETED middle
-    turn can SPLIT a session in two, and an update that moves a turn
-    into a gap can MERGE two sessions; recompute-from-state yields the
-    exact post-change sessions either way (tests/test_ivm.py).
-
-    Construct the sink with the session schema::
-
-        GroupedReplaceParquetSink(root, schema_ddl=SESSION_VIEW_DDL)
-    """
-    pl.materialize_stream(
-        spark, spool_dir, state_sink, checkpoint_dir,
-        max_files_per_trigger=max_files_per_trigger,
-        view=(session_sink, lambda live: _session_rows(live, gap)),
-    )
-    return session_sink
-
-
-def sessions_state_batch(envelopes: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """Batch twin / oracle for :func:`session_state_stream`."""
-    from ..operators.cdc import apply_changelog
-
-    return _session_rows(apply_changelog(envelopes), gap)

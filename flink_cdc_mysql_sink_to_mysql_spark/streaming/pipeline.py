@@ -718,11 +718,22 @@ def spool_changelog(
     """Write a bounded changelog into the spool as n_chunks files in seq
     order — a deterministic replayable 'binlog' the stream consumes.
     Chunks split by seq range so arrival order ≈ change order (the
-    reference's binlog-order delivery, parallelism-1 analog)."""
+    reference's binlog-order delivery, parallelism-1 analog).
+
+    Spools once, crash-safe: the last step writes the ``_complete``
+    marker into the dir (the file source skips ``_`` names). A dir with
+    the marker is returned as it is; a dir without it is a partial
+    spool from a killed run and is rewritten from scratch (the input is
+    deterministic), so a stream never replays a prefix of the
+    changelog as if it were the whole."""
     import glob
     import shutil
 
-    os.makedirs(spool_dir, exist_ok=True)
+    marker = os.path.join(spool_dir, "_complete")
+    if os.path.exists(marker):
+        return sorted(glob.glob(os.path.join(spool_dir, "chunk-*.parquet")))
+    shutil.rmtree(spool_dir, ignore_errors=True)
+    os.makedirs(spool_dir)
     df = envelopes.withColumn(
         "_chunk", F.ntile(n_chunks).over(Window.orderBy(order_by))
     )
@@ -739,4 +750,6 @@ def spool_changelog(
         os.replace(part, p)
         shutil.rmtree(tmp)
         paths.append(p)
+    with open(marker, "w"):
+        pass
     return paths

@@ -353,26 +353,12 @@ class MergeParquetSink:
             return None
         return self._read_paths(spark, rels)
 
-    def _verify_base_against_data(self, spark: SparkSession, manifest: dict) -> None:
-        """Refuse to resume a legacy (pre-n_buckets) manifest unless the
-        constructor base is provably consistent with the stored data."""
-        table = self._read_paths(spark, list(manifest["buckets"].values()))
-        bad = table.where(F.col("bucket") != self._bucket()).count()
-        if bad:
-            raise ValueError(
-                f"manifest at {self.root} predates n_buckets tracking and "
-                f"{bad} stored rows are inconsistent with n_buckets="
-                f"{self.n_buckets}; resuming would strand stale keys in "
-                "never-reloaded buckets. Re-open the sink with the "
-                "n_buckets the table was created with."
-            )
-
     # -- copy-on-write commit ----------------------------------------------
     def _bucket(self):
         """The bucket of a row: pmod(xxhash64(conv_id), n_buckets)."""
         return F.pmod(F.xxhash64("conv_id"), F.lit(self.n_buckets)).cast("int")
 
-    def _open(self, spark: SparkSession, epoch_id: int | None) -> dict | None:
+    def _open(self, epoch_id: int | None) -> dict | None:
         """First half of every copy-on-write commit (MERGE, group
         replace, compact): load the manifest and pin the table-owned
         n_buckets and evolved schema. Returns None when ``epoch_id`` is
@@ -387,17 +373,13 @@ class MergeParquetSink:
         # keys — the exactly-once invariant breaks without any error).
         stored = manifest.get("n_buckets")
         if stored is None and manifest["buckets"]:
-            # Legacy manifest: committed buckets but no persisted base
-            # (written before n_buckets was recorded). Adopting the
-            # constructor default blind would be the exact violation the
-            # guard exists to prevent, so VERIFY the constructor base
-            # against the stored bucket column: exactly-once resume under
-            # base B needs every stored row to sit in bucket pmod(hash, B)
-            # — if that holds, deltas under B always reload the bucket
-            # holding any stale copy of their key. One-time full scan;
-            # the manifest records n_buckets afterwards.
-            self._verify_base_against_data(spark, manifest)
-            stored = self.n_buckets
+            # committed buckets with no recorded base: adopting the
+            # constructor value blind is the violation described above
+            raise ValueError(
+                f"manifest at {self._manifest_path()} holds buckets but no "
+                "n_buckets; the table's bucket base is unknown, so it "
+                "cannot be resumed"
+            )
         if stored is not None:
             self.n_buckets = stored
         manifest["n_buckets"] = self.n_buckets
@@ -499,8 +481,8 @@ class MergeParquetSink:
         record {epoch, buckets, delta_rows, version, buckets_rewritten,
         wall_s}, the same dict the commit stores in the manifest log. A
         replay of a committed epoch returns that logged record with
-        ``skipped: True``; when the manifest holds no record for it,
-        ``buckets`` lists every stored bucket (a superset of the epoch's).
+        ``skipped: True``; a committed epoch without a logged record
+        raises.
 
         Nothing is cached: ``batch`` is evaluated twice, once by the
         touched-bucket collect and once by the write. A caller whose
@@ -508,7 +490,7 @@ class MergeParquetSink:
         """
         spark = batch.sparkSession
         t0 = time.time()
-        manifest = self._open(spark, epoch_id)
+        manifest = self._open(epoch_id)
         if manifest is None:
             return self._replayed(epoch_id)
 
@@ -539,8 +521,10 @@ class MergeParquetSink:
         for r in reversed(manifest.get("log", [])):
             if r.get("epoch") == epoch_id:
                 return {**r, "skipped": True}
-        buckets = sorted(map(int, manifest["buckets"]))
-        return {"epoch": epoch_id, "buckets": buckets, "skipped": True}
+        raise ValueError(
+            f"epoch {epoch_id} is committed in {self._manifest_path()} "
+            "but its log holds no record of it"
+        )
 
     # -- maintenance ---------------------------------------------------------
     def vacuum(self, dry_run: bool = False) -> dict:
@@ -636,7 +620,7 @@ class MergeParquetSink:
         is untouched: replays of already-committed epochs stay no-ops.
         """
         t0 = time.time()
-        manifest = self._open(spark, None)
+        manifest = self._open(None)
         if not manifest["buckets"]:
             return {"compacted": False, "reason": "empty table"}
         table = self._read_paths(spark, list(manifest["buckets"].values()))

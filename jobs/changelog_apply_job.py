@@ -33,6 +33,7 @@ sys.path.insert(
 )
 
 from pyspark.sql import SparkSession  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
 
 from flink_cdc_mysql_sink_to_mysql_spark.sources.transcripts import (  # noqa: E402
     mongo_changelog,
@@ -193,11 +194,6 @@ def main() -> None:
     if os.path.exists(topo_path):
         with open(topo_path) as f:
             prior_topo = json.load(f)
-        # workdirs created before the flag existed ran without bootstrap
-        prior_topo.setdefault("bootstrap", False)
-        # ... and before sf_dir was pinned (a different --sf-dir on an
-        # existing workdir would silently replay the OLD spool)
-        prior_topo.setdefault("sf_dir", args.sf_dir)
         if prior_topo != topo:
             raise SystemExit(
                 f"workdir {args.workdir} was created with {prior_topo}; "
@@ -209,40 +205,20 @@ def main() -> None:
         with open(topo_path, "w") as f:
             json.dump(topo, f)
 
-    def _spool_once(feed_fn, d: str, **kw) -> None:
-        """Spool exactly once per workdir, crash-safe: a non-empty dir
-        without the completion marker is a PARTIAL spool from a killed
-        run — re-spool from scratch (deterministic input) rather than
-        silently replaying a prefix of the changelog."""
-        marker = d + ".complete"
-        if os.path.exists(marker):
-            return
-        if os.path.isdir(d):
-            import shutil
-
-            shutil.rmtree(d)
-        paths = pl.spool_changelog(feed_fn(spark, args.sf_dir), d, args.chunks, **kw)
-        with open(marker, "w") as f:
-            json.dump({"chunks": len(paths)}, f)
-
+    feed = mysql_changelog(spark, args.sf_dir)
     if args.bootstrap:
         # tail spool excludes the snapshot image — it arrives via the
         # one-commit batch bootstrap below (overlap would also be fine:
         # the MERGE's LWW ord guard reconciles re-delivered envelopes)
-        def _tail_feed(s, d):
-            from pyspark.sql import functions as F
-
-            return mysql_changelog(s, d).where(F.col("op") != "r")
-
-        _spool_once(_tail_feed, spool)
-    else:
-        _spool_once(mysql_changelog, spool)
+        feed = feed.where(F.col("op") != "r")
+    pl.spool_changelog(feed, spool, args.chunks)
     mongo_spool = None
     if args.with_mongo:
         mongo_spool = os.path.join(args.workdir, "spool_mongo")
-        _spool_once(
-            mongo_changelog,
+        pl.spool_changelog(
+            mongo_changelog(spark, args.sf_dir),
             mongo_spool,
+            args.chunks,
             order_by="fullDocument.create_time.date",
         )
 
@@ -256,8 +232,6 @@ def main() -> None:
     prior = _lineage_lines(lineage)
     bootstrap_info = None
     if args.bootstrap:
-        from pyspark.sql import functions as F
-
         snapshot_env = mysql_changelog(spark, args.sf_dir).where(
             F.col("op") == "r"
         )

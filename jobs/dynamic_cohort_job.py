@@ -88,10 +88,9 @@ def main() -> None:
     )
 
     spool = os.path.join(args.workdir, "spool")
-    if not os.path.isdir(spool):
-        pl.spool_changelog(
-            mysql_changelog(spark, args.sf_dir), spool, n_chunks=args.chunks
-        )
+    pl.spool_changelog(
+        mysql_changelog(spark, args.sf_dir), spool, n_chunks=args.chunks
+    )
 
     out = cs.run_dynamic_cohorts(spark, spool, args.rules, args.workdir, args.now)
     members = cs.read_members(spark, args.workdir)

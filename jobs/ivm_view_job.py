@@ -1,7 +1,9 @@
 #!/usr/bin/env python
-"""spark-submit entrypoint: maintain an always-fresh windowed view of
-the transcript changelog under upserts/deletes (streaming/ivm.py), in
-the north-rule deployment shape.
+"""spark-submit entrypoint: maintain one per-conversation view of the
+transcript changelog under upserts/deletes (streaming/ivm.py), in the
+north-rule deployment shape. The views: tumbling or sliding window
+counts, turn-gap sessions, or the MinHash-LSH near-dup band index
+(operators/dedup.py).
 
 Package the engine and submit::
 
@@ -12,20 +14,24 @@ Package the engine and submit::
         --view session
 
 Each micro-batch MERGEs the changelog into the LWW state table AND
-recomputes the touched conversations' window rows into a
-grouped-replace view sink — both epoch-guarded, so the pair stays
-transactionally consistent and a replay is a no-op on both
-(tests/test_ivm.py pins the semantics; this job is the operational
-wrapper). Re-running with the same --workdir resumes from the
-checkpoint.
+recomputes the touched conversations' view rows into a grouped-replace
+view sink (``pipeline.materialize_stream(..., view=...)``) — both
+epoch-guarded, so the pair stays transactionally consistent and a
+replay is a no-op on both (tests/test_ivm.py pins the semantics; this
+job is the operational wrapper). Re-running with the same --workdir
+resumes from the checkpoint.
 
-``--check`` recomputes the view from the drained state table through
-the batch twin and fails the run on any mismatch — a self-verifying
-deployment (the maintained view must equal a from-scratch recompute,
+``--check`` recomputes the view from scratch — the view's recompute
+over ``cdc.apply_changelog`` of the whole spool — and fails the run on
+any row missing or extra either way (the maintained view must equal it,
 whatever the update/delete interleaving was).
 
-Prints ONE JSON summary line: state/view row counts, microbatches,
-and the check verdict.
+``--serve-pairs`` (``--view minhash`` only) serves near-dup pairs from
+the index and reports the pair count and the RESOLVED verify mode
+(``--verify-mode estimate`` is the heavy-duplication scale path).
+
+Prints ONE JSON summary line: state/view row counts, the check verdict
+and the served pairs.
 """
 
 from __future__ import annotations
@@ -41,6 +47,8 @@ sys.path.insert(
 
 from pyspark.sql import SparkSession  # noqa: E402
 
+from flink_cdc_mysql_sink_to_mysql_spark.operators import cdc, dedup  # noqa: E402
+from flink_cdc_mysql_sink_to_mysql_spark.plans import heap  # noqa: E402
 from flink_cdc_mysql_sink_to_mysql_spark.sources.transcripts import (  # noqa: E402
     mysql_changelog,
 )
@@ -51,10 +59,20 @@ from flink_cdc_mysql_sink_to_mysql_spark.streaming.sink import (  # noqa: E402
 )
 
 VIEWS = {
-    # view kind -> (stream fn, kwargs, view-sink ddl or None for default)
-    "tumbling": (ivm.windowed_state_stream, {}, None),
-    "sliding": (ivm.sliding_state_stream, {}, None),
-    "session": (ivm.session_state_stream, {}, ivm.SESSION_VIEW_DDL),
+    # view kind -> (recompute(live turns) -> view rows, view-sink ddl)
+    "tumbling": (
+        lambda live: ivm.window_rows(live, "10 minutes"),
+        ivm.WINDOW_VIEW_DDL,
+    ),
+    "sliding": (
+        lambda live: ivm.window_rows(live, "10 minutes", "5 minutes"),
+        ivm.WINDOW_VIEW_DDL,
+    ),
+    "session": (
+        lambda live: ivm.session_rows(live, "30 minutes"),
+        ivm.SESSION_VIEW_DDL,
+    ),
+    "minhash": (dedup.minhash_index_rows, dedup.MINHASH_INDEX_VIEW_DDL),
 }
 
 
@@ -63,37 +81,59 @@ def main() -> None:
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.001")
     ap.add_argument("--workdir", required=True)
     ap.add_argument("--chunks", type=int, default=4)
-    ap.add_argument("--n-buckets", type=int, default=32)
+    ap.add_argument(
+        "--n-buckets",
+        type=int,
+        default=32,
+        help="hash buckets of the state table and of the view table",
+    )
     ap.add_argument(
         "--view",
         choices=sorted(VIEWS),
         default="tumbling",
         help="which maintained view to run (tumbling/sliding window "
-        "counts or turn-gap sessionization)",
+        "counts, turn-gap sessions, or the near-dup band index)",
     )
     ap.add_argument(
         "--check",
         action="store_true",
         help="after the stream drains, recompute the view from the "
-        "state table via the batch twin and fail on any mismatch",
+        "whole spool and fail on any mismatch",
+    )
+    ap.add_argument(
+        "--serve-pairs",
+        action="store_true",
+        help="--view minhash: serve near-dup pairs from the index",
+    )
+    ap.add_argument(
+        "--verify-mode",
+        choices=["auto", "exact", "estimate"],
+        default=None,
+        help="--view minhash: pair verification — auto (default: exact "
+        "up to the candidate bound, then the signature-estimate scale "
+        "path), exact Jaccard always, or estimate always (see "
+        "near_dup_pairs_from_index)",
     )
     args = ap.parse_args()
+    if (args.serve_pairs or args.verify_mode) and args.view != "minhash":
+        ap.error("--serve-pairs and --verify-mode need --view minhash")
+    verify_mode = args.verify_mode or "auto"
 
     spark = SparkSession.builder.appName("ivm-view").getOrCreate()
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.sparkContext.setLogLevel("ERROR")
-    if args.check:
-        # --check replays the whole spool through the batch twin and
-        # exceptAlls it against the view both ways — fail fast with the
-        # exact remedy instead of OOMing mid-recompute
-        from flink_cdc_mysql_sink_to_mysql_spark.plans import heap
-
+    if args.check or args.serve_pairs:
+        # --check replays the whole spool through the recompute and
+        # exceptAlls it against the view both ways; --serve-pairs runs
+        # the band self-join + verify. Fail fast with the exact remedy
+        # instead of OOMing mid-recompute.
         heap.check_driver_heap(
             spark,
             os.path.join(args.sf_dir, "events.parquet"),
             job="ivm_view_job",
-            needs="the --check recompute (batch-twin replay of the "
-            "full spool + two exceptAll passes)",
+            needs="the --check/--serve-pairs recompute (from-scratch "
+            "recompute of the full spool + two exceptAll passes, or the "
+            "band self-join)",
         )
 
     os.makedirs(args.workdir, exist_ok=True)
@@ -113,56 +153,57 @@ def main() -> None:
             json.dump(topo, f)
 
     spool = os.path.join(args.workdir, "spool")
-    marker = spool + ".complete"
-    if not os.path.exists(marker):
-        pl.spool_changelog(
-            mysql_changelog(spark, args.sf_dir), spool, n_chunks=args.chunks
-        )
-        with open(marker, "w") as f:
-            f.write("ok")
-
+    pl.spool_changelog(
+        mysql_changelog(spark, args.sf_dir), spool, n_chunks=args.chunks
+    )
     state = MergeParquetSink(
         os.path.join(args.workdir, "state"), n_buckets=args.n_buckets
     )
-    stream_fn, kwargs, ddl = VIEWS[args.view]
-    view_sink = (
-        ivm.GroupedReplaceParquetSink(
-            os.path.join(args.workdir, "view"), schema_ddl=ddl
-        )
-        if ddl
-        else ivm.GroupedReplaceParquetSink(os.path.join(args.workdir, "view"))
+    recompute, ddl = VIEWS[args.view]
+    view_sink = ivm.GroupedReplaceParquetSink(
+        os.path.join(args.workdir, "view"),
+        n_buckets=args.n_buckets,
+        schema_ddl=ddl,
     )
-    stream_fn(
+    pl.materialize_stream(
         spark,
         spool,
         state,
-        view_sink,
         os.path.join(args.workdir, "checkpoint"),
-        **kwargs,
+        view=(view_sink, recompute),
     )
 
+    view = view_sink.read_view(spark)
     out = {
         "view": args.view,
         "state_rows": state.snapshot(spark).count(),
-        "view_rows": view_sink.read_view(spark).count(),
+        "view_rows": view.count(),
         "workdir": args.workdir,
     }
     if args.check:
-        twin = {
-            "tumbling": ivm.windowed_state_batch,
-            "sliding": ivm.sliding_state_batch,
-            "session": ivm.sessions_state_batch,
-        }[args.view](spark.read.parquet(os.path.join(spool, "*.parquet")))
-        got = view_sink.read_view(spark)
-        missing = twin.exceptAll(got).count()
-        extra = got.exceptAll(twin).count()
+        want = recompute(cdc.apply_changelog(spark.read.parquet(spool)))
+        missing = want.exceptAll(view).count()
+        extra = view.exceptAll(want).count()
         out["check"] = {"missing": missing, "extra": extra}
         if missing or extra:
             print(json.dumps(out))
             raise SystemExit(
-                f"maintained {args.view} view diverged from the batch "
-                f"twin: {missing} missing / {extra} extra rows"
+                f"maintained {args.view} view diverged from its "
+                f"recompute: {missing} missing / {extra} extra rows"
             )
+    if args.serve_pairs:
+        mode: dict = {}
+        pairs = dedup.near_dup_pairs_from_index(
+            view, state.snapshot(spark), verify=verify_mode, mode_out=mode
+        )
+        out["pairs"] = pairs.count()
+        # record the RESOLVED mode — "auto" resolves to exact/estimate
+        # at the candidate bound, and the served pair semantics depend
+        # on which path ran
+        out["verify_mode"] = mode["verify"]
+        out["verify_mode_requested"] = verify_mode
+        if "n_candidates" in mode:
+            out["band_candidates"] = mode["n_candidates"]
     print(json.dumps(out))
     spark.stop()
 

@@ -1,6 +1,7 @@
 """Streaming-maintained conversation-grain near-dup index
 (operators/dedup.py: conv_texts / minhash_index_rows /
-near_dup_pairs_from_index / minhash_index_stream) — the dedup analog of
+near_dup_pairs_from_index; the CDC runner maintains the index with
+minhash_index_rows as its view recompute) — the dedup analog of
 the maintained embedding index: the band index follows the CDC state
 under inserts, edits, and deletes, and serving pairs from it equals the
 batch pipeline. Oracle parity for the batch form runs in
@@ -16,6 +17,7 @@ from flink_cdc_mysql_sink_to_mysql_spark.operators import cdc, dedup
 from flink_cdc_mysql_sink_to_mysql_spark.sources.transcripts import (
     changelog_envelopes,
 )
+from flink_cdc_mysql_sink_to_mysql_spark.streaming import pipeline as pl
 from flink_cdc_mysql_sink_to_mysql_spark.streaming.ivm import (
     GroupedReplaceParquetSink,
 )
@@ -78,6 +80,11 @@ def test_maintained_index_follows_cdc(spark, tmp_path):
     )
     ckpt = str(tmp_path / "ckpt")
 
+    def drain():
+        pl.materialize_stream(
+            spark, spool, st, ckpt, view=(ix, dedup.minhash_index_rows)
+        )
+
     # chunk 0: two near-identical convs + one distinct
     _env(
         spark,
@@ -87,7 +94,7 @@ def test_maintained_index_follows_cdc(spark, tmp_path):
             ("c", "cC", 0, OTHER, 102),
         ],
     ).coalesce(1).write.parquet(spool)
-    dedup.minhash_index_stream(spark, spool, st, ix, ckpt)
+    drain()
 
     def _check_stream_equals_batch():
         got = ix.read_view(spark)
@@ -105,7 +112,7 @@ def test_maintained_index_follows_cdc(spark, tmp_path):
     _env(
         spark, [("u", "cB", 0, OTHER + " and even more unrelated words", 200)]
     ).coalesce(1).write.mode("append").parquet(spool)
-    dedup.minhash_index_stream(spark, spool, st, ix, ckpt)
+    drain()
     got, live = _check_stream_equals_batch()
     assert _pairs_set(dedup.near_dup_pairs_from_index(got, live)) == set()
 
@@ -115,13 +122,13 @@ def test_maintained_index_follows_cdc(spark, tmp_path):
         _ENV_DDL,
     )
     del_env.coalesce(1).write.mode("append").parquet(spool)
-    dedup.minhash_index_stream(spark, spool, st, ix, ckpt)
+    drain()
     got, live = _check_stream_equals_batch()
     assert got.where("conv_id = 'cA'").count() == 0
 
     # replay: drained spool, both sinks epoch-skip, index unchanged
     n = got.count()
-    dedup.minhash_index_stream(spark, spool, st, ix, ckpt)
+    drain()
     assert ix.read_view(spark).count() == n
 
 
@@ -237,8 +244,7 @@ def test_resolved_verify_mode_is_surfaced(spark, caplog):
 def test_index_records_and_enforces_shingle_width(spark):
     """The index rows record shingle_n; serving with a different n
     refuses instead of silently verifying against a different Jaccard
-    definition (review finding), and an index lacking the column
-    (legacy build) is refused outright."""
+    definition (review finding)."""
     import pytest
 
     rows = [("c", "cA", 0, LONG_A, 100), ("c", "cB", 0, LONG_B, 101)]
@@ -247,6 +253,3 @@ def test_index_records_and_enforces_shingle_width(spark):
     assert index.select("shingle_n").distinct().collect()[0][0] == 3
     with pytest.raises(ValueError, match="shingle width"):
         dedup.near_dup_pairs_from_index(index, state, n=4).collect()
-    legacy = index.drop("shingle_n")
-    with pytest.raises(ValueError, match="shingle_n column"):
-        dedup.near_dup_pairs_from_index(legacy, state)

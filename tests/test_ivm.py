@@ -10,10 +10,13 @@ cannot do any of that — this is the changelog-correct twin.
 from __future__ import annotations
 
 import datetime as dt
+from pathlib import Path
 
 import duckdb
+import pytest
 from pyspark.sql import functions as F
 
+from flink_cdc_mysql_sink_to_mysql_spark.operators.cdc import apply_changelog
 from flink_cdc_mysql_sink_to_mysql_spark.sources import mysql_changelog
 from flink_cdc_mysql_sink_to_mysql_spark.sources.transcripts import (
     MYSQL_CHANGELOG_SQL,
@@ -22,10 +25,8 @@ from flink_cdc_mysql_sink_to_mysql_spark.streaming import pipeline as pl
 from flink_cdc_mysql_sink_to_mysql_spark.streaming.ivm import (
     SESSION_VIEW_DDL,
     GroupedReplaceParquetSink,
-    session_state_stream,
-    sessions_state_batch,
-    sliding_state_batch,
-    sliding_state_stream,
+    session_rows,
+    window_rows,
     windowed_state_batch,
     windowed_state_stream,
 )
@@ -158,8 +159,9 @@ def _run_sessions(spark, env, tmp_path, n_chunks=3, gap="30 minutes"):
     view = GroupedReplaceParquetSink(
         str(tmp_path / "view"), n_buckets=8, schema_ddl=SESSION_VIEW_DDL
     )
-    session_state_stream(
-        spark, spool, state, view, str(tmp_path / "ckpt"), gap=gap
+    pl.materialize_stream(
+        spark, spool, state, str(tmp_path / "ckpt"),
+        view=(view, lambda live: session_rows(live, gap)),
     )
     return state, view
 
@@ -223,7 +225,7 @@ def test_session_view_matches_batch_twin_and_oracle(spark, tmp_path):
     _, view = _run_sessions(spark, env, tmp_path)
     assert_same(
         _sess_ms(view.read_view(spark)),
-        _sess_ms(sessions_state_batch(env)).toPandas(),
+        _sess_ms(session_rows(apply_changelog(env), "30 minutes")).toPandas(),
         "session ivm vs batch twin",
     )
     con = duckdb.connect()
@@ -263,6 +265,13 @@ def test_session_view_matches_batch_twin_and_oracle(spark, tmp_path):
     assert_same(_sess_ms(view.read_view(spark)), oracle, "session ivm vs duckdb")
 
 
+def _drain_sliding(spark, spool, state, view, ckpt):
+    pl.materialize_stream(
+        spark, spool, state, ckpt,
+        view=(view, lambda live: window_rows(live, "10 minutes", "5 minutes")),
+    )
+
+
 def test_sliding_view_retracts_all_memberships(spark, tmp_path):
     """A ts move must leave EVERY window the turn covered (W/S = 2
     memberships at 10 min / 5 min) and enter every window it now
@@ -294,10 +303,7 @@ def test_sliding_view_retracts_all_memberships(spark, tmp_path):
     pl.spool_changelog(env, spool, n_chunks=2)
     state = MergeParquetSink(str(tmp_path / "state"), n_buckets=8)
     view = GroupedReplaceParquetSink(str(tmp_path / "view"), n_buckets=8)
-    sliding_state_stream(
-        spark, spool, state, view, str(tmp_path / "ckpt"),
-        window="10 minutes", slide="5 minutes",
-    )
+    _drain_sliding(spark, spool, state, view, str(tmp_path / "ckpt"))
     got = {
         (r["conv_id"], r["win_start_ms"]): r["n_turns"]
         for r in _view_ms(view.read_view(spark)).collect()
@@ -320,14 +326,11 @@ def test_sliding_view_matches_batch_twin_and_oracle(spark, tmp_path):
     pl.spool_changelog(env, spool, n_chunks=3)
     state = MergeParquetSink(str(tmp_path / "state"), n_buckets=8)
     view = GroupedReplaceParquetSink(str(tmp_path / "view"), n_buckets=8)
-    sliding_state_stream(
-        spark, spool, state, view, str(tmp_path / "ckpt"),
-        window="10 minutes", slide="5 minutes",
-    )
+    _drain_sliding(spark, spool, state, view, str(tmp_path / "ckpt"))
     assert_same(
         _view_ms(view.read_view(spark)),
         _view_ms(
-            sliding_state_batch(env, "10 minutes", "5 minutes")
+            window_rows(apply_changelog(env), "10 minutes", "5 minutes")
         ).toPandas(),
         "sliding ivm vs batch twin",
     )
@@ -401,7 +404,6 @@ def test_json_fed_view_with_dlq_and_evolved_column(spark, tmp_path):
     from flink_cdc_mysql_sink_to_mysql_spark.sources.json_envelopes import (
         render_envelope_json,
     )
-    from flink_cdc_mysql_sink_to_mysql_spark.streaming.ivm import _window_rows
 
     extra = {"rating": "int"}
     rating = (F.col("seq") % 7).cast("int")
@@ -435,7 +437,7 @@ def test_json_fed_view_with_dlq_and_evolved_column(spark, tmp_path):
     def drain(ckpt):
         pl.materialize_stream(
             spark, str(spool), state, str(tmp_path / ckpt), dlq_dir=dlq,
-            view=(view, lambda live: _window_rows(live, "10 minutes")),
+            view=(view, lambda live: window_rows(live, "10 minutes")),
         )
 
     def dlq_rows():
@@ -531,8 +533,6 @@ def test_view_crash_after_swap_keeps_the_epoch_record(spark, tmp_path):
     import json
     import os
 
-    import pytest
-
     view = GroupedReplaceParquetSink(str(tmp_path / "view"), n_buckets=4)
     keys = spark.createDataFrame([("a",), ("b",)], "conv_id string")
     rows = spark.createDataFrame(
@@ -559,3 +559,69 @@ def test_view_crash_after_swap_keeps_the_epoch_record(spark, tmp_path):
     assert view.replace_groups(keys, rows, epoch_id=1).get("skipped")
     assert log() == [rec]
     assert view.read_view(spark).count() == 1
+
+
+@pytest.mark.parametrize(
+    "argv",
+    [
+        ["--view", "tumbling", "--check"],
+        ["--view", "sliding", "--check"],
+        ["--view", "session", "--check"],
+        ["--view", "minhash", "--check", "--serve-pairs"],
+    ],
+    ids=["tumbling", "sliding", "session", "minhash"],
+)
+def test_view_job_checks_and_rerun_commits_nothing(
+    spark, tmp_path, monkeypatch, capsys, argv
+):
+    """jobs/ivm_view_job.py end to end on sf0.001: the drained view
+    equals its from-scratch recompute both ways, and a re-run on the
+    same workdir commits no epoch to either table and reports the same
+    summary. The job runs in this process; its ``spark.stop()`` is
+    stubbed so the tests' shared session survives."""
+    import json
+    import os
+    import sys
+
+    from pyspark.sql import SparkSession
+
+    monkeypatch.syspath_prepend(str(Path(__file__).resolve().parents[1] / "jobs"))
+    import ivm_view_job
+
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
+    wd = str(tmp_path / "wd")
+
+    def run():
+        monkeypatch.setattr(
+            sys,
+            "argv",
+            ["ivm_view_job", "--sf-dir", SF_SMOKE, "--workdir", wd,
+             "--chunks", "2", *argv],
+        )
+        ivm_view_job.main()
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    def committed():
+        manifests = []
+        for table in ("state", "view"):
+            with open(os.path.join(wd, table, "_manifest.json")) as f:
+                manifests.append(f.read())
+        return manifests, sorted(os.listdir(os.path.join(wd, "checkpoint", "commits")))
+
+    first = run()
+    assert first["check"] == {"missing": 0, "extra": 0}
+    assert first["view_rows"] > 0
+    before = committed()
+    assert run() == first
+    assert committed() == before
+    if "--serve-pairs" in argv:
+        assert first["verify_mode"] in ("exact", "estimate")
+        assert first["verify_mode_requested"] == "auto"
+        assert "band_candidates" in first
+    else:
+        # the pair serve and its verify mode belong to the band index
+        monkeypatch.setattr(
+            sys, "argv", ["ivm_view_job", "--workdir", wd, *argv, "--serve-pairs"]
+        )
+        with pytest.raises(SystemExit):
+            ivm_view_job.main()

@@ -169,48 +169,6 @@ def test_stream_with_dlq_exactly_once(spark, tmp_path):
     assert read_dlq(spark, str(tmp_path / "dlq")).count() == len(planted) * n_chunks
 
 
-def test_mongo_wire_roundtrip_is_lossless(spark):
-    """Second dialect: render → parse the Mongo oplog feed, then run the
-    full union + derivation — must match the structured path exactly."""
-    from flink_cdc_mysql_sink_to_mysql_spark.sources.json_envelopes import (
-        parse_mongo_lines,
-        render_mongo_json,
-        split_mongo_quarantine,
-    )
-
-    mysql_env = src.mysql_changelog(spark, SF_SMOKE)
-    mongo = src.mongo_changelog(spark, SF_SMOKE)
-    parsed = parse_mongo_lines(render_mongo_json(mongo))
-    assert parsed.where(F.col("_quarantine_reason").isNotNull()).count() == 0
-    good, _ = split_mongo_quarantine(parsed)
-
-    direct = cdc.derive_turn_events(cdc.union_feeds(mysql_env, mongo))
-    via_wire = cdc.derive_turn_events(cdc.union_feeds(mysql_env, good))
-    assert_same(via_wire, direct.toPandas(), "mongo wire roundtrip")
-
-
-def test_mongo_quarantine_reasons(spark):
-    from flink_cdc_mysql_sink_to_mysql_spark.sources.json_envelopes import (
-        parse_mongo_lines,
-    )
-
-    lines = [
-        '{"operationType":"insert","fullDocument":{"conv_id":"m1","turn_idx":0,"role":"user","text":"x","create_time":{"date":1700000000000}}}',
-        '{"operationType":"delete"}',  # representable → NOT quarantined
-        "not json {",
-        '{"operationType":"insert","fullDocument":{"turn_idx":"NOPE"}}',
-        "",
-    ]
-    parsed = parse_mongo_lines(_lines_df(spark, lines))
-    got = [r["_quarantine_reason"] for r in parsed.collect()]
-    by_raw = dict(zip([r["_raw"] for r in parsed.collect()], got))
-    assert by_raw[lines[0]] is None
-    assert by_raw[lines[1]] is None  # insert-only filter owns this, D7
-    assert by_raw["not json {"] == "unparseable"
-    assert by_raw[lines[3]] == "unparseable"
-    assert by_raw[""] == "empty_input"
-
-
 def test_schema_drift_detector(spark):
     """Unknown wire keys (upstream schema evolution from_json silently
     ignores) must be surfaced per scope with counts; a clean feed and

@@ -83,7 +83,9 @@ def test_streaming_index_equals_batch_embed(spark, tmp_path, state):
         str(tmp_path / "index"), schema_ddl=semsearch.INDEX_VIEW_DDL
     )
     ckpt = str(tmp_path / "ckpt")
-    semsearch.embedding_index_stream(spark, spool, st, ix, ckpt)
+    pl.materialize_stream(
+        spark, spool, st, ckpt, view=(ix, semsearch.embedding_rows)
+    )
 
     got = ix.read_view(spark)
     want = semsearch.embedding_rows(st.snapshot(spark))
@@ -96,7 +98,9 @@ def test_streaming_index_equals_batch_embed(spark, tmp_path, state):
     b = semsearch.search_live_state(st.snapshot(spark)).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
     # replay: both sinks epoch-skip, index unchanged
-    semsearch.embedding_index_stream(spark, spool, st, ix, ckpt)
+    pl.materialize_stream(
+        spark, spool, st, ckpt, view=(ix, semsearch.embedding_rows)
+    )
     assert ix.read_view(spark).count() == n
 
 
@@ -143,8 +147,12 @@ def test_streaming_cell_index_serves_pruned_search(spark, tmp_path, state):
     ix = GroupedReplaceParquetSink(
         str(tmp_path / "index"), schema_ddl=semsearch.INDEX_CELLS_VIEW_DDL
     )
-    semsearch.embedding_index_stream(
-        spark, spool, st, ix, str(tmp_path / "ckpt"), codebook=cb
+    pl.materialize_stream(
+        spark, spool, st, str(tmp_path / "ckpt"),
+        view=(
+            ix,
+            lambda live: semsearch.assign_cells(semsearch.embedding_rows(live), cb),
+        ),
     )
     got = ix.read_view(spark)
     want = semsearch.assign_cells(

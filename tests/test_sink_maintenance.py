@@ -450,9 +450,9 @@ def test_epoch_trim_keeps_reserved_epochs(spark, tmp_path):
 
 
 def test_replay_returns_the_logged_record(spark, tmp_path):
-    """A replayed epoch returns its logged record, marked skipped; with
-    no record in the manifest (written before records moved into it)
-    the replay names every stored bucket, a superset of the epoch's."""
+    """A replayed epoch returns its logged record, marked skipped; a
+    committed epoch with no record in the manifest refuses, naming the
+    manifest."""
     root = str(tmp_path / "tbl")
     sink = MergeParquetSink(root, n_buckets=4)
     one = env_batch(spark, [("c", "c0", 0, "x", 1)])
@@ -471,10 +471,8 @@ def test_replay_returns_the_logged_record(spark, tmp_path):
     del manifest["log"]
     with open(mpath, "w") as f:
         json.dump(manifest, f)
-    stored = sorted(int(b) for b in manifest["buckets"])
-    assert len(stored) > len(first["buckets"])
-    replay = sink.merge_changelog(one, 3)
-    assert replay == {"epoch": 3, "buckets": stored, "skipped": True}
+    with pytest.raises(ValueError, match=r"epoch 3 .*_manifest\.json"):
+        sink.merge_changelog(one, 3)
 
 
 def test_commit_refuses_rows_outside_touched_buckets(spark, tmp_path):
@@ -492,7 +490,7 @@ def test_commit_refuses_rows_outside_touched_buckets(spark, tmp_path):
         before = f.read()
 
     rows = sink.read(spark).withColumn("bucket", F.lit(5))
-    manifest = sink._open(spark, 1)
+    manifest = sink._open(1)
     with pytest.raises(RuntimeError, match="outside the touched set"):
         sink._commit(manifest, rows, [1], {"epoch": 1}, time.time(), 1)
     with open(mpath, "rb") as f:

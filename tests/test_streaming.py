@@ -155,6 +155,49 @@ def test_hot_feed_drives_selective_salting(spark, tmp_path, golden):
     assert adaptive == direct
 
 
+def test_spool_completes_a_partial_spool_and_spools_once(
+    spark, tmp_path, monkeypatch
+):
+    """A spool whose write dies after its first chunk is rewritten whole
+    by the next call (a stream never sees a prefix of the changelog);
+    a completed spool is returned as it is, no file rewritten."""
+    env = mysql_changelog(spark, SF)
+    spool = str(tmp_path / "spool")
+    real_replace, promoted = os.replace, []
+
+    def killed_after_first_chunk(src, dst):
+        if promoted:
+            raise OSError("killed mid-spool")
+        promoted.append(dst)
+        real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", killed_after_first_chunk)
+    with pytest.raises(OSError, match="mid-spool"):
+        pl.spool_changelog(env, spool, n_chunks=3)
+    monkeypatch.undo()
+    assert "chunk-001.parquet" in os.listdir(spool)
+    assert "_complete" not in os.listdir(spool)
+
+    paths = pl.spool_changelog(env, spool, n_chunks=3)
+    assert [os.path.basename(p) for p in paths] == [
+        f"chunk-{i:03d}.parquet" for i in (1, 2, 3)
+    ]
+    spooled = spark.read.parquet(spool)
+    assert spooled.exceptAll(env).count() == 0
+    assert env.exceptAll(spooled).count() == 0
+
+    def stamps():
+        return {
+            f: os.stat(os.path.join(spool, f)).st_mtime_ns
+            for f in os.listdir(spool)
+        }
+
+    before = stamps()
+    assert "_complete" in before
+    assert pl.spool_changelog(env, spool, n_chunks=3) == paths
+    assert stamps() == before
+
+
 def test_checkpoint_resume(spark, tmp_path, golden):
     env = mysql_changelog(spark, SF).orderBy("seq")
     spool = str(tmp_path / "spool")
@@ -291,15 +334,9 @@ def test_sink_n_buckets_is_table_owned(spark, tmp_path):
     assert snap.count() == 40  # no duplicate (conv_id, turn_idx) keys
     assert snap.where("text != 'v2'").count() == 0  # every key updated
 
-    # LEGACY manifest (pre-n_buckets key, the round-2 ADVICE hole):
-    # resuming with a base inconsistent with the stored bucket column
-    # must REFUSE rather than silently strand stale keys; resuming with
-    # the matching base verifies against the data and proceeds.
-    import json
-    import os
-
-    import pytest
-
+    # a manifest holding buckets but no n_buckets has no known base:
+    # resuming it with ANY constructor value refuses instead of
+    # silently stranding stale keys, and the manifest is left as it was
     mpath = os.path.join(root, "_manifest.json")
     with open(mpath) as f:
         manifest = json.load(f)
@@ -308,19 +345,13 @@ def test_sink_n_buckets_is_table_owned(spark, tmp_path):
         json.dump(manifest, f)
 
     rows3 = [(f"c{i}", 0, "v3", 3) for i in range(40)]
-    with pytest.raises(ValueError, match="n_buckets"):
-        MergeParquetSink(root, n_buckets=256).merge_changelog(
-            env_batch(rows3), 2
-        )
-    # legit base: one-time data verification, then the merge lands and
-    # the manifest records n_buckets again
-    legit = MergeParquetSink(root, n_buckets=8)
-    legit.merge_changelog(env_batch(rows3), 2)
-    snap3 = legit.snapshot(spark)
-    assert snap3.count() == 40
-    assert snap3.where("text != 'v3'").count() == 0
+    for base in (256, 8):
+        with pytest.raises(ValueError, match="no n_buckets"):
+            MergeParquetSink(root, n_buckets=base).merge_changelog(
+                env_batch(rows3), 2
+            )
     with open(mpath) as f:
-        assert json.load(f)["n_buckets"] == 8
+        assert json.load(f) == manifest
 
 
 def test_torn_commit_recovers(spark, tmp_path, golden):
