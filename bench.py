@@ -2,8 +2,8 @@
 """Benchmark harness (driver contract).
 
 Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE
-JSON line::
+``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]`` (default: the
+CPUs the process may run on) and prints ONE JSON line::
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
@@ -32,7 +32,10 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from flink_cdc_mysql_sink_to_mysql_spark import entry_queries  # noqa: E402
 from flink_cdc_mysql_sink_to_mysql_spark.operators import dedup  # noqa: E402
-from flink_cdc_mysql_sink_to_mysql_spark.session import get_spark  # noqa: E402
+from flink_cdc_mysql_sink_to_mysql_spark.session import (  # noqa: E402
+    default_cpus,
+    get_spark,
+)
 
 # Every mode switch main() accepts; no switch runs the headline sweep.
 MODES = (
@@ -127,6 +130,32 @@ def _force(df) -> int:
     return 0
 
 
+def _reps() -> int:
+    return max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
+
+
+def _min_walls(targets: dict, after=None) -> dict[str, float]:
+    """Per-target MIN wall over ``$SPARK_GRAFT_BENCH_REPS`` sweeps
+    (default 3) — the documented BENCH protocol. A shared VM can freeze
+    for 10-20 s at random (identical code swept 32.8 / 44.3 / 66.8 s
+    headline on an idle host, the stall on a DIFFERENT query each run),
+    so one sweep grades the hypervisor, not the plan; sweeps alternate
+    across the set (1..N, 1..N, ...) so a stall cannot inflate every rep
+    of one target. ``targets``: name → thunk returning the frame to
+    force; ``after()`` runs after each timed target."""
+    times: dict[str, float] = {}
+    for _ in range(_reps()):
+        for name, fn in targets.items():
+            t0 = time.perf_counter()
+            _force(fn())
+            wall = round(time.perf_counter() - t0, 3)
+            if name not in times or wall < times[name]:
+                times[name] = wall
+            if after is not None:
+                after()
+    return times
+
+
 def run(sf_dir: str, cpus: int, names_list: list[str] | None = None) -> dict:
     spark = get_spark(app_name="bench", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
@@ -150,29 +179,13 @@ def run(sf_dir: str, cpus: int, names_list: list[str] | None = None) -> dict:
         "overwrite"
     ).save()
 
-    # Per-query MIN over $SPARK_GRAFT_BENCH_REPS full sweeps (default 3)
-    # — the documented BENCH protocol. This sandbox VM freezes for
-    # 10-20 s at random (measured: identical code swept 32.8 / 44.3 /
-    # 66.8 s headline on an otherwise-idle host, with the stall landing
-    # on a DIFFERENT query each run), so a single sweep grades the
-    # hypervisor, not the plan. Sweeps alternate across the whole set
-    # (1..N, 1..N, ...) rather than repeating each query back-to-back,
-    # so a multi-second stall cannot inflate all reps of one query.
-    reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
-    times: dict[str, float] = {}
-    for _ in range(reps):
-        for name in names:
-            t0 = time.perf_counter()
-            _force(qs[name](spark, sf_dir))
-            wall = round(time.perf_counter() - t0, 3)
-            if name not in times or wall < times[name]:
-                times[name] = wall
-            # Drop the MinHash pipeline's persisted intermediates so the
-            # next rep re-materializes them — otherwise CacheManager
-            # dedups the identical plan and the min-of-N reads a warm
-            # cache hit instead of the production path.
-            dedup.release_persisted()
-    return times
+    # Drop the MinHash pipeline's persisted intermediates after each
+    # timed query: otherwise CacheManager dedups the identical plan and
+    # the min-of-N reads a warm cache hit, not the production path.
+    return _min_walls(
+        {n: (lambda n=n: qs[n](spark, sf_dir)) for n in names},
+        after=dedup.release_persisted,
+    )
 
 
 def run_scaling(sf_dir: str) -> dict:
@@ -440,15 +453,7 @@ def run_serve_maintained(sf_dir: str, cpus: int) -> dict:
             fn = qs.get(qname) or getattr(entry_queries, f"q_{qname}")
             serves[alias] = (lambda f=fn: f(spark, sf_dir))
 
-        times: dict[str, float] = {}
-        for _ in range(max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))):
-            for name, fn in serves.items():
-                t0 = time.perf_counter()
-                _force(fn())
-                wall = round(time.perf_counter() - t0, 3)
-                if name not in times or wall < times[name]:
-                    times[name] = wall
-        out["serve_s"] = times
+        out["serve_s"] = _min_walls(serves)
         codebook.unpersist()
     finally:
         shutil.rmtree(wd, ignore_errors=True)
@@ -528,15 +533,7 @@ def run_spooled(sf_dir: str, cpus: int) -> dict:
         targets["turn_events_pandas"]().write.format("noop").mode(
             "overwrite"
         ).save()  # warm the Python worker pool
-        reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
-        times: dict[str, float] = {}
-        for _ in range(reps):
-            for name, fn in targets.items():
-                t0 = time.perf_counter()
-                _force(fn())
-                wall = round(time.perf_counter() - t0, 3)
-                if name not in times or wall < times[name]:
-                    times[name] = wall
+        times = _min_walls(targets)
         return {
             "metric": "spooled_query_wall_seconds",
             "value": round(sum(times.values()), 3),
@@ -544,7 +541,7 @@ def run_spooled(sf_dir: str, cpus: int) -> dict:
             "spool_seconds": spool_s,
             "queries": times,
             "cpus": cpus,
-            "reps": reps,
+            "reps": _reps(),
         }
     finally:
         shutil.rmtree(root, ignore_errors=True)
@@ -601,15 +598,7 @@ def run_json_ingest(sf_dir: str, cpus: int) -> dict:
             ),
         }
         targets["parse_only"]().limit(1).count()  # warm-up
-        reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
-        times: dict[str, float] = {}
-        for _ in range(reps):
-            for name, fn in targets.items():
-                t0 = time.perf_counter()
-                _force(fn())
-                wall = round(time.perf_counter() - t0, 3)
-                if name not in times or wall < times[name]:
-                    times[name] = wall
+        times = _min_walls(targets)
         return {
             "metric": "json_ingest_lines_per_sec",
             "value": round(n_lines / times["parse_only"]),
@@ -618,7 +607,7 @@ def run_json_ingest(sf_dir: str, cpus: int) -> dict:
             "spool_seconds": spool_s,
             "queries": times,
             "cpus": cpus,
-            "reps": reps,
+            "reps": _reps(),
         }
     finally:
         shutil.rmtree(root, ignore_errors=True)
@@ -699,7 +688,7 @@ def _check_argv(argv: list[str]) -> None:
 def main() -> None:
     _check_argv(sys.argv[1:])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     m = re.search(r"sf([0-9.]+)/*$", sf_dir)
     sf = float(m.group(1)) if m else -1.0
 
@@ -763,7 +752,7 @@ def main() -> None:
         "queries": times,
         "sf": sf,
         "cpus": cpus,
-        "reps": int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")),
+        "reps": _reps(),
     }
     if label == "headline" and os.environ.get("SPARK_GRAFT_BENCH_SCALING"):
         out["scaling"] = run_scaling(sf_dir)

@@ -2,9 +2,13 @@
 
 North rule: join user-turns to assistant/tool-turns on conv_id with an
 event-time bound. The reference only has a union (U1); this is the new
-stateful capability. Batch form below (oracle-checkable); streaming
-form in streaming/pipeline.py uses the same plan with watermarks on
-both sides so state is evictable.
+stateful capability, defined once here in two steps: :func:`turn_roles`
+(role split) and :func:`pair_responses` (time-bounded pairing);
+:func:`user_turn_responses` composes them (batch, oracle-checkable).
+streaming/pipeline.py:stream_stream_join watermarks each side between
+the two steps: a join's watermark is the minimum over its inputs, while
+one watermark set before the split would let a leading role's turns
+close the state a lagging role's replies still need.
 
 Scale: an equi-join on conv_id with a range predicate on ts — Spark
 plans a sort-merge join on conv_id partitions; the time bound prunes
@@ -18,13 +22,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def user_turn_responses(
-    turns: DataFrame,
-    max_delay: str = "INTERVAL 30 MINUTES",
-    respond_roles: tuple[str, ...] = ("assistant", "tool"),
-) -> DataFrame:
-    """Pair each user turn with every assistant/tool turn in the same
-    conversation within (u.ts, u.ts + max_delay]."""
+def turn_roles(
+    turns: DataFrame, respond_roles: tuple[str, ...] = ("assistant", "tool")
+) -> tuple[DataFrame, DataFrame]:
+    """(user side, responder side) of the turns: ``u_conv, u_idx,
+    u_ts`` and ``a_conv, a_idx, a_role, a_ts``."""
     u = turns.where(F.col("role") == "user").select(
         F.col("conv_id").alias("u_conv"),
         F.col("turn_idx").alias("u_idx"),
@@ -36,6 +38,14 @@ def user_turn_responses(
         F.col("role").alias("a_role"),
         F.col("ts").alias("a_ts"),
     )
+    return u, a
+
+
+def pair_responses(
+    u: DataFrame, a: DataFrame, max_delay: str = "INTERVAL 30 MINUTES"
+) -> DataFrame:
+    """Pair each user-side row with every responder-side row in the
+    same conversation within (u_ts, u_ts + max_delay]."""
     cond = (
         (u["u_conv"] == a["a_conv"])
         & (a["a_ts"] > u["u_ts"])
@@ -48,6 +58,16 @@ def user_turn_responses(
         "a_role",
         (F.unix_millis("a_ts") - F.unix_millis("u_ts")).alias("latency_ms"),
     )
+
+
+def user_turn_responses(
+    turns: DataFrame,
+    max_delay: str = "INTERVAL 30 MINUTES",
+    respond_roles: tuple[str, ...] = ("assistant", "tool"),
+) -> DataFrame:
+    """Pair each user turn with every assistant/tool turn in the same
+    conversation within (u.ts, u.ts + max_delay]."""
+    return pair_responses(*turn_roles(turns, respond_roles), max_delay)
 
 
 def first_response(turns: DataFrame, max_delay: str = "INTERVAL 30 MINUTES") -> DataFrame:

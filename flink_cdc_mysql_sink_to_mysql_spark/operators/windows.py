@@ -7,6 +7,12 @@ tumbling/sliding/session windows with event-time watermarks. All three
 are native Spark operators (`F.window`, `F.session_window`) — hash
 aggregations with map-side partial agg; no custom state code needed.
 
+Each window count and session aggregation is defined once, here:
+:func:`window_rows` and :func:`session_rows`. The batch queries project
+them to ``_ms`` columns, the append-mode streams (streaming/pipeline.py)
+run them over a watermarked turn stream, and the maintained views
+(streaming/ivm.py) recompute them from state.
+
 Scale notes:
 - tumbling/sliding aggregate on (window, conv_id) — the window column
   widens the key space, so zipf-skew on conv_id is diluted per window;
@@ -18,7 +24,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DecimalType
 
@@ -26,7 +32,8 @@ from pyspark.sql.types import DecimalType
 def tumbling_counts(
     turns: DataFrame, size: str = "10 minutes"
 ) -> DataFrame:
-    """Per-conv tumbling window: turn count + text-length sum."""
+    """Per-conv tumbling window: turn count + text-length sum (its own
+    aggregation, not a projection of :func:`window_rows`: the sum)."""
     return (
         turns.groupBy(F.window("ts", size).alias("win"), "conv_id")
         .agg(
@@ -43,20 +50,60 @@ def tumbling_counts(
     )
 
 
+def window_rows(live: DataFrame, window: str, slide: str | None = None) -> DataFrame:
+    """Per-conv window counts of the live turns: the tumbling view, or
+    with ``slide`` the sliding one. ``F.window(ts, W, S)`` assigns each
+    turn to its W/S covering windows, so a ts move leaves every window
+    the turn covered and enters every window it now covers, with no
+    per-membership retraction bookkeeping: the recompute stays one hash
+    agg per touched conv."""
+    win = F.window("ts", window, slide) if slide else F.window("ts", window)
+    return (
+        live.groupBy("conv_id", win.alias("win"))
+        .agg(F.count(F.lit(1)).alias("n_turns"))
+        .select(
+            "conv_id",
+            F.col("win.start").alias("win_start"),
+            F.col("win.end").alias("win_end"),
+            "n_turns",
+        )
+    )
+
+
+def session_rows(live: DataFrame, gap: str) -> DataFrame:
+    """Turn-gap sessions of the live turns — the view append-mode
+    session windows cannot maintain: a DELETED middle turn can SPLIT a
+    session in two, and an update that moves a turn into a gap can
+    MERGE two sessions; recompute-from-state yields the exact
+    post-change sessions either way (tests/test_ivm.py). Its sink
+    takes ``schema_ddl=ivm.SESSION_VIEW_DDL``."""
+    return (
+        live.groupBy("conv_id", F.session_window("ts", gap).alias("sw"))
+        .agg(
+            F.count(F.lit(1)).alias("n_turns"),
+            F.min("turn_idx").alias("first_turn"),
+            F.max("turn_idx").alias("last_turn"),
+        )
+        .select(
+            "conv_id",
+            F.col("sw.start").alias("sess_start"),
+            F.col("sw.end").alias("sess_end"),
+            "n_turns",
+            "first_turn",
+            "last_turn",
+        )
+    )
+
+
 def sliding_counts(
     turns: DataFrame, size: str = "10 minutes", slide: str = "5 minutes"
 ) -> DataFrame:
     """Per-conv sliding window counts (each row lands in size/slide
     windows — Spark expands via its internal window generator, no
-    explode needed in user code)."""
-    return (
-        turns.groupBy(F.window("ts", size, slide).alias("win"), "conv_id")
-        .agg(F.count(F.lit(1)).alias("n_turns"))
-        .select(
-            F.unix_millis(F.col("win.start")).alias("win_start_ms"),
-            "conv_id",
-            "n_turns",
-        )
+    explode needed in user code): :func:`window_rows` keyed by the
+    window start in epoch ms."""
+    return window_rows(turns, size, slide).select(
+        F.unix_millis("win_start").alias("win_start_ms"), "conv_id", "n_turns"
     )
 
 
@@ -65,22 +112,15 @@ def session_windows(
 ) -> DataFrame:
     """Turn-gap sessionization per conv_id (north-rule requirement):
     a session extends while consecutive turns are ≤ gap apart; the
-    session window spans [min ts, max ts + gap)."""
-    return (
-        turns.groupBy(F.session_window("ts", gap).alias("win"), "conv_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_turns"),
-            F.min("turn_idx").alias("first_turn"),
-            F.max("turn_idx").alias("last_turn"),
-        )
-        .select(
-            F.unix_millis(F.col("win.start")).alias("sess_start_ms"),
-            F.unix_millis(F.col("win.end")).alias("sess_end_ms"),
-            "conv_id",
-            "n_turns",
-            "first_turn",
-            "last_turn",
-        )
+    session window spans [min ts, max ts + gap). :func:`session_rows`
+    with its bounds in epoch ms."""
+    return session_rows(turns, gap).select(
+        F.unix_millis("sess_start").alias("sess_start_ms"),
+        F.unix_millis("sess_end").alias("sess_end_ms"),
+        "conv_id",
+        "n_turns",
+        "first_turn",
+        "last_turn",
     )
 
 
@@ -90,8 +130,10 @@ def late_data_counts(
     delay_ms: int = 1_800_000,
     batch_ms: int = 600_000,
 ) -> DataFrame:
-    """Batch twin of the streaming watermark late-drop semantics
-    (streaming/pipeline.py:windowed_counts_stream) — oracle-checkable.
+    """Batch twin of the streaming watermark late-drop semantics —
+    oracle-checkable. The streaming form is
+    streaming/pipeline.py:windowed_counts_stream, which runs
+    :func:`window_rows` over a watermarked turn stream.
 
     Models Spark's per-microbatch watermark exactly: rows are grouped
     into arrival batches (``batch_id = floor(arrival_ms / batch_ms)``),
@@ -109,8 +151,6 @@ def late_data_counts(
     Input columns: conv_id, ts_ms (event time), arrival_ms (delivery
     order — the streaming analog is file-arrival order in the spool).
     """
-    from pyspark.sql import Window
-
     ev = events.withColumn(
         "batch_id", F.floor(F.col("arrival_ms") / F.lit(batch_ms))
     )

@@ -35,6 +35,12 @@ def _default_driver_memory(cpus: int) -> str:
     return f"{want_gb}g"
 
 
+def default_cpus() -> int:
+    """Local task slots: ``$SPARK_GRAFT_CPUS`` if set, else the CPUs in
+    this process's affinity mask (a taskset pin or cpuset narrows it)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "transcript-cdc-engine",
     cpus: int | None = None,
@@ -51,7 +57,7 @@ def get_spark(
       (hot conversations), see plans/skew.py.
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = default_cpus()
     if shuffle_partitions is None:
         # 2x cores locally; on a real cluster this would be sized to
         # ~128MB per shuffle partition at the target SF instead.

@@ -158,16 +158,6 @@ def split_quarantine(
     return good, bad
 
 
-def quarantine_stats(parsed: DataFrame) -> DataFrame:
-    """Per-reason reject counts (the monitoring view a production feed
-    alerts on — the reference offers no visibility at all here)."""
-    return (
-        parsed.groupBy(F.col("_quarantine_reason").alias("reason"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("reason").isNotNull())
-    )
-
-
 #: keys the fixed parse schema knows, per scope — anything else on the
 #: wire is upstream schema drift that from_json would silently ignore
 KNOWN_KEYS = {

@@ -1,13 +1,16 @@
 """Incremental view maintenance: windowed aggregates under CDC upserts.
 
-``windowed_counts_stream`` (pipeline.py) counts EVENTS — correct for an
+``windowed_counts_stream`` (pipeline.py) runs ``windows.window_rows``
+over a watermarked turn stream and counts EVENTS — correct for an
 append-only feed, but a changelog is not append-only: an ``op='u'``
 that moves a turn's ``ts`` across a window boundary must retract from
 the old window and add to the new one, and an ``op='d'`` must retract
 outright. Structured Streaming's windowed aggregates cannot retract in
-append mode, so this module maintains the windowed view the same way
-the engine maintains the transcript table: as an idempotent MERGE-style
-table updated per micro-batch.
+append mode, so this module maintains the view the same way the engine
+maintains the transcript table: as an idempotent MERGE-style table
+updated per micro-batch, recomputed with the SAME operator
+(``windows.window_rows`` / ``windows.session_rows``) over the touched
+conversations' live turns.
 
 Design (the exactly-once shape that needs NO retraction arithmetic):
 
@@ -26,8 +29,8 @@ Design (the exactly-once shape that needs NO retraction arithmetic):
    table (delete-all-rows-of-key ∪ insert-recomputed), epoch-skipped
    like the state sink.
 
-The recompute is any ``live turns -> view rows`` function: this
-module's ``window_rows`` (tumbling/sliding) and ``session_rows``,
+The recompute is any ``live turns -> view rows`` function:
+``windows.window_rows`` (tumbling/sliding) and ``windows.session_rows``,
 ``dedup.minhash_index_rows`` (near-dup band index) or
 ``semsearch.embedding_rows`` (embedding index). ``jobs/ivm_view_job.py``
 runs the first three as a deployed view.
@@ -59,6 +62,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.windows import window_rows
 from . import pipeline as pl
 from .sink import MergeParquetSink
 
@@ -137,51 +141,6 @@ def windowed_state_batch(envelopes: DataFrame, window: str = "10 minutes") -> Da
     from ..operators.cdc import apply_changelog
 
     return window_rows(apply_changelog(envelopes), window)
-
-
-def window_rows(live: DataFrame, window: str, slide: str | None = None) -> DataFrame:
-    """Per-conv window counts of the live turns: the tumbling view, or
-    with ``slide`` the sliding one. ``F.window(ts, W, S)`` assigns each
-    turn to its W/S covering windows, so a ts move leaves every window
-    the turn covered and enters every window it now covers, with no
-    per-membership retraction bookkeeping: the recompute stays one hash
-    agg per touched conv."""
-    win = F.window("ts", window, slide) if slide else F.window("ts", window)
-    return (
-        live.groupBy("conv_id", win.alias("win"))
-        .agg(F.count(F.lit(1)).alias("n_turns"))
-        .select(
-            "conv_id",
-            F.col("win.start").alias("win_start"),
-            F.col("win.end").alias("win_end"),
-            "n_turns",
-        )
-    )
-
-
-def session_rows(live: DataFrame, gap: str) -> DataFrame:
-    """Turn-gap sessions of the live turns — the view append-mode
-    session windows cannot maintain: a DELETED middle turn can SPLIT a
-    session in two, and an update that moves a turn into a gap can
-    MERGE two sessions; recompute-from-state yields the exact
-    post-change sessions either way (tests/test_ivm.py). Its sink
-    takes ``schema_ddl=SESSION_VIEW_DDL``."""
-    return (
-        live.groupBy("conv_id", F.session_window("ts", gap).alias("sw"))
-        .agg(
-            F.count(F.lit(1)).alias("n_turns"),
-            F.min("turn_idx").alias("first_turn"),
-            F.max("turn_idx").alias("last_turn"),
-        )
-        .select(
-            "conv_id",
-            F.col("sw.start").alias("sess_start"),
-            F.col("sw.end").alias("sess_end"),
-            "n_turns",
-            "first_turn",
-            "last_turn",
-        )
-    )
 
 
 def windowed_state_stream(

@@ -14,8 +14,16 @@ run by :func:`materialize_stream`:
           → MERGE into the state sink (exactly-once upsert, sink.py)
           → [recompute touched convs → replace_groups]  view
 
-The append-mode aggregates below (windowed counts, stream-stream join,
-session windows) are separate queries over the typed spool.
+The append-mode streams are separate queries over the typed spool,
+each one batch operator applied to a watermarked turn stream and
+drained by :func:`append_parquet`:
+
+    readStream(spool) → turn_stream → withWatermark(ts)
+      → windows.window_rows      windowed_counts_stream
+      → windows.session_rows     session_windows_stream
+    turn_stream → joins.turn_roles → withWatermark(u_ts) | (a_ts)
+      → joins.pair_responses     stream_stream_join
+    turn_stream → applyInPandasWithState    streaming/stateful.py
 
 Checkpointing: `checkpointLocation` persists source offsets + commit
 log — the analog of Flink's enableCheckpointing(3000) (`:61`); restart
@@ -33,6 +41,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
+
+from ..operators import joins, windows
 
 def image_ddl(extra_image_fields: dict[str, str] | None = None) -> str:
     """The per-image struct DDL (``struct<...>``), optionally widened
@@ -530,6 +540,29 @@ def replay_dlq(spark: SparkSession, dlq_dir: str, sink, parse_fn=None) -> dict:
     return out
 
 
+def turn_stream(spark: SparkSession, spool_dir: str) -> DataFrame:
+    """The spool's after-images as a stream of turns (conv_id, turn_idx,
+    role, text, tool, ts) with the envelope's ``op`` and ``seq`` — the
+    input of every append-mode stream."""
+    env = envelope_stream(spark, spool_dir)
+    return env.where(F.col("after").isNotNull()).select("after.*", "op", "seq")
+
+
+def append_parquet(stream: DataFrame, out_dir: str, checkpoint_dir: str) -> str:
+    """Drain ``stream`` available-now into append-mode parquet at
+    ``out_dir``; restart-safe via the checkpoint. Returns ``out_dir``."""
+    (
+        stream.writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    return out_dir
+
+
 def windowed_counts_stream(
     spark: SparkSession,
     spool_dir: str,
@@ -542,40 +575,13 @@ def windowed_counts_stream(
     """Event-time tumbling (or, with ``slide``, sliding) counts per
     conv_id with a real watermark — late rows beyond the delay are
     dropped by the state store (the north-rule late-data semantics; the
-    reference has none, SURVEY §2.8).
-
-    Append-mode parquet output: a window only emits once its watermark
-    passes — restart-safe via the checkpoint.
-    """
-    env = envelope_stream(spark, spool_dir)
-    turns = env.where(F.col("after").isNotNull()).select(
-        F.col("after.conv_id").alias("conv_id"),
-        F.col("after.ts").alias("ts"),
+    reference has none, SURVEY §2.8). ``windows.window_rows`` over the
+    watermarked turn stream; a window only emits once its watermark
+    passes."""
+    turns = turn_stream(spark, spool_dir).withWatermark("ts", watermark_delay)
+    return append_parquet(
+        windows.window_rows(turns, window, slide), out_dir, checkpoint_dir
     )
-    win = (
-        F.window("ts", window, slide) if slide else F.window("ts", window)
-    )
-    agg = (
-        turns.withWatermark("ts", watermark_delay)
-        .groupBy(win.alias("win"), "conv_id")
-        .agg(F.count(F.lit(1)).alias("n_turns"))
-        .select(
-            F.col("win.start").alias("win_start"),
-            F.col("win.end").alias("win_end"),
-            "conv_id",
-            "n_turns",
-        )
-    )
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return out_dir
 
 
 def stream_stream_join(
@@ -588,63 +594,18 @@ def stream_stream_join(
 ):
     """Stateful stream-stream join: user turns ⋈ assistant/tool turns on
     conv_id with an event-time bound (the north-rule capability the
-    reference lacks — it only unions, U1).
-
-    Both sides carry watermarks, and the join's time-range predicate
-    (a.ts in (u.ts, u.ts + max_delay]) lets the state store evict a
-    user turn once the response-side watermark passes u.ts + max_delay —
-    bounded state per conv_id regardless of stream length. Same plan as
-    the batch form (operators/joins.py) so results are oracle-checkable.
-    """
-    env = envelope_stream(spark, spool_dir)
-    turns = env.where(F.col("after").isNotNull()).select(
-        F.col("after.conv_id").alias("conv_id"),
-        F.col("after.turn_idx").alias("turn_idx"),
-        F.col("after.role").alias("role"),
-        F.col("after.ts").alias("ts"),
+    reference lacks — it only unions, U1): ``joins.pair_responses`` over
+    the role sides, each with its own watermark (see operators/joins.py).
+    The time-range predicate lets the state store evict a user turn once
+    the response-side watermark passes u.ts + max_delay — bounded state
+    per conv_id regardless of stream length."""
+    u, a = joins.turn_roles(turn_stream(spark, spool_dir))
+    pairs = joins.pair_responses(
+        u.withWatermark("u_ts", watermark_delay),
+        a.withWatermark("a_ts", watermark_delay),
+        max_delay,
     )
-    u = (
-        turns.where(F.col("role") == "user")
-        .select(
-            F.col("conv_id").alias("u_conv"),
-            F.col("turn_idx").alias("u_idx"),
-            F.col("ts").alias("u_ts"),
-        )
-        .withWatermark("u_ts", watermark_delay)
-    )
-    a = (
-        turns.where(F.col("role").isin("assistant", "tool"))
-        .select(
-            F.col("conv_id").alias("a_conv"),
-            F.col("turn_idx").alias("a_idx"),
-            F.col("role").alias("a_role"),
-            F.col("ts").alias("a_ts"),
-        )
-        .withWatermark("a_ts", watermark_delay)
-    )
-    joined = u.join(
-        a,
-        (u["u_conv"] == a["a_conv"])
-        & (a["a_ts"] > u["u_ts"])
-        & (a["a_ts"] <= u["u_ts"] + F.expr(max_delay)),
-        "inner",
-    ).select(
-        F.col("u_conv").alias("conv_id"),
-        "u_idx",
-        "a_idx",
-        "a_role",
-        (F.unix_millis("a_ts") - F.unix_millis("u_ts")).alias("latency_ms"),
-    )
-    q = (
-        joined.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return out_dir
+    return append_parquet(pairs, out_dir, checkpoint_dir)
 
 
 def session_windows_stream(
@@ -655,49 +616,21 @@ def session_windows_stream(
     gap: str = "30 minutes",
     watermark_delay: str = "30 minutes",
 ):
-    """Turn-gap sessionization as a stream: `session_window(ts, gap)`
-    per conv_id with a watermark — a session closes (and emits, append
-    mode) once the watermark passes its end; late turns within the delay
-    re-open/merge sessions, later ones are dropped (north-rule
+    """Turn-gap sessionization as a stream: ``windows.session_rows``
+    over the watermarked turn stream — a session closes (and emits,
+    append mode) once the watermark passes its end; late turns within
+    the delay re-open/merge sessions, later ones are dropped (north-rule
     semantics; SURVEY §7 'session windows + upsert interplay')."""
-    env = envelope_stream(spark, spool_dir)
-    turns = env.where(F.col("after").isNotNull()).select(
-        F.col("after.conv_id").alias("conv_id"),
-        F.col("after.turn_idx").alias("turn_idx"),
-        F.col("after.ts").alias("ts"),
+    turns = turn_stream(spark, spool_dir).withWatermark("ts", watermark_delay)
+    return append_parquet(
+        windows.session_rows(turns, gap), out_dir, checkpoint_dir
     )
-    agg = (
-        turns.withWatermark("ts", watermark_delay)
-        .groupBy(F.session_window("ts", gap).alias("sw"), "conv_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_turns"),
-            F.min("turn_idx").alias("first_turn"),
-            F.max("turn_idx").alias("last_turn"),
-        )
-        .select(
-            F.col("sw.start").alias("sess_start"),
-            F.col("sw.end").alias("sess_end"),
-            "conv_id",
-            "n_turns",
-            "first_turn",
-            "last_turn",
-        )
-    )
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return out_dir
 
 
 def spool_dataframe(df: DataFrame, spool_dir: str, name: str) -> str:
     """Append one bounded DataFrame to the spool as a single flat parquet
-    file (atomic rename — the file source sees whole files only)."""
+    file (atomic rename — the file source sees whole files only, and
+    does not recurse, so the one part file is promoted to the spool)."""
     import glob
     import shutil
     import uuid
@@ -733,23 +666,17 @@ def spool_changelog(
     if os.path.exists(marker):
         return sorted(glob.glob(os.path.join(spool_dir, "chunk-*.parquet")))
     shutil.rmtree(spool_dir, ignore_errors=True)
-    os.makedirs(spool_dir)
     df = envelopes.withColumn(
         "_chunk", F.ntile(n_chunks).over(Window.orderBy(order_by))
     )
-    paths = []
-    for i in range(1, n_chunks + 1):
-        tmp = os.path.join(spool_dir, f"_tmp-{i:03d}")
-        df.where(F.col("_chunk") == i).drop("_chunk").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        # the file source doesn't recurse — promote the single part file
-        # to a flat chunk file (spool append = atomic rename)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        p = os.path.join(spool_dir, f"chunk-{i:03d}.parquet")
-        os.replace(part, p)
-        shutil.rmtree(tmp)
-        paths.append(p)
+    paths = [
+        spool_dataframe(
+            df.where(F.col("_chunk") == i).drop("_chunk"),
+            spool_dir,
+            f"chunk-{i:03d}.parquet",
+        )
+        for i in range(1, n_chunks + 1)
+    ]
     with open(marker, "w"):
         pass
     return paths

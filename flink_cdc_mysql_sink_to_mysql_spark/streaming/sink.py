@@ -713,30 +713,11 @@ class MergeParquetSink:
         result["expired_below_seq"] = int(older_than_seq)
         return result
 
-    def maybe_compact(self, spark: SparkSession, factor: float = 3.0) -> dict:
-        """Fragmentation-gated compaction: fold the table only when the
-        manifest references more than ``factor × buckets`` files. Each
-        micro-batch rewrites its touched buckets into a new version
-        dir, so the referenced-file count grows ≈ microbatches ×
-        touched-buckets between compactions; compacting on a threshold
-        amortizes the full-table rewrite over many commits instead of
-        paying it unconditionally (the Iceberg rewrite_data_files /
-        binpack maintenance analog). Returns the decision record; the
-        ``compact`` key is present only when compaction ran."""
-        stats = self.file_stats()
-        threshold = factor * max(stats["buckets"], 1)
-        out = {
-            "referenced_files": stats["referenced_files"],
-            "threshold": threshold,
-            "compacted": stats["referenced_files"] > threshold,
-        }
-        if out["compacted"]:
-            out["compact"] = self.compact(spark)
-        return out
-
     def file_stats(self) -> dict:
-        """Referenced file count/bytes per the current manifest — the
-        compaction trigger signal (files ≫ buckets ⇒ fragmented)."""
+        """Referenced file count/bytes per the current manifest. Each
+        commit writes one file per touched bucket, so files == buckets
+        after every commit and no fragmentation gate can fire; kept as
+        the sink's on-disk size read for per-epoch state-size metrics."""
         manifest = self._load_manifest()
         n_files = total = 0
         for rel in manifest["buckets"].values():

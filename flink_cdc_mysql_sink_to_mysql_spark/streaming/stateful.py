@@ -24,7 +24,7 @@ from __future__ import annotations
 from typing import Any, Iterator, Tuple
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
@@ -34,6 +34,9 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..operators import windows
+from .pipeline import append_parquet, turn_stream
 
 PROGRESS_SCHEMA = StructType(
     [
@@ -93,13 +96,10 @@ def conversation_progress_stream(
     checkpoint_dir: str,
 ):
     """Run the stateful progress operator over the envelope spool."""
-    from .pipeline import envelope_stream
-
-    env = envelope_stream(spark, spool_dir)
-    turns = env.where(F.col("after").isNotNull()).select(
-        F.col("after.conv_id").alias("conv_id"),
-        F.col("after.turn_idx").cast("int").alias("turn_idx"),
-        F.unix_millis(F.col("after.ts")).alias("ts_ms"),
+    turns = turn_stream(spark, spool_dir).select(
+        "conv_id",
+        F.col("turn_idx").cast("int").alias("turn_idx"),
+        F.unix_millis("ts").alias("ts_ms"),
     )
     prog = turns.groupBy("conv_id").applyInPandasWithState(
         _progress_fn,
@@ -108,22 +108,11 @@ def conversation_progress_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        prog.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return out_dir
+    return append_parquet(prog, out_dir, checkpoint_dir)
 
 
 def conversation_progress_batch(turns: DataFrame) -> DataFrame:
     """Batch oracle: identical semantics via window functions."""
-    from pyspark.sql import Window
-
     w = Window.partitionBy("conv_id").orderBy("ts_ms", "turn_idx")
     gap = F.when(
         F.lag("ts_ms").over(w).isNotNull()
@@ -219,17 +208,16 @@ def tool_loop_stream(
     turns (one edited turn counted twice). Filtering ops keeps the state
     O(1) per conv — deduping on (conv_id, turn_idx) instead would need
     a per-key seen-set."""
-    from .pipeline import envelope_stream
-
-    env = envelope_stream(spark, spool_dir)
-    turns = env.where(
-        F.col("after").isNotNull() & F.col("op").isin("c", "r")
-    ).select(
-        F.col("after.conv_id").alias("conv_id"),
-        F.col("after.turn_idx").cast("int").alias("turn_idx"),
-        F.col("after.role").alias("role"),
-        F.col("after.tool").alias("tool"),
-        F.col("seq"),
+    turns = (
+        turn_stream(spark, spool_dir)
+        .where(F.col("op").isin("c", "r"))
+        .select(
+            "conv_id",
+            F.col("turn_idx").cast("int").alias("turn_idx"),
+            "role",
+            "tool",
+            "seq",
+        )
     )
     alerts = turns.groupBy("conv_id").applyInPandasWithState(
         _loop_fn,
@@ -238,16 +226,7 @@ def tool_loop_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        alerts.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return out_dir
+    return append_parquet(alerts, out_dir, checkpoint_dir)
 
 
 def tool_loop_alerts_batch(turns: DataFrame) -> DataFrame:
@@ -256,8 +235,6 @@ def tool_loop_alerts_batch(turns: DataFrame) -> DataFrame:
     in the same seq order the stream delivers. Mirrors the stream's
     insert-only gate: if the input carries an ``op`` column, op='u'
     re-deliveries are excluded before run detection."""
-    from pyspark.sql import Window
-
     if "op" in turns.columns:
         turns = turns.where(F.col("op").isin("c", "r")).drop("op")
     w = Window.partitionBy("conv_id").orderBy("seq")
@@ -375,19 +352,12 @@ def abandoned_conversations_stream(
     Watermark delay 0 (the spool replays in order): the final no-data
     micro-batch advances the watermark to the corpus max and flushes
     every burst whose session end the watermark passed. Batch twin:
-    :func:`abandoned_conversations_batch` (session_window + the same
-    final-watermark cutoff) — set-equality pinned in tests.
+    :func:`abandoned_conversations_batch` (``windows.session_rows`` +
+    the same final-watermark cutoff) — set-equality pinned in tests.
     """
-    from .pipeline import envelope_stream
-
-    env = envelope_stream(spark, spool_dir)
     turns = (
-        env.where(F.col("after").isNotNull())
-        .select(
-            F.col("after.conv_id").alias("conv_id"),
-            F.col("after.ts").alias("ts"),
-            F.unix_millis(F.col("after.ts")).alias("ts_ms"),
-        )
+        turn_stream(spark, spool_dir)
+        .select("conv_id", "ts", F.unix_millis("ts").alias("ts_ms"))
         .withWatermark("ts", "0 seconds")
     )
     out = turns.groupBy("conv_id").applyInPandasWithState(
@@ -397,37 +367,23 @@ def abandoned_conversations_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return out_dir
+    return append_parquet(out, out_dir, checkpoint_dir)
 
 
 def abandoned_conversations_batch(envelopes: DataFrame) -> DataFrame:
-    """Batch twin: gap-sessionize the turns; every session whose end
-    (last_ts + gap) the final watermark (corpus max ts, delay 0)
-    passed is one abandoned burst."""
-    turns = envelopes.where(F.col("after").isNotNull()).select(
-        F.col("after.conv_id").alias("conv_id"),
-        F.col("after.ts").alias("ts"),
-        F.unix_millis(F.col("after.ts")).alias("ts_ms"),
-    )
-    gap_s = ABANDON_GAP_MS // 1000
-    sessions = turns.groupBy(
-        "conv_id", F.session_window("ts", f"{gap_s} seconds").alias("sw")
-    ).agg(
-        F.max("ts_ms").alias("last_ts_ms"),
-        F.count(F.lit(1)).cast("int").alias("n_turns"),
-    )
-    final_wm = turns.agg(F.max("ts_ms").alias("_wm"))
+    """Batch twin: ``windows.session_rows`` over the turns; every
+    session whose end (last_ts + gap) the final watermark (corpus max
+    ts, delay 0) passed is one abandoned burst."""
+    turns = envelopes.where(F.col("after").isNotNull()).select("after.*")
+    sessions = windows.session_rows(turns, f"{ABANDON_GAP_MS // 1000} seconds")
+    end_ms = F.unix_millis("sess_end")
+    final_wm = turns.agg(F.max(F.unix_millis("ts")).alias("_wm"))
     return (
         sessions.join(F.broadcast(final_wm))
-        .where(F.col("last_ts_ms") + F.lit(ABANDON_GAP_MS) <= F.col("_wm"))
-        .select("conv_id", "last_ts_ms", "n_turns")
+        .where(end_ms <= F.col("_wm"))
+        .select(
+            "conv_id",
+            (end_ms - ABANDON_GAP_MS).alias("last_ts_ms"),
+            F.col("n_turns").cast("int").alias("n_turns"),
+        )
     )

@@ -134,18 +134,6 @@ def main() -> None:
         "per-epoch overwrite",
     )
     ap.add_argument(
-        "--auto-compact-factor",
-        type=float,
-        default=None,
-        help="compact only when fragmented: after the stream drains, "
-        "fold the sink iff referenced files exceed FACTOR x buckets "
-        "(each microbatch rewrites its touched buckets into a new "
-        "version dir, so files grow ~ microbatches x touched buckets "
-        "between compactions; 3-4 is a sensible cron default — "
-        "unconditional --compact pays the full-table rewrite even "
-        "when the sink is already tight)",
-    )
-    ap.add_argument(
         "--extra-field",
         action="append",
         default=None,
@@ -268,10 +256,6 @@ def main() -> None:
         )
     if args.compact:
         maintenance["compact"] = sink.compact(spark)
-    elif args.auto_compact_factor is not None:
-        maintenance["auto_compact"] = sink.maybe_compact(
-            spark, args.auto_compact_factor
-        )
     if args.vacuum:
         v = sink.vacuum()
         maintenance["vacuum"] = {

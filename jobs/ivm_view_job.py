@@ -47,7 +47,7 @@ sys.path.insert(
 
 from pyspark.sql import SparkSession  # noqa: E402
 
-from flink_cdc_mysql_sink_to_mysql_spark.operators import cdc, dedup  # noqa: E402
+from flink_cdc_mysql_sink_to_mysql_spark.operators import cdc, dedup, windows  # noqa: E402
 from flink_cdc_mysql_sink_to_mysql_spark.plans import heap  # noqa: E402
 from flink_cdc_mysql_sink_to_mysql_spark.sources.transcripts import (  # noqa: E402
     mysql_changelog,
@@ -61,15 +61,15 @@ from flink_cdc_mysql_sink_to_mysql_spark.streaming.sink import (  # noqa: E402
 VIEWS = {
     # view kind -> (recompute(live turns) -> view rows, view-sink ddl)
     "tumbling": (
-        lambda live: ivm.window_rows(live, "10 minutes"),
+        lambda live: windows.window_rows(live, "10 minutes"),
         ivm.WINDOW_VIEW_DDL,
     ),
     "sliding": (
-        lambda live: ivm.window_rows(live, "10 minutes", "5 minutes"),
+        lambda live: windows.window_rows(live, "10 minutes", "5 minutes"),
         ivm.WINDOW_VIEW_DDL,
     ),
     "session": (
-        lambda live: ivm.session_rows(live, "30 minutes"),
+        lambda live: windows.session_rows(live, "30 minutes"),
         ivm.SESSION_VIEW_DDL,
     ),
     "minhash": (dedup.minhash_index_rows, dedup.MINHASH_INDEX_VIEW_DDL),

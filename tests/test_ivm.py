@@ -17,6 +17,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from flink_cdc_mysql_sink_to_mysql_spark.operators.cdc import apply_changelog
+from flink_cdc_mysql_sink_to_mysql_spark.operators.windows import (
+    session_rows,
+    window_rows,
+)
 from flink_cdc_mysql_sink_to_mysql_spark.sources import mysql_changelog
 from flink_cdc_mysql_sink_to_mysql_spark.sources.transcripts import (
     MYSQL_CHANGELOG_SQL,
@@ -25,8 +29,6 @@ from flink_cdc_mysql_sink_to_mysql_spark.streaming import pipeline as pl
 from flink_cdc_mysql_sink_to_mysql_spark.streaming.ivm import (
     SESSION_VIEW_DDL,
     GroupedReplaceParquetSink,
-    session_rows,
-    window_rows,
     windowed_state_batch,
     windowed_state_stream,
 )

@@ -194,34 +194,6 @@ def test_compact_folds_files_and_preserves_table(spark, tmp_path):
     assert ("c0_0", 0, "new") in snap_rows(spark, sink)
 
 
-def test_maybe_compact_gates_on_fragmentation(spark, tmp_path):
-    """Threshold policy (the job's --auto-compact-factor): compaction
-    runs only when referenced files exceed factor x buckets, so a cron
-    maintenance pass is a cheap stat call on a tight table."""
-    sink = MergeParquetSink(str(tmp_path / "tbl"), n_buckets=2)
-    for e in range(4):
-        sink.merge_changelog(
-            env_batch(
-                spark, [("c", f"c{e}_{i}", 0, f"t{e}", e) for i in range(6)]
-            ),
-            epoch_id=e,
-        )
-    before = snap_rows(spark, sink)
-    files0 = sink.file_stats()["referenced_files"]
-
-    # tight table under a generous factor: decision recorded, no rewrite
-    out = sink.maybe_compact(spark, factor=float(files0))
-    assert out["compacted"] is False and "compact" not in out
-    assert sink.file_stats()["referenced_files"] == files0
-
-    # fragmented relative to a sub-1 factor: full compact runs
-    out = sink.maybe_compact(spark, factor=0.4)
-    assert out["compacted"] is True and out["compact"]["compacted"]
-    after = sink.file_stats()
-    assert after["referenced_files"] == after["buckets"]
-    assert snap_rows(spark, sink) == before
-
-
 def test_compact_tombstone_pruning_respects_horizon(spark, tmp_path):
     root = str(tmp_path / "tbl")
     sink = MergeParquetSink(root, n_buckets=2)

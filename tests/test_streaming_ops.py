@@ -53,6 +53,42 @@ def test_stream_stream_join_matches_batch(spark, tmp_path, spool):
     assert got == want and len(got) > 0
 
 
+def test_stream_join_keeps_lagging_role_pairs(spark, tmp_path):
+    """Each join side keeps its own watermark, and the operator's is
+    their minimum: user turns running 10 h ahead of the assistant turns
+    must not evict user turn 0 or drop its late-arriving replies. One
+    watermark on the turn stream before the role split would have
+    advanced past them (the reply in the third chunk is lost)."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
+    src = ("transcripts", "turns")
+
+    def env(conv, idx, role, minutes):
+        ts = t0 + dt.timedelta(minutes=minutes)
+        return ("c", None, (conv, idx, role, "x", None, ts), src, idx)
+
+    spool = str(tmp_path / "spool")
+    chunks = [
+        # user turns 10 h ahead of the assistant turns
+        [env("a", 0, "user", 0), env("a", 1, "assistant", 1),
+         env("b", 0, "user", 600)],
+        [env("a", 2, "assistant", 2)],  # lagging replies to user turn 0
+        [env("a", 3, "assistant", 3)],
+    ]
+    for i, rows in enumerate(chunks):
+        pl.spool_dataframe(
+            spark.createDataFrame(rows, pl.ENVELOPE_DDL), spool, f"chunk-{i}.parquet"
+        )
+    out = pl.stream_stream_join(
+        spark, spool, str(tmp_path / "out"), str(tmp_path / "ck")
+    )
+    got = sorted(
+        (r.conv_id, r.u_idx, r.a_idx) for r in spark.read.parquet(out).collect()
+    )
+    assert got == [("a", 0, 1), ("a", 0, 2), ("a", 0, 3)]
+
+
 def test_session_windows_stream_matches_batch(spark, tmp_path, spool):
     out = pl.session_windows_stream(
         spark, spool, str(tmp_path / "out"), str(tmp_path / "ck")
